@@ -2367,20 +2367,21 @@ object SparkEntry {
     }),
 
     // ---- §3.2 END-TO-END NRT lifecycle (the reference's flagship
-    //      scheduled path, core.py:806-880 + OverwriteFS.py:2137-2369):
-    //      control table → due plan → 7-day window read through the
-    //      ERDDAP DSv2 source → fingerprint unchanged-skip → blue-green
-    //      slot overwrite → touch rows. Fixture = events sliced into one
-    //      tabledap dataset per event_type; the oracle replays the
-    //      due/changed rules and window counts from events.parquet ----
+    //      scheduled path, core.py:806-880 + OverwriteFS.py:2137-2369)
+    //      over the in-JVM Portal model: due plan → control state seeded
+    //      as item properties → 7-day window read through the ERDDAP
+    //      DSv2 source → fingerprint unchanged-skip → blue-green slot
+    //      overwrite → item touch, slot_after read back from the item.
+    //      Fixture = events sliced into one tabledap dataset per
+    //      event_type; the oracle replays the due/changed rules and
+    //      window counts from events.parquet ----
     "pipeline_nrt" -> ((s, dir) => graft.streaming.NrtPipeline.run(s, dir)),
 
-    // ---- streaming: the SAME NRT lifecycle driven through the live
-    //      ArcGIS-sharing-REST transport over real sockets (localhost
-    //      server): control state seeded as item properties, refresh
-    //      via RestPortalTransport (add/search/props/update/touch all
-    //      HTTP), slot_after read back from the portal's post-cycle
-    //      item state. Same oracle as pipeline_nrt. ----
+    // ---- streaming: the SAME NRT lifecycle body driven through the
+    //      live ArcGIS-sharing-REST transport over real sockets
+    //      (localhost server): refresh via RestPortalTransport
+    //      (add/search/props/update/touch all HTTP). Same oracle as
+    //      pipeline_nrt. ----
     "pipeline_nrt_rest" ->
       ((s, dir) => graft.streaming.NrtPipeline.runViaRest(s, dir)),
 

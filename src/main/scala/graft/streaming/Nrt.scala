@@ -4,17 +4,19 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** NRT (near-real-time) incremental refresh (SURVEY.md §2.10, T1-T6)
-  * re-expressed as Spark batch jobs over a small parquet CONTROL TABLE —
-  * the Spark-native replacement for the reference's
-  * ProcessPoolExecutor(4) + per-dataset retry loop (`core.py:806-880`).
+  * re-expressed as Spark batch jobs driven through the ONE portal seam
+  * ([[graft.sinks.PortalTransport]]) — the Spark-native replacement for
+  * the reference's ProcessPoolExecutor(4) + per-dataset retry loop
+  * (`core.py:806-880`).
   *
-  * Control table schema (one row per published dataset, the analog of
-  * the reference's tag-recovered AGOL items, `update_manager.py:30-84`):
-  *   dataset_id, base_url, active_slot ("a"|"b"), fingerprint,
-  *   last_modified, last_refresh
+  * Cross-run state lives on the portal, as in the reference: each
+  * published dataset is an item found by title (the reference's
+  * tag-recovered AGOL items, `update_manager.py:30-84`) whose
+  * properties carry `activeSlot` ("a"|"b") and `fingerprint`, and whose
+  * touch time is the last refresh.
   *
   * Change detection (T2) tiers map as:
-  *   1. HTTP Last-Modified vs stored          → `last_modified` compare
+  *   1. HTTP Last-Modified vs stored          → [[duePlan]]
   *   2. CRC32 of downloaded bytes             → [[tableFingerprint]]
   *   3. converter publicationDate             → caller-side watermark
   * An unchanged dataset refresh is a NO-OP (the reference's
@@ -22,14 +24,11 @@ import org.apache.spark.sql.functions._
   *
   * Publishing is a blue-green A/B swap (K10, `OverwriteFS.py:1131-1744`):
   * each refresh writes the INACTIVE slot directory in full (the
-  * reference's overwrite semantics — no merge, T3), then flips
-  * `active_slot` in the control table; readers resolve through
-  * [[activePath]] so the flip is atomic at the pointer level.
+  * reference's overwrite semantics — no merge, T3), then flips the
+  * item's `activeSlot`; readers resolve through [[activePath]] so the
+  * flip is atomic at the pointer level.
   */
 object Nrt {
-
-  val controlSchema = "dataset_id string, base_url string, active_slot string, " +
-    "fingerprint bigint, last_modified timestamp, last_refresh timestamp"
 
   /** A5 — order-independent content fingerprint of a DataFrame. One
     * aggregate job, no collect; at 100 TB this is a single scan with a
@@ -64,7 +63,7 @@ object Nrt {
     df.filter(col(tsCol) >= lit(new java.sql.Timestamp(
       now.getTime - windowDays * 86400000L)) && col(tsCol) <= lit(now))
 
-  /** J3-style plan: which control rows are due for refresh — either
+  /** J3-style plan: which datasets are due for refresh — either
     * source `last_modified` advanced past the stored one, or it's been
     * ≥ `maxAgeHours` since the last refresh. Pure DataFrame filter. */
   def duePlan(control: DataFrame, sourceLastModified: DataFrame,
@@ -80,33 +79,16 @@ object Nrt {
   case class RefreshOutcome(datasetId: String, changed: Boolean,
     newFingerprint: Long, rows: Long, failed: Boolean = false)
 
-  /** One dataset's refresh: read the window, fingerprint it, skip when
-    * unchanged (T2/T3), else full-replace the inactive slot (K8+K10). */
-  def refreshDataset(spark: SparkSession, datasetId: String, fresh: DataFrame,
-      storedFingerprint: Option[Long], sinkRoot: String,
-      activeSlot: String): RefreshOutcome = {
-    val fp = tableFingerprint(fresh)
-    if (storedFingerprint.contains(fp))
-      RefreshOutcome(datasetId, changed = false, fp, -1L)
-    else {
-      val inactive = if (activeSlot == "a") "b" else "a"
-      val path = s"$sinkRoot/$datasetId/$inactive"
-      fresh.write.mode(SaveMode.Overwrite).parquet(path)
-      val n = spark.read.parquet(path).count()
-      RefreshOutcome(datasetId, changed = true, fp, n)
-    }
-  }
-
   /** Resolve the active data path for a dataset (reader side of K10). */
   def activePath(sinkRoot: String, datasetId: String, activeSlot: String): String =
     s"$sinkRoot/$datasetId/$activeSlot"
 
-  /** [[refreshDataset]] driven through the ONE portal seam
-    * ([[graft.sinks.PortalTransport]]): the control state (fingerprint,
-    * active slot) lives in the portal item's properties instead of a
-    * control-table row, so the SAME flow runs against the local model
-    * or a live portal — the reference's tag-recovered item state
-    * (`update_manager.py:30-84`) with Spark doing the data plane.
+  /** One dataset's refresh: fingerprint the fresh window, skip when
+    * unchanged (T2/T3), else full-replace the inactive slot (K8+K10)
+    * and flip. The control state (fingerprint, active slot) lives in
+    * the portal item's properties, so the SAME flow runs against the
+    * local model or a live portal — the reference's tag-recovered item
+    * state (`update_manager.py:30-84`) with Spark doing the data plane.
     * Unchanged data still touches the item (the reference touches
     * dependents even on no-op, `OverwriteFS.py:2670-2686`). */
   def refreshViaPortal(spark: SparkSession, datasetId: String, fresh: DataFrame,
@@ -134,25 +116,24 @@ object Nrt {
   }
 
   /** [[refreshViaPortal]] over a set of datasets with the reference's
-    * per-dataset fault isolation (`core.py:869-880`) — the portal-seam
-    * twin of [[refreshCycle]]: one dataset dying mid-read, mid-write or
-    * mid-commit reports a FAILED outcome while the rest proceed. The
+    * per-dataset fault isolation (`core.py:869-880`): one dataset dying
+    * mid-read, mid-write or mid-commit reports a FAILED outcome while the rest proceed. The
     * item-property update is the LAST step of a refresh, so a victim's
     * control state (activeSlot, fingerprint) is untouched by
     * construction: it stays due, its active slot keeps serving the old
     * data in full, and the next healthy cycle's full slot overwrite
-    * repairs any partial inactive data — the same invariants
-    * NrtChaosSpec proves for the local control-table seam, here proven
-    * against BOTH transports (in-JVM model and the live REST client
-    * over real sockets; reference recovery: `OverwriteFS.py:2533-2560`). */
+    * repairs any partial inactive data — invariants NrtPortalChaosSpec
+    * proves against BOTH transports (in-JVM model and the live REST
+    * client over real sockets; reference recovery:
+    * `OverwriteFS.py:2533-2560`). */
   def refreshCycleViaPortal(spark: SparkSession, datasetIds: Seq[String],
       readFresh: String => DataFrame, transport: graft.sinks.PortalTransport,
       sinkRoot: String,
       now: Long = System.currentTimeMillis()): Seq[RefreshOutcome] =
-    // DELIBERATELY sequential while refreshCycle runs on parMap: every
-    // refresh funnels through the one PortalTransport, whose
-    // implementations (token mint + per-request session state) are not
-    // proven thread-safe — parallelize only after the transport is.
+    // DELIBERATELY sequential, not on parMap: every refresh funnels
+    // through the one PortalTransport, whose implementations (token
+    // mint + per-request session state) are not proven thread-safe —
+    // parallelize only after the transport is.
     datasetIds.map { id =>
       try refreshViaPortal(spark, id, readFresh(id), transport, sinkRoot, now)
       catch { case scala.util.control.NonFatal(_) =>
@@ -161,85 +142,12 @@ object Nrt {
       }
     }
 
-  /** Apply refresh outcomes to the control table: flip the slot and
-    * store the new fingerprint for changed datasets; touch
-    * `last_refresh` for all attempted ones (the reference touches
-    * dependent views even on no-op, `OverwriteFS.py:2670-2686`). */
-  def applyOutcomes(control: DataFrame, outcomes: Seq[RefreshOutcome],
-      now: java.sql.Timestamp): DataFrame = {
-    val spark = control.sparkSession
-    import spark.implicits._
-    // a FAILED refresh leaves its control row completely untouched —
-    // including last_refresh — so the dataset stays due and the next
-    // cycle retries it (the reference's timeout requeue,
-    // `core.py:869-874`)
-    val applied = outcomes.filterNot(_.failed)
-    if (applied.isEmpty) return control
-    val o = applied.toDF()
-      .select(col("datasetId").as("dataset_id"), col("changed"),
-        col("newFingerprint").as("new_fp"))
-    control.join(broadcast(o), Seq("dataset_id"), "left")
-      .select(
-        col("dataset_id"), col("base_url"),
-        when(col("changed") === true,
-          when(col("active_slot") === "a", "b").otherwise("a"))
-          .otherwise(col("active_slot")).as("active_slot"),
-        when(col("changed") === true, col("new_fp"))
-          .otherwise(col("fingerprint")).as("fingerprint"),
-        col("last_modified"),
-        when(col("changed").isNotNull, lit(now))
-          .otherwise(col("last_refresh")).as("last_refresh"))
-  }
-
-  /** Full refresh cycle over the control table. `readFresh` produces the
-    * windowed source read per dataset (in the connector world this is
-    * the ERDDAP source with the NRT window pushed down). Datasets run
-    * sequentially on the driver but each read/write is a distributed
-    * job; at cluster scale you submit them on a fair-scheduler pool —
-    * the reference's 4-process pool becomes Spark's own scheduler. */
-  def refreshCycle(spark: SparkSession, control: DataFrame,
-      readFresh: String => DataFrame, sinkRoot: String,
-      now: java.sql.Timestamp): (DataFrame, Seq[RefreshOutcome]) = {
-    val rows = control.collect() // control table is small by construction
-    // r15 (guide §2.6 "overlap independent jobs"): per-dataset refreshes
-    // are independent distributed jobs submitted from the driver —
-    // running them from a small thread pool lets the next dataset's
-    // tasks back-fill executors freed by the current one's tail instead
-    // of serializing every job's full latency. Outcome ORDER stays the
-    // control-row order (parMap is order-preserving), so applyOutcomes
-    // and the oracle see exactly the sequential result. Mirrors the
-    // reference's 4-process pool (`core.py:869-880`).
-    val outcomes = parMap(rows.toSeq) { r =>
-      val id = r.getAs[String]("dataset_id")
-      val slot = r.getAs[String]("active_slot")
-      val fp = Option(r.getAs[java.lang.Long]("fingerprint")).map(_.toLong)
-      // per-dataset fault isolation, like the reference's pool loop
-      // (`core.py:869-880`): one dataset dying mid-read or mid-commit
-      // must not abort the cycle — it reports a FAILED outcome (control
-      // row untouched, stays due) while the rest proceed. The inactive
-      // slot may hold a partial write; the active slot still serves and
-      // the next cycle's full-overwrite repairs.
-      try refreshDataset(spark, id, readFresh(id), fp, sinkRoot, slot)
-      catch { case scala.util.control.NonFatal(_) =>
-        RefreshOutcome(id, changed = false, newFingerprint = 0L,
-          rows = -1L, failed = true)
-      }
-    }
-    (applyOutcomes(control, outcomes, now), outcomes)
-  }
-
   /** Order-preserving parallel map on a bounded thread pool — the
-    * driver-side job-overlap harness of guide §2.6. Caller-supplied
-    * bodies must handle their own per-item faults (the refresh loops
-    * already do); an escaped exception propagates after all items
-    * finish. NOTE this is run-all-then-throw: a FATAL error in item k
-    * (the NonFatal per-item guards pass it through) no longer prevents
-    * items k+1..n from running and writing their slots, unlike the
-    * pre-r15 sequential loop — acceptable here because every refresh
-    * is independently recoverable by construction (control row
-    * untouched on failure, next cycle's full slot overwrite repairs
-    * partial data). The short-lived non-daemon pool per call is
-    * deliberate too: 3 calls per pipeline run, and shutdown() in
+    * driver-side job-overlap harness of guide §2.6. Run-all-then-throw:
+    * an exception in item k propagates only after every item has run —
+    * acceptable for its callers, the lifecycle's read-only Last-Modified
+    * probes and seed fingerprints. The short-lived non-daemon pool per
+    * call is deliberate: 2 calls per pipeline run, and shutdown() in
     * finally means no thread leak and no daemon-thread teardown races
     * with spark.stop(). The pool is sized like the reference's
     * 4-process refresh pool — enough to fill stage tails, not enough

@@ -8,18 +8,22 @@ import org.apache.spark.sql.functions._
 /** §3.2 END-TO-END NRT LIFECYCLE — the reference's flagship scheduled
   * path (`core.py:806-880` + `OverwriteFS.py:2137-2369`) as ONE
   * composite flow over deterministic fixtures, oracled as the
-  * `pipeline_nrt` gate:
+  * `pipeline_nrt` (in-JVM [[graft.sinks.Portal]] model) and
+  * `pipeline_nrt_rest` (live sharing-REST transport) gates:
   *
-  *   control table → [[Nrt.duePlan]] → 7-day moving-window read THROUGH
+  *   Last-Modified probes → [[Nrt.duePlan]] → item properties seeded
+  *   with the control state (activeSlot, fingerprint; the reference's
+  *   tag-recovered item state, `update_manager.py:30-84`) →
+  *   [[Nrt.refreshCycleViaPortal]]: 7-day moving-window read THROUGH
   *   the ERDDAP DSv2 source (the window compiles into the request URL —
   *   T1 + S7) → [[Nrt.tableFingerprint]] unchanged-skip (T2) → blue-green
-  *   slot overwrite (K8 + K10) → [[Nrt.applyOutcomes]] touch rows (K11).
+  *   slot overwrite (K8 + K10) → item touch (K11).
   *
   * Fixture design (everything DuckDB can replay from `events.parquet`):
   * the events table is sliced into one tabledap dataset per
   * `event_type` (5 datasets). With types ranked alphabetically:
   *   - rank 1: the source's Last-Modified has NOT advanced past the
-  *     control row's → not due, never read (the reference skips items
+  *     stored one → not due, never read (the reference skips items
   *     whose catalog date hasn't moved, `update_manager.py:118-151`);
   *   - even ranks: due, stored fingerprint is STALE → full overwrite of
   *     the inactive slot, slot flips a→b (`OverwriteFS.py:2137-2369`);
@@ -28,12 +32,11 @@ import org.apache.spark.sql.functions._
   *     success=None outcome + dependent touch, `OverwriteFS.py:2182-2196`,
   *     2670-2686).
   *
-  * Scale shape: the control table is item-count-sized (thousands of
-  * rows at worst — the reference manages hundreds of AGOL items), so
-  * the driver loop over due datasets is bounded by construction; each
-  * per-dataset read/fingerprint/write is a distributed job whose data
-  * plane never lands on the driver. At cluster scale the per-dataset
-  * jobs submit on a fair-scheduler pool (see [[Nrt.refreshCycle]]).
+  * Scale shape: the item inventory is item-count-sized (the reference
+  * manages hundreds of AGOL items), so the driver loop over due
+  * datasets is bounded by construction; each per-dataset
+  * read/fingerprint/write is a distributed job whose data plane never
+  * lands on the driver.
   */
 object NrtPipeline {
 
@@ -47,8 +50,10 @@ object NrtPipeline {
     // the fixture, not serve the stale one (dir name carries the
     // source-parquet fingerprint)
     val tag = graft.Tables.contentTag(sfDir, "events")
+    // format tag (f2: one DAS attribute per line): a changed fixture
+    // layout must not reuse a stale `_READY` dir from an older build
     val dir = Path.of(System.getProperty("java.io.tmpdir"),
-      s"graft_nrt_fixture_${safe}_$tag")
+      s"graft_nrt_fixture_f2_${safe}_$tag")
     val marker = dir.resolve("_READY")
     if (Files.exists(marker)) return dir.toString
     Files.createDirectories(dir)
@@ -72,14 +77,20 @@ object NrtPipeline {
       def f(d: Double) = "%.4f".formatLocal(java.util.Locale.ROOT, d)
       val (vLo, vHi) =
         if (vals.isEmpty) ("0.0", "0.0") else (f(vals.min), f(vals.max))
+      // one attribute per line: the parser opens a section only on a
+      // line ENDING in `{`, like the reference's (`das_client.py:25-135`)
       Files.writeString(dir.resolve(s"ds_$tp.das"),
         s"""Attributes {
            |  time {
            |    String ioos_category "Time";
            |    Float64 actual_range ${secs.min}.0, ${secs.max}.0;
            |  }
-           |  value { Float64 actual_range $vLo, $vHi; }
-           |  NC_GLOBAL { String title "NRT fixture $tp"; }
+           |  value {
+           |    Float64 actual_range $vLo, $vHi;
+           |  }
+           |  NC_GLOBAL {
+           |    String title "NRT fixture $tp";
+           |  }
            |}""".stripMargin)
     }
     Files.writeString(marker, "ok")
@@ -96,18 +107,44 @@ object NrtPipeline {
         .option("dataDir", fixDir).option("dataset", datasetId).load(),
       "time", now, windowDays)
 
-  /** Run the full lifecycle; returns one outcome row per dataset:
+  /** `pipeline_nrt`: the lifecycle over the in-JVM [[graft.sinks.Portal]]
+    * model. Its root is stable under the fixture dir, so a re-run in the
+    * same JVM recovers the items the previous run left behind. */
+  def run(spark: SparkSession, sfDir: String): DataFrame = {
+    val fixDir = ensureFixture(spark, sfDir)
+    lifecycle(spark, sfDir, fixDir,
+      graft.sinks.PortalTransport(s"$fixDir/portal"), s"$fixDir/sink")
+  }
+
+  /** `pipeline_nrt_rest`: the SAME lifecycle over real sockets — a
+    * localhost [[graft.sinks.FakeAgolServer]] exposes a portal, and
+    * add / search / props / update / touch all go over HTTP through
+    * [[graft.sinks.RestPortalTransport]] (reference flow
+    * `OverwriteFS.py:1744-2688`). Same oracle as `pipeline_nrt`. */
+  def runViaRest(spark: SparkSession, sfDir: String): DataFrame = {
+    val fixDir = ensureFixture(spark, sfDir)
+    val user = "gcoos"; val pass = "fixture-pass"
+    val server = new graft.sinks.FakeAgolServer(new graft.sinks.Portal(
+      Files.createTempDirectory("portal_nrt_rest").toString), user, pass)
+    try lifecycle(spark, sfDir, fixDir,
+      graft.sinks.PortalTransport(server.base, user, pass), s"$fixDir/sink_rest")
+    finally server.stop()
+  }
+
+  /** The one lifecycle body; returns one outcome row per dataset:
     * (dataset_id, was_due, changed, rows_written, slot_after,
     * refreshed_at_s). `rows_written` is the count re-read from the
-    * freshly written slot for changed datasets, -1 otherwise. */
-  def run(spark: SparkSession, sfDir: String): DataFrame = {
+    * freshly written slot for changed datasets, -1 otherwise;
+    * `slot_after` is read back from the portal's post-cycle item
+    * properties — the state a next scheduled run would recover. The
+    * report is a local relation, so it outlives the transport. */
+  private def lifecycle(spark: SparkSession, sfDir: String, fixDir: String,
+      transport: graft.sinks.PortalTransport, sinkRoot: String): DataFrame = {
     import spark.implicits._
-    val fixDir = ensureFixture(spark, sfDir)
     val events = graft.Tables.load(spark, sfDir, "events")
     val nowTs = events.agg(date_trunc("second", max(col("ts"))).as("now"))
       .head().getTimestamp(0)
     val dayBefore = new java.sql.Timestamp(nowTs.getTime - 86400000L)
-    // dataset inventory = the control table's key set: item-count-sized
     val types = events.select(col("event_type")).distinct()
       .collect().map(_.getString(0)).sorted.toSeq
 
@@ -128,9 +165,9 @@ object NrtPipeline {
     }
     val srcLm = srcLmSeq.toDF("dataset_id", "last_modified")
 
-    // control seed ("what the last scheduled run left behind"): rank 1
-    // already saw the current source mtime → not due; even ranks carry
-    // a deliberately stale fingerprint → overwrite path; odd ranks > 1
+    // seed ("what the last scheduled run left behind"): rank 1 already
+    // saw the current source mtime → not due; even ranks carry a
+    // deliberately stale fingerprint → overwrite path; odd ranks > 1
     // carry the true fingerprint of the current window → no-op path
     // r15 (guide §2.6): per-dataset window fingerprints are likewise
     // independent jobs — overlapped, order preserved
@@ -142,120 +179,40 @@ object NrtPipeline {
       val srcM = srcLmSeq(i)._2
       val ctlM =
         if (r == 1) srcM else new java.sql.Timestamp(srcM.getTime - 3600000L)
-      (id, fixDir, "a", stored, ctlM, dayBefore)
+      (id, stored, ctlM, dayBefore)
     }
-    val control = seedRows.toDF("dataset_id", "base_url", "active_slot",
-      "fingerprint", "last_modified", "last_refresh")
 
     // due plan: the age branch is disabled (fixtures live in 2024 wall
     // time), so due-ness is purely the Last-Modified comparison
-    val due = Nrt.duePlan(control, srcLm, maxAgeHours = 24 * 365 * 1000)
-    val dueCtl = due.select(control.columns.map(col): _*)
+    val seeded = seedRows.toDF("dataset_id", "fingerprint", "last_modified",
+      "last_refresh")
+    val dueIds = Nrt.duePlan(seeded, srcLm, maxAgeHours = 24 * 365 * 1000)
+      .select("dataset_id").collect().map(_.getString(0)).sorted.toSeq
 
-    val sinkRoot = s"$fixDir/sink"
-    val (_, outcomes) =
-      Nrt.refreshCycle(spark, dueCtl, id => fresh(id), sinkRoot, nowTs)
+    // seed the item properties with the control state; an item a
+    // previous run left behind is found, not added again (a second add
+    // would be renamed `<id>_1` and the refresh would miss it)
+    val itemIds = seedRows.map { case (id, stored, _, _) =>
+      val item = transport.findByTitle(id).getOrElse(transport.addOrRetry(
+        id, "Feature Service", Seq("erddap2agol", s"did_$id")))
+      transport.update(item.id,
+        Map("activeSlot" -> "a", "fingerprint" -> stored.toString))
+      id -> item.id
+    }.toMap
 
-    // touch/flip the FULL control table (not-due rows pass through) and
-    // flatten outcomes into the oracle-checkable report
-    val updated = Nrt.applyOutcomes(control, outcomes, nowTs)
-    val oDf = outcomes.toDF().select(col("datasetId").as("dataset_id"),
-      col("changed").as("_chg"), col("rows").as("_n"))
-    updated.join(broadcast(oDf), Seq("dataset_id"), "left")
-      .select(col("dataset_id"),
-        col("_chg").isNotNull.as("was_due"),
-        coalesce(col("_chg"), lit(false)).as("changed"),
-        coalesce(col("_n"), lit(-1L)).as("rows_written"),
-        col("active_slot").as("slot_after"),
-        col("last_refresh").as("refreshed_at_s"))
-  }
+    val outcomes = Nrt.refreshCycleViaPortal(spark, dueIds,
+      id => fresh(id), transport, sinkRoot, now = nowTs.getTime)
+    val byId = outcomes.map(o => o.datasetId -> o).toMap
 
-  /** The SAME lifecycle driven through the live ArcGIS-sharing-REST
-    * transport over real sockets (`pipeline_nrt_rest` gate): a
-    * localhost [[graft.sinks.FakeAgolServer]] exposes a portal, the
-    * control state (activeSlot, fingerprint) lives in item PROPERTIES
-    * seeded over REST (the reference's tag-recovered item state,
-    * `update_manager.py:30-84`), and due datasets refresh through
-    * [[Nrt.refreshCycleViaPortal]] → [[graft.sinks.RestPortalTransport]]
-    * (add / search / props / update / touch all over HTTP, reference
-    * flow `OverwriteFS.py:1744-2688`). The outcome report reads
-    * `slot_after` back FROM the portal's post-cycle item properties, so
-    * the oracle checks the REST-persisted state, and hash-matches the
-    * same oracle as `pipeline_nrt`. */
-  def runViaRest(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val fixDir = ensureFixture(spark, sfDir)
-    val events = graft.Tables.load(spark, sfDir, "events")
-    val nowTs = events.agg(date_trunc("second", max(col("ts"))).as("now"))
-      .head().getTimestamp(0)
-    val dayBefore = new java.sql.Timestamp(nowTs.getTime - 86400000L)
-    val types = events.select(col("event_type")).distinct()
-      .collect().map(_.getString(0)).sorted.toSeq
-
-    def fresh(id: String): DataFrame = freshWindow(spark, fixDir, id, nowTs)
-
-    // r15 (guide §2.6): the per-dataset Last-Modified probes are
-    // independent driver-submitted jobs — overlap them on the small
-    // pool (order-preserving, so downstream seeds are unchanged)
-    val srcLmSeq = Nrt.parMap(types) { tp =>
+    val report = types.map { tp =>
       val id = s"ds_$tp"
-      val m = spark.read.format("erddap")
-        .option("dataDir", fixDir).option("dataset", id).load()
-        .agg(max(col("time"))).head().getTimestamp(0)
-      id -> m
+      val o = byId.get(id).filterNot(_.failed)
+      val slotAfter = transport.props(itemIds(id))("activeSlot")
+      (id, dueIds.contains(id), o.exists(_.changed),
+        o.filter(_.changed).map(_.rows).getOrElse(-1L), slotAfter,
+        if (o.isDefined) nowTs else dayBefore)
     }
-    val srcLm = srcLmSeq.toDF("dataset_id", "last_modified")
-    // r15 (guide §2.6): per-dataset window fingerprints are likewise
-    // independent jobs — overlapped, order preserved
-    val seedRows = Nrt.parMap(types.zipWithIndex) { case (tp, i) =>
-      val r = i + 1
-      val id = s"ds_$tp"
-      val actual = Nrt.tableFingerprint(fresh(id))
-      val stored = if (r > 1 && r % 2 == 0) actual + 1L else actual
-      val srcM = srcLmSeq(i)._2
-      val ctlM =
-        if (r == 1) srcM else new java.sql.Timestamp(srcM.getTime - 3600000L)
-      (id, fixDir, "a", stored, ctlM, dayBefore)
-    }
-
-    val user = "gcoos"; val pass = "fixture-pass"
-    val portal = new graft.sinks.Portal(
-      Files.createTempDirectory("portal_nrt_rest").toString)
-    val server = new graft.sinks.FakeAgolServer(portal, user, pass)
-    try {
-      val transport = graft.sinks.PortalTransport(server.base, user, pass)
-      // seed the portal items with the control state, over REST
-      val itemIds = seedRows.map { case (id, _, slot, stored, _, _) =>
-        val item = transport.addOrRetry(id, "Feature Service",
-          Seq("erddap2agol", s"did_$id"))
-        transport.update(item.id,
-          Map("activeSlot" -> slot, "fingerprint" -> stored.toString))
-        id -> item.id
-      }.toMap
-
-      val control = seedRows.toDF("dataset_id", "base_url", "active_slot",
-        "fingerprint", "last_modified", "last_refresh")
-      val due = Nrt.duePlan(control, srcLm, maxAgeHours = 24 * 365 * 1000)
-      val dueIds = due.select("dataset_id")
-        .collect().map(_.getString(0)).sorted.toSeq
-
-      val sinkRoot = s"$fixDir/sink_rest"
-      val outcomes = Nrt.refreshCycleViaPortal(spark, dueIds,
-        id => fresh(id), transport, sinkRoot, now = nowTs.getTime)
-      val byId = outcomes.map(o => o.datasetId -> o).toMap
-
-      // slot_after comes back from the portal's REST-persisted item
-      // properties — the state a next scheduled run would recover
-      val report = types.map { tp =>
-        val id = s"ds_$tp"
-        val o = byId.get(id).filterNot(_.failed)
-        val slotAfter = transport.props(itemIds(id))("activeSlot")
-        (id, dueIds.contains(id), o.exists(_.changed),
-          o.filter(_.changed).map(_.rows).getOrElse(-1L), slotAfter,
-          if (o.isDefined) nowTs else dayBefore)
-      }
-      report.toDF("dataset_id", "was_due", "changed", "rows_written",
-        "slot_after", "refreshed_at_s")
-    } finally server.stop()
+    report.toDF("dataset_id", "was_due", "changed", "rows_written",
+      "slot_after", "refreshed_at_s")
   }
 }

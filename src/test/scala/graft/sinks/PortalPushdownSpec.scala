@@ -11,7 +11,7 @@ import graft.operators.SparkTestSession
   * min/max stats prune part handles at scan planning, on both transport
   * backends. Stats are advisory — every test also checks row-level
   * results, which Spark guarantees by re-evaluating residual filters. */
-class PortalPushdownSpec extends AnyFunSuite {
+class PortalPushdownSpec extends AnyFunSuite with FakeAgolServers {
   lazy val spark = SparkTestSession.spark
 
   private def ts(s: String): java.sql.Timestamp =
@@ -78,9 +78,7 @@ class PortalPushdownSpec extends AnyFunSuite {
   }
 
   test("[rest] whole-payload stats prune the single-handle read to zero when out of window") {
-    val server = new FakeAgolServer(
-      new Portal(java.nio.file.Files.createTempDirectory("pp_rest_portal").toString),
-      "gcoos", "fixture-pass")
+    val server = startServer("pp_rest_portal")
     val root = java.nio.file.Files.createTempDirectory("pp_rest_stage").toString
     publishRangeParts(root, "pruned-rest", Some(server.base))
 
@@ -117,9 +115,7 @@ class PortalPushdownSpec extends AnyFunSuite {
     assert(localBack == Map(1L -> "line1\nline2", 2L -> "crlf\r\ncell",
       3L -> "q\"q,\nmix", 4L -> "plain"))
 
-    val server = new FakeAgolServer(
-      new Portal(java.nio.file.Files.createTempDirectory("ml_rest_p").toString),
-      "gcoos", "fixture-pass")
+    val server = startServer("ml_rest_p")
     val stageRoot = java.nio.file.Files.createTempDirectory("ml_rest_s").toString
     df.repartition(2).write.format("portal")
       .option("root", stageRoot).option("item", "ml-rest")

@@ -1,5 +1,6 @@
 package graft.sinks
 
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SparkTestSession
@@ -9,7 +10,7 @@ import graft.operators.SparkTestSession
   * through the documented REST routes, and [[PortalRestClient]] must
   * reproduce the model's behaviors over actual sockets — token login,
   * tag search parity, the 409-retry add loop, update/touch, publish. */
-class PortalRestSpec extends AnyFunSuite {
+class PortalRestSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = SparkTestSession.spark
 
   val user = "gcoos"
@@ -21,6 +22,8 @@ class PortalRestSpec extends AnyFunSuite {
     user, pass, tokenValue)
   lazy val portal = server.portal
   lazy val base: String = server.base
+
+  override def afterAll(): Unit = try server.stop() finally super.afterAll()
 
   def client() = new PortalRestClient(base, user, pass)
 

@@ -9,16 +9,14 @@ import graft.streaming.Nrt
   * backends: the in-JVM [[Portal]] model (directory root) and the live
   * REST client over a localhost sharing-REST server (http root). The
   * factory's scheme selection is part of what's under test. */
-class PortalTransportSpec extends AnyFunSuite {
+class PortalTransportSpec extends AnyFunSuite with FakeAgolServers {
   lazy val spark = SparkTestSession.spark
 
   private def localTransport(): PortalTransport =
     PortalTransport(java.nio.file.Files.createTempDirectory("pt_local").toString)
 
   private def restTransport(): PortalTransport = {
-    val server = new FakeAgolServer(
-      new Portal(java.nio.file.Files.createTempDirectory("pt_rest").toString),
-      "gcoos", "fixture-pass")
+    val server = startServer("pt_rest")
     PortalTransport(server.base, "gcoos", "fixture-pass")
   }
 
@@ -149,9 +147,7 @@ class PortalTransportSpec extends AnyFunSuite {
 
   test("DSv2 sink commit drives the REST backend when portalUrl is set") {
     import spark.implicits._
-    val server = new FakeAgolServer(
-      new Portal(java.nio.file.Files.createTempDirectory("pt_sink_rest").toString),
-      "gcoos", "fixture-pass")
+    val server = startServer("pt_sink_rest")
     val root = java.nio.file.Files.createTempDirectory("pt_sink_stage").toString
     Seq((1, "x"), (2, "y")).toDF("id", "v")
       .repartition(1)

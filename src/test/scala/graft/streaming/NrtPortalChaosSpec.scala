@@ -4,53 +4,66 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SparkTestSession
-import graft.sinks.{FakeAgolServer, Portal, PortalTransport}
+import graft.sinks.{FakeAgolServers, Portal, PortalTransport}
 
-/** The [[NrtChaosSpec]] scenarios run through the PORTAL seam — the
-  * SAME mid-commit kill, read-death and (new) commit-plane death
-  * against BOTH backends in one parameterized spec: the in-JVM
-  * [[Portal]] model and the live REST client over a localhost
-  * sharing-REST server with real sockets (the reference's recovery
-  * surface is REST-quirk-laden: `OverwriteFS.py:2533-2560`). Composite
+/** Shared across executor threads (local mode = one JVM): lets the
+  * chaos UDF count row evaluations so the FINGERPRINT pass over a
+  * dataset succeeds and the subsequent slot WRITE dies partway — a
+  * genuine mid-commit kill, not a read-time failure. */
+object NrtChaosCounter {
+  val evals = new java.util.concurrent.atomic.AtomicLong(0L)
+}
+
+/** Chaos pass on the NRT lifecycle (the reference's operational core:
+  * per-dataset retry isolation `core.py:869-880`, overwrite recovery
+  * `OverwriteFS.py:2533-2560`) through the PORTAL seam — mid-commit
+  * kill, read-death and commit-plane death against BOTH backends in
+  * one parameterized spec: the in-JVM [[Portal]] model and the live
+  * REST client over a localhost sharing-REST server with real sockets
+  * (the reference's recovery surface is REST-quirk-laden). Composite
   * invariants per scenario: the victim's item properties (activeSlot,
-  * fingerprint) are untouched so it STAYS DUE, its active slot keeps
-  * serving the old data in full, the rest of the cycle proceeds, and
-  * the next healthy cycle repairs the partial slot via the full
-  * overwrite. */
-class NrtPortalChaosSpec extends AnyFunSuite {
+  * fingerprint) are untouched so it STAYS DUE — on the local model its
+  * touch time is unchanged too — its active slot keeps serving the old
+  * data in full, the rest of the cycle proceeds, and the next healthy
+  * cycle repairs the partial slot via the full overwrite. */
+class NrtPortalChaosSpec extends AnyFunSuite with FakeAgolServers {
   lazy val spark = SparkTestSession.spark
+
+  private val now1 = 1706745600000L // 2024-02-01T00:00:00Z
+  private val now2 = now1 + 86400000L
 
   private def base(v: Int) = spark.range(200)
     .select(col("id"), lit(v).as("ver"), (col("id") % 7).as("grp"))
     .repartition(4)
 
-  /** (transport, armCommitFault): the fault arms a ONE-SHOT failure of
-    * the next item property update — a decorator throw for the local
-    * model, a genuine wire-level AGOL error envelope for REST. */
-  private def localBackend(): (PortalTransport, () => Unit) = {
-    val inner = PortalTransport(
-      java.nio.file.Files.createTempDirectory("nrt_pc_local").toString)
-    val t = new CommitFaultTransport(inner)
-    (t, () => t.armed = true)
+  /** transport, armCommitFault, and the item's touch time where the
+    * backend exposes it. The fault arms a ONE-SHOT failure of the next
+    * item property update — a decorator throw for the local model, a
+    * genuine wire-level AGOL error envelope for REST. */
+  private case class Backend(t: PortalTransport, armCommitFault: () => Unit,
+      lastTouched: Option[String => Long])
+
+  private def localBackend(): Backend = {
+    val root = java.nio.file.Files.createTempDirectory("nrt_pc_local").toString
+    val t = new CommitFaultTransport(PortalTransport(root))
+    Backend(t, () => t.armed = true,
+      Some(id => Portal.forRoot(root).itemById(id).lastTouched))
   }
 
-  private def restBackend(): (PortalTransport, () => Unit) = {
-    val server = new FakeAgolServer(
-      new Portal(java.nio.file.Files.createTempDirectory("nrt_pc_rest").toString),
-      "gcoos", "fixture-pass")
-    (PortalTransport(server.base, "gcoos", "fixture-pass"),
-      () => server.failNextPropsUpdate = true)
+  private def restBackend(): Backend = {
+    val server = startServer("nrt_pc_rest")
+    Backend(PortalTransport(server.base, "gcoos", "fixture-pass"),
+      () => server.failNextPropsUpdate = true, None)
   }
 
-  private def scenarios(name: String,
-      mk: () => (PortalTransport, () => Unit)): Unit = {
+  private def scenarios(name: String, mk: () => Backend): Unit = {
 
     test(s"[$name] mid-commit kill: item props untouched, cycle survives, next cycle repairs") {
-      val (t, _) = mk()
+      val b = mk(); val t = b.t
       val sink = java.nio.file.Files.createTempDirectory(s"nrt_pc1_$name").toString
       val ids = Seq("ds_a", "ds_b", "ds_c")
 
-      val out1 = Nrt.refreshCycleViaPortal(spark, ids, _ => base(1), t, sink)
+      val out1 = Nrt.refreshCycleViaPortal(spark, ids, _ => base(1), t, sink, now1)
       assert(out1.forall(o => o.changed && !o.failed))
       val item = t.findByTitle("ds_b").get
       val slot1 = t.props(item.id)("activeSlot")
@@ -69,7 +82,7 @@ class NrtPortalChaosSpec extends AnyFunSuite {
         case "ds_b" => base(2).withColumn("chaos", boom(col("id")))
         case _      => base(2)
       }
-      val out2 = Nrt.refreshCycleViaPortal(spark, ids, read2, t, sink)
+      val out2 = Nrt.refreshCycleViaPortal(spark, ids, read2, t, sink, now2)
       val byId = out2.map(o => o.datasetId -> o).toMap
       assert(!byId("ds_a").changed && !byId("ds_a").failed)
       assert(byId("ds_b").failed, "the killed refresh must report failed")
@@ -78,6 +91,13 @@ class NrtPortalChaosSpec extends AnyFunSuite {
       // victim's control state COMPLETELY untouched → stays due
       assert(t.props(item.id)("activeSlot") == slot1)
       assert(t.props(item.id)("fingerprint") == fp1)
+      b.lastTouched.foreach { touched =>
+        assert(touched(item.id) == now1, "a failed refresh is not touched")
+        // the no-op survivor is still touched
+        assert(touched(t.findByTitle("ds_a").get.id) == now2)
+      }
+      // the no-op survivor kept its slot (cycle 1 flipped all alike)
+      assert(t.props(t.findByTitle("ds_a").get.id)("activeSlot") == slot1)
       // its active slot still serves cycle-1 data in full
       val served = spark.read.parquet(Nrt.activePath(sink, "ds_b", slot1))
       assert(served.count() == 200)
@@ -86,21 +106,26 @@ class NrtPortalChaosSpec extends AnyFunSuite {
       assert(t.props(t.findByTitle("ds_c").get.id)("activeSlot") != slot1)
 
       // healthy cycle 3: full overwrite repairs the partial slot
-      val out3 = Nrt.refreshCycleViaPortal(spark, ids, _ => base(2), t, sink)
+      val now3 = now2 + 86400000L
+      val out3 = Nrt.refreshCycleViaPortal(spark, ids, _ => base(2), t, sink, now3)
       val b3 = out3.find(_.datasetId == "ds_b").get
       assert(b3.changed && !b3.failed && b3.rows == 200)
       val slot3 = t.props(item.id)("activeSlot")
       assert(slot3 != slot1 && t.props(item.id)("fingerprint") != fp1)
+      b.lastTouched.foreach(touched => assert(touched(item.id) == now3))
       val repaired = spark.read.parquet(Nrt.activePath(sink, "ds_b", slot3))
       assert(repaired.count() == 200)
       assert(repaired.agg(min(col("ver"))).head().getInt(0) == 2)
+      // ds_c: same content as cycle 2 → no-op, slot stays
+      assert(!out3.find(_.datasetId == "ds_c").get.changed)
+      assert(t.props(t.findByTitle("ds_c").get.id)("activeSlot") != slot1)
     }
 
     test(s"[$name] read-time death is isolated; victim item untouched") {
-      val (t, _) = mk()
+      val b = mk(); val t = b.t
       val sink = java.nio.file.Files.createTempDirectory(s"nrt_pc2_$name").toString
       val ids = Seq("ok", "dead")
-      val out1 = Nrt.refreshCycleViaPortal(spark, ids, _ => base(1), t, sink)
+      val out1 = Nrt.refreshCycleViaPortal(spark, ids, _ => base(1), t, sink, now1)
       assert(out1.forall(o => o.changed && !o.failed))
       val deadItem = t.findByTitle("dead").get
       val slot1 = t.props(deadItem.id)("activeSlot")
@@ -109,28 +134,31 @@ class NrtPortalChaosSpec extends AnyFunSuite {
       def read(id: String): org.apache.spark.sql.DataFrame =
         if (id == "dead") throw new java.io.IOException("connector timeout")
         else base(2)
-      val out2 = Nrt.refreshCycleViaPortal(spark, ids, read, t, sink)
+      val out2 = Nrt.refreshCycleViaPortal(spark, ids, read, t, sink, now2)
       val byId = out2.map(o => o.datasetId -> o).toMap
       assert(byId("ok").changed && !byId("ok").failed)
       assert(byId("dead").failed)
+      assert(t.props(t.findByTitle("ok").get.id)("activeSlot") != slot1)
       assert(t.props(deadItem.id)("activeSlot") == slot1)
       assert(t.props(deadItem.id)("fingerprint") == fp1)
+      b.lastTouched.foreach(touched => assert(touched(deadItem.id) == now1,
+        "a failed refresh is not touched"))
     }
 
     test(s"[$name] commit-plane death AFTER the data write: stays due, next cycle repairs") {
-      val (t, armCommitFault) = mk()
+      val b = mk(); val t = b.t
       val sink = java.nio.file.Files.createTempDirectory(s"nrt_pc3_$name").toString
       // victim FIRST: the one-shot fault must hit its props update, not
       // a preceding dataset's no-op touch (REST touch is an empty update)
       val ids = Seq("victim", "ds_2")
-      val out1 = Nrt.refreshCycleViaPortal(spark, ids, _ => base(1), t, sink)
+      val out1 = Nrt.refreshCycleViaPortal(spark, ids, _ => base(1), t, sink, now1)
       assert(out1.forall(o => o.changed && !o.failed))
       val item = t.findByTitle("victim").get
       val slot1 = t.props(item.id)("activeSlot")
       val fp1 = t.props(item.id)("fingerprint")
 
-      armCommitFault()
-      val out2 = Nrt.refreshCycleViaPortal(spark, ids, _ => base(2), t, sink)
+      b.armCommitFault()
+      val out2 = Nrt.refreshCycleViaPortal(spark, ids, _ => base(2), t, sink, now2)
       val byId = out2.map(o => o.datasetId -> o).toMap
       assert(byId("victim").failed,
         "a failed control-plane commit must report failed")
@@ -141,6 +169,8 @@ class NrtPortalChaosSpec extends AnyFunSuite {
       // fingerprint: stays due, old data keeps serving
       assert(t.props(item.id)("activeSlot") == slot1)
       assert(t.props(item.id)("fingerprint") == fp1)
+      b.lastTouched.foreach(touched => assert(touched(item.id) == now1,
+        "a failed refresh is not touched"))
       val served = spark.read.parquet(Nrt.activePath(sink, "victim", slot1))
       assert(served.agg(max(col("ver"))).head().getInt(0) == 1)
 
@@ -161,7 +191,7 @@ class NrtPortalChaosSpec extends AnyFunSuite {
 }
 
 /** Delegating transport whose next property update throws once — the
-  * local twin of [[FakeAgolServer.failNextPropsUpdate]]. */
+  * local twin of [[graft.sinks.FakeAgolServer.failNextPropsUpdate]]. */
 private class CommitFaultTransport(inner: PortalTransport)
     extends PortalTransport {
   import PortalTransport.{PropertyBackup, Ref}

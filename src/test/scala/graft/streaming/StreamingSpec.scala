@@ -47,39 +47,40 @@ class StreamingSpec extends AnyFunSuite {
 
   test("refresh cycle: first run publishes, unchanged second run no-ops, change flips slot") {
     val root = java.nio.file.Files.createTempDirectory("nrt").toString
+    val portalRoot = java.nio.file.Files.createTempDirectory("nrt_portal").toString
+    val t = graft.sinks.PortalTransport(portalRoot)
     val now = Timestamp.valueOf("2024-01-30 00:00:00")
-    val control = Seq(
-      ("ds1", "https://x/", "a", null.asInstanceOf[java.lang.Long],
-        Timestamp.valueOf("2024-01-01 00:00:00"), Timestamp.valueOf("2024-01-01 00:00:00"))
-    ).toDF("dataset_id", "base_url", "active_slot", "fingerprint",
-      "last_modified", "last_refresh")
 
     val events = graft.Tables.load(spark, sfDir, "events")
     def read1(id: String) = Nrt.movingWindow(events, "ts", now, 7)
       .select("event_id", "ts", "user_id", "value")
 
-    // run 1: fingerprint unknown → publish to inactive slot "b", flip
-    val (control2, out1) = Nrt.refreshCycle(spark, control, read1, root, now)
+    // run 1: no stored fingerprint → publish to the inactive slot, flip
+    val out1 = Nrt.refreshCycleViaPortal(spark, Seq("ds1"), read1, t, root,
+      now.getTime)
     assert(out1.head.changed)
-    val c2 = control2.collect().head
-    assert(c2.getAs[String]("active_slot") == "b")
-    val published = spark.read.parquet(Nrt.activePath(root, "ds1", "b"))
+    val item = t.findByTitle("ds1").get
+    val slot1 = t.props(item.id)("activeSlot")
+    val published = spark.read.parquet(Nrt.activePath(root, "ds1", slot1))
     assert(published.count() == out1.head.rows && published.count() > 0)
 
     // run 2: same data → fingerprint match → no-op, slot stays
-    val (control3, out2) = Nrt.refreshCycle(spark, control2, read1, root, now)
+    val later = now.getTime + 3600000L
+    val out2 = Nrt.refreshCycleViaPortal(spark, Seq("ds1"), read1, t, root, later)
     assert(!out2.head.changed)
-    assert(control3.collect().head.getAs[String]("active_slot") == "b")
-    // but last_refresh was touched (reference touches views even on no-op)
-    assert(control3.collect().head.getAs[Timestamp]("last_refresh") == now)
+    assert(t.props(item.id)("activeSlot") == slot1)
+    // but the item was touched (reference touches views even on no-op)
+    assert(graft.sinks.Portal.forRoot(portalRoot).itemById(item.id)
+      .lastTouched == later)
 
-    // run 3: window moved → different content → republish to slot "a"
+    // run 3: window moved → different content → republish to the other slot
     val now2 = Timestamp.valueOf("2024-01-25 00:00:00")
     def read2(id: String) = Nrt.movingWindow(events, "ts", now2, 7)
       .select("event_id", "ts", "user_id", "value")
-    val (control4, out3) = Nrt.refreshCycle(spark, control3, read2, root, now2)
+    val out3 = Nrt.refreshCycleViaPortal(spark, Seq("ds1"), read2, t, root,
+      now2.getTime)
     assert(out3.head.changed)
-    assert(control4.collect().head.getAs[String]("active_slot") == "a")
+    assert(t.props(item.id)("activeSlot") != slot1)
   }
 
   test("duePlan: stale or advanced datasets are selected") {

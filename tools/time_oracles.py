@@ -9,6 +9,9 @@ slowest last, then a summary.
 """
 import sys, json, os, subprocess, time
 
+TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
+          "lineitem", "events", "documents", "embeddings"]
+
 WORKER = r'''
 import sys, json, time, os
 import duckdb
@@ -16,8 +19,7 @@ sf_dir, sql = sys.argv[1], sys.stdin.read()
 con = duckdb.connect()
 con.execute(f"SET memory_limit='{os.environ.get('SELFCHECK_MEM', '24GB')}'")
 con.execute(f"SET threads={os.environ.get('SELFCHECK_THREADS', '16')}")
-for t in ["region","nation","customer","supplier","part","orders",
-          "lineitem","events","documents","embeddings"]:
+for t in sys.argv[2].split(","):
     p = f"{sf_dir}/{t}.parquet"
     if os.path.isdir(p):
         p = f"{p}/*.parquet"
@@ -31,6 +33,13 @@ def main():
     sf_dir, oracle_path = sys.argv[1], sys.argv[2]
     timeout = float(sys.argv[3]) if len(sys.argv) > 3 else 30.0
     only = set(sys.argv[4].split(",")) if len(sys.argv) > 4 else None
+    # a partial fixture dir would fail every oracle's CREATE VIEW with
+    # the same binding error — report it once instead
+    missing = [t for t in TABLES
+               if not os.path.exists(f"{sf_dir}/{t}.parquet")]
+    if missing:
+        sys.exit(f"missing fixture table(s) in {sf_dir}: "
+                 + ", ".join(f"{t}.parquet" for t in missing))
     oracle = json.load(open(oracle_path))
     results = []
     for name in sorted(oracle):
@@ -39,7 +48,7 @@ def main():
         t0 = time.time()
         try:
             p = subprocess.run(
-                [sys.executable, "-c", WORKER, sf_dir],
+                [sys.executable, "-c", WORKER, sf_dir, ",".join(TABLES)],
                 input=oracle[name], capture_output=True, text=True,
                 timeout=timeout)
             dt = time.time() - t0
