@@ -292,7 +292,7 @@ object GraftExtensions {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", null, name, usage, "")
+    new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((

@@ -166,6 +166,9 @@ object SparkEntry {
     // checkpoints. The bench default stays hdfs = round-comparable.
     val storeKey = "spark.sql.streaming.stateStore.providerClass"
     val prevStore = s.conf.getOption(storeKey)
+    val changelogKey =
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    val prevChangelog = s.conf.getOption(changelogKey)
     val schema = try {
       s.conf.set("spark.sql.shuffle.partitions",
         sys.props.getOrElse("graft.stream.parts",
@@ -178,8 +181,7 @@ object SparkEntry {
         // changelog checkpointing: commit uploads the batch's delta
         // instead of a full SST snapshot — the recommended production
         // pairing for the RocksDB provider
-        s.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-          "changelogCheckpointing.enabled", "true")
+        s.conf.set(changelogKey, "true")
       }
       s.conf.set(progressKey, "10000")
       val t0 = System.nanoTime()
@@ -206,9 +208,9 @@ object SparkEntry {
         case Some(v) => s.conf.set(progressKey, v)
         case None => s.conf.unset(progressKey)
       }
-      prevStore match {
-        case Some(v) => s.conf.set(storeKey, v)
-        case None => s.conf.unset(storeKey)
+      Seq(storeKey -> prevStore, changelogKey -> prevChangelog).foreach {
+        case (k, Some(v)) => s.conf.set(k, v)
+        case (k, None) => s.conf.unset(k)
       }
       deleteTree(ckDir)
     }

@@ -35,7 +35,7 @@ object Glider {
       col(lonCol).as("x1"), col(latCol).as("y1"),
       lead(col(lonCol), 1).over(w).as("x2"),
       lead(col(latCol), 1).over(w).as("y2"))
-    clean.select(propExprs ++ coordExprs: _*)
+    clean.select((propExprs ++ coordExprs).toIndexedSeq: _*)
       .filter(col("x2").isNotNull && col("y2").isNotNull)
   }
 

@@ -54,12 +54,12 @@ object Relational {
     * computes all counts; no per-column jobs. */
   def dropAllNullColumns(df: DataFrame, sampleRows: Int = 10000): DataFrame = {
     val sample = df.limit(sampleRows)
-    val counts = sample.select(df.columns.map(c => count(col(c)).as(c)): _*)
+    val counts = sample.select(df.columns.toIndexedSeq.map(c => count(col(c)).as(c)): _*)
       .head()
     val keep = df.columns.zipWithIndex.collect {
       case (c, i) if counts.getLong(i) > 0 => c
     }
-    df.select(keep.map(col): _*)
+    df.select(keep.toIndexedSeq.map(col): _*)
   }
 
   /** P9 — coordinate validity filter (`agol_wrangler.py:774-792`):
@@ -828,7 +828,7 @@ object Relational {
     val lPart = left.select(col(keyCol).as("_k"), col(tsCol).as("_ts"),
       lit(1).as("_side"),
       lit(null).cast(rStructType).as("_r"),
-      struct(left.columns.map(col): _*).as("_l"))
+      struct(left.columns.toIndexedSeq.map(col): _*).as("_l"))
     val rPart = right
       // SQL join semantics: a null key or null ts never matches — the
       // union trick would otherwise pair null-key rows with each other
@@ -872,7 +872,7 @@ object Relational {
     val lPart = left.select(col(keyCol).as("_k"), col(tsCol).as("_ts"),
       lit(1).as("_side"),
       lit(null).cast(rStructType).as("_r"),
-      struct(left.columns.map(col): _*).as("_l"))
+      struct(left.columns.toIndexedSeq.map(col): _*).as("_l"))
     val rPart = right
       .filter(col(keyCol).isNotNull && col(tsCol).isNotNull)
       .select(col(keyCol).as("_k"), col(tsCol).as("_ts"),

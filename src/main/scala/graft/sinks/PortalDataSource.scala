@@ -65,6 +65,18 @@ class PortalDataSource extends TableProvider with DataSourceRegister {
 }
 
 object PortalDataSource {
+  /** The stored `fingerprint` property from three commutative moments
+    * of a row-hash multiset — XOR, wrapping SUM and COUNT — each
+    * murmur3-fmix64 avalanche-mixed before combining. Shared by this
+    * sink's commit fold and [[graft.streaming.Nrt.tableFingerprint]]. */
+  def combineMoments(xor: Long, sum: Long, count: Long): Long = {
+    def mix(z0: Long): Long = {
+      var z = z0; z ^= z >>> 33; z *= 0xFF51AFD7ED558CCDL
+      z ^= z >>> 33; z *= 0xC4CEB9FE1A85EC53L; z ^ (z >>> 33)
+    }
+    mix(xor) ^ mix(sum + 0x9E3779B97F4A7C15L) ^ mix(count)
+  }
+
   /** Scheme-selected transport from reader/writer options: `portalUrl`
     * set → live REST backend; else the local model at `root`. */
   def transportFor(options: CaseInsensitiveStringMap): Option[PortalTransport] =
@@ -460,14 +472,10 @@ class PortalBatchWrite(root: String, title: String, tags: Seq[String],
     catch { case e: Throwable => deleteRecursively(Path.of(stagingDir)); throw e }
 
     // distributed change fingerprint from the per-task moments
-    def mix(z0: Long): Long = {
-      var z = z0; z ^= z >>> 33; z *= 0xFF51AFD7ED558CCDL
-      z ^= z >>> 33; z *= 0xC4CEB9FE1A85EC53L; z ^ (z >>> 33)
-    }
     val xor = msgs.foldLeft(0L)(_ ^ _.xor)
     val sum = msgs.foldLeft(0L)(_ + _.sum)
     val rows = msgs.foldLeft(0L)(_ + _.rows)
-    val fp = (mix(xor) ^ mix(sum + 0x9E3779B97F4A7C15L) ^ mix(rows)).toString
+    val fp = PortalDataSource.combineMoments(xor, sum, rows).toString
 
     if (ifChanged && t.props(item.id).get("fingerprint").contains(fp)) {
       deleteRecursively(Path.of(stagingDir)) // unchanged → no-op publish

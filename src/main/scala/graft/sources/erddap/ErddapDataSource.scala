@@ -6,6 +6,7 @@ import java.util.OptionalLong
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -42,12 +43,24 @@ import graft.erddap.{AttributePolicy, ChunkPlanner, Das, UrlCompiler}
 class ErddapDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "erddap"
 
+  // `load()` calls inferSchema then getTable on ONE provider instance
+  // with the same options: both resolve to one table, so the DAS is
+  // fetched once per load
+  private var table: Option[(java.util.Map[String, String], ErddapTable)] = None
+
+  private def tableFor(props: java.util.Map[String, String]): ErddapTable =
+    table.collect { case (p, t) if p == props => t }.getOrElse {
+      val t = ErddapTable.fromOptions(new CaseInsensitiveStringMap(props))
+      table = Some((props, t))
+      t
+    }
+
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    ErddapTable.fromOptions(options).schema()
+    tableFor(options.asCaseSensitiveMap()).schema()
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table =
-    ErddapTable.fromOptions(new CaseInsensitiveStringMap(properties))
+    tableFor(properties)
 }
 
 object ErddapTable {
@@ -301,6 +314,8 @@ class ErddapScan(dataDir: String, dataset: String, server: String,
     extends Scan with Batch with SupportsReportStatistics {
 
   private val srv = ErddapTransport(dataDir)
+  // one ncHeader probe per scan, shared by the statistics and the plan
+  private lazy val totalRows = srv.rowCount(dataset)
 
   override def readSchema(): StructType = readSchema
   override def toBatch: Batch = this
@@ -316,8 +331,8 @@ class ErddapScan(dataDir: String, dataset: String, server: String,
 
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): OptionalLong =
-      OptionalLong.of(srv.sizeInBytes(dataset))
-    override def numRows(): OptionalLong = OptionalLong.of(srv.rowCount(dataset))
+      OptionalLong.of(srv.sizeInBytes(dataset, totalRows))
+    override def numRows(): OptionalLong = OptionalLong.of(totalRows)
   }
 
   /** One partition per time chunk — the reference's chunk plan
@@ -345,7 +360,6 @@ class ErddapScan(dataDir: String, dataset: String, server: String,
     // Estimated rows in the (possibly pushed-down) window: total count
     // scaled by the covered time fraction — the reference's uniform-
     // density assumption (data_wrangler.py:294-297) applied to pruning.
-    val totalRows = srv.rowCount(dataset)
     val rows = extent match {
       case Some((fullS, fullE)) if fullE.isAfter(fullS) =>
         val frac = (end.toEpochMilli - start.toEpochMilli).toDouble /
@@ -425,7 +439,7 @@ class ErddapPartitionReader(dataDir: String, schema: StructType, url: String)
   override def next(): Boolean = {
     if (!lines.hasNext) return false
     val cells = Csv.split(lines.next())
-    current = InternalRow.fromSeq(schema.fields.zipWithIndex.map { case (f, i) =>
+    current = new GenericInternalRow(schema.fields.zipWithIndex.map[Any] { case (f, i) =>
       val s = cells(colIdx(i))
       // "NaN" is ERDDAP's missing marker: a real NaN for floating
       // columns (both widths — consistent policy), null elsewhere.
@@ -435,9 +449,8 @@ class ErddapPartitionReader(dataDir: String, schema: StructType, url: String)
       else f.dataType match {
         case TimestampType =>
           // ISO-8601 (with or without Z) → micros
-          val iso = if (s.endsWith("Z")) s else s + "Z"
-          Instant.parse(iso).toEpochMilli * 1000L +
-            (Instant.parse(iso).getNano / 1000) % 1000
+          val t = Instant.parse(if (s.endsWith("Z")) s else s + "Z")
+          t.getEpochSecond * 1000000L + t.getNano / 1000
         case org.apache.spark.sql.types.DoubleType => s.toDouble
         case org.apache.spark.sql.types.FloatType => s.toFloat
         case org.apache.spark.sql.types.IntegerType => s.toInt

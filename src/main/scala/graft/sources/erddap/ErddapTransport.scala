@@ -34,6 +34,10 @@ trait ErddapTransport extends Serializable {
   def rowCount(datasetId: String): Long
   /** Size estimate for `SupportsReportStatistics`. */
   def sizeInBytes(datasetId: String): Long
+  /** [[sizeInBytes]] for a scan that already holds the [[rowCount]]
+    * probe's answer — a transport whose estimate derives from it
+    * skips a second probe. */
+  def sizeInBytes(datasetId: String, rowCount: Long): Long = sizeInBytes(datasetId)
 }
 
 object ErddapTransport {
@@ -179,5 +183,8 @@ class HttpErddapTransport(
   }
 
   override def sizeInBytes(datasetId: String): Long =
-    rowCount(datasetId) * 64 // ~64 B/row: order-of-magnitude for planning
+    sizeInBytes(datasetId, rowCount(datasetId))
+
+  override def sizeInBytes(datasetId: String, rowCount: Long): Long =
+    rowCount * 64 // ~64 B/row: order-of-magnitude for planning
 }

@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.sinks.PortalDataSource
 
 /** NRT (near-real-time) incremental refresh (SURVEY.md §2.10, T1-T6)
   * re-expressed as Spark batch jobs driven through the ONE portal seam
@@ -30,31 +32,44 @@ import org.apache.spark.sql.functions._
   */
 object Nrt {
 
-  /** A5 — order-independent content fingerprint of a DataFrame. One
-    * aggregate job, no collect; at 100 TB this is a single scan with a
-    * tiny result.
+  /** A5 — order-independent content fingerprint of a DataFrame, in ONE
+    * Spark job with no exchange: the moments ride on the scan as an
+    * observation drained by a `noop` write (a global `agg(...).head()`
+    * plans as two AQE jobs around a shuffle).
     *
     * A pure XOR fold cancels any even-multiplicity difference
     * ({A,A,B} and {B,C,C} XOR to the same value), so the fold combines
     * three commutative moments of the row-hash multiset — XOR, wrapping
-    * SUM, and COUNT — each avalanche-mixed before combining. SUM is
+    * SUM, and COUNT — each avalanche-mixed before combining
+    * ([[graft.sinks.PortalDataSource.combineMoments]]). SUM is
     * multiplicity-sensitive where XOR is blind; COUNT catches
     * pure-duplication changes. Summed as decimal(38,0) so the wrapping
     * is ours (low 64 bits), not an ANSI overflow error. */
   def tableFingerprint(df: DataFrame): Long = {
-    val hashed = df.select(xxhash64(to_json(struct(df.columns.map(col): _*)))
-      .as("h"))
-    val row = hashed.agg(
-      coalesce(expr("bit_xor(h)"), lit(0L)).as("x"),
+    val (observed, moments) = observeMoments(df)
+    observed.write.format("noop").mode(SaveMode.Overwrite).save()
+    moments()._1
+  }
+
+  /** `df` with the fingerprint moments attached as an observation, and
+    * a reader of (fingerprint, row count) over the rows the FIRST action
+    * on the returned frame saw. The observation is unnamed (UUID-named),
+    * so concurrent fingerprints ([[parMap]]) never share one. */
+  private def observeMoments(df: DataFrame): (DataFrame, () => (Long, Long)) = {
+    val h = xxhash64(to_json(struct(df.columns.toIndexedSeq.map(col): _*)))
+    val obs = Observation()
+    val observed = df.observe(obs,
+      coalesce(bit_xor(h), lit(0L)).as("x"),
       count(lit(1)).as("n"),
-      coalesce(sum(col("h").cast("decimal(38,0)")),
-        lit(0).cast("decimal(38,0)")).as("s")).head()
-    def mix(z0: Long): Long = { // murmur3 fmix64
-      var z = z0; z ^= z >>> 33; z *= 0xFF51AFD7ED558CCDL
-      z ^= z >>> 33; z *= 0xC4CEB9FE1A85EC53L; z ^ (z >>> 33)
-    }
-    val wrappedSum = row.getDecimal(2).toBigInteger.longValue() // low 64 bits
-    mix(row.getLong(0)) ^ mix(wrappedSum + 0x9E3779B97F4A7C15L) ^ mix(row.getLong(1))
+      coalesce(sum(h.cast("decimal(38,0)")),
+        lit(0).cast("decimal(38,0)")).as("s"))
+    (observed, () => {
+      val m = obs.get
+      val n = m("n").asInstanceOf[Long]
+      val wrappedSum = m("s").asInstanceOf[java.math.BigDecimal]
+        .toBigInteger.longValue() // low 64 bits
+      (PortalDataSource.combineMoments(m("x").asInstanceOf[Long], wrappedSum, n), n)
+    })
   }
 
   /** T1 — the trailing moving-window filter applied to a dataset read. */
@@ -90,7 +105,15 @@ object Nrt {
     * local model or a live portal — the reference's tag-recovered item
     * state (`update_manager.py:30-84`) with Spark doing the data plane.
     * Unchanged data still touches the item (the reference touches
-    * dependents even on no-op, `OverwriteFS.py:2670-2686`). */
+    * dependents even on no-op, `OverwriteFS.py:2670-2686`).
+    *
+    * Spark work per decision: a no-op runs ONE job (the fingerprint),
+    * an overwrite TWO (the fingerprint, then the slot write, which
+    * observes its own count and fingerprint — the slot is never read
+    * back). `fresh` is deliberately not persisted: a no-op never reuses
+    * it, and when measured, caching planned the source scan once more
+    * (more ERDDAP requests and partitions per refresh) and made the
+    * median refresh slower than re-reading the small window. */
   def refreshViaPortal(spark: SparkSession, datasetId: String, fresh: DataFrame,
       transport: graft.sinks.PortalTransport, sinkRoot: String,
       now: Long = System.currentTimeMillis()): RefreshOutcome = {
@@ -105,13 +128,18 @@ object Nrt {
     } else {
       val active = transport.props(item.id).getOrElse("activeSlot", "b")
       val inactive = if (active == "a") "b" else "a"
-      val path = s"$sinkRoot/$datasetId/$inactive"
-      fresh.write.mode(SaveMode.Overwrite).parquet(path)
-      val n = spark.read.parquet(path).count()
+      // the slot write observes its own rows: their count and
+      // fingerprint come out of the write job, so the slot is never
+      // read back, and the stored fingerprint describes what the slot
+      // holds even if the source changed since the check above
+      val (observed, written) = observeMoments(fresh)
+      observed.write.mode(SaveMode.Overwrite)
+        .parquet(s"$sinkRoot/$datasetId/$inactive")
+      val (slotFp, n) = written()
       transport.update(item.id, Map(
-        "activeSlot" -> inactive, "fingerprint" -> fp.toString))
+        "activeSlot" -> inactive, "fingerprint" -> slotFp.toString))
       transport.touch(item.id, now)
-      RefreshOutcome(datasetId, changed = true, fp, n)
+      RefreshOutcome(datasetId, changed = true, slotFp, n)
     }
   }
 

@@ -133,8 +133,8 @@ object NrtPipeline {
 
   /** The one lifecycle body; returns one outcome row per dataset:
     * (dataset_id, was_due, changed, rows_written, slot_after,
-    * refreshed_at_s). `rows_written` is the count re-read from the
-    * freshly written slot for changed datasets, -1 otherwise;
+    * refreshed_at_s). `rows_written` is the row count the slot write
+    * observed for changed datasets, -1 otherwise;
     * `slot_after` is read back from the portal's post-cycle item
     * properties — the state a next scheduled run would recover. The
     * report is a local relation, so it outlives the transport. */

@@ -315,4 +315,38 @@ class ErddapDataSourceSpec extends AnyFunSuite {
     // the numeric column after the multi-line cell still aligns
     assert(df.agg(round(sum("depth_m"), 1)).head().getDouble(0) == 1800.0)
   }
+
+  test("fractional-second time cells round-trip to exact micros") {
+    val d = Files.createTempDirectory("erddap_frac")
+    val cells = Seq(
+      "2024-06-01T00:00:00.123456Z" -> 1717200000123456L,
+      "2024-06-01T00:00:01.5" -> 1717200001500000L, // no Z suffix
+      "2024-06-01T00:00:02Z" -> 1717200002000000L,
+      "1970-01-01T00:00:00.000001Z" -> 1L,
+      "1969-12-31T23:59:59.999999Z" -> -1L)
+    Files.writeString(d.resolve("frac.csv"),
+      ("time,depth" +: cells.zipWithIndex.map { case ((c, _), i) => s"$c,$i" })
+        .mkString("\n"))
+    Files.writeString(d.resolve("frac.das"),
+      """Attributes {
+        |  time {
+        |    String ioos_category "Time";
+        |    String units "seconds since 1970-01-01T00:00:00Z";
+        |    Float64 actual_range -1.0, 1717200003.0;
+        |  }
+        |  depth {
+        |    Float64 actual_range 0.0, 4.0;
+        |  }
+        |  NC_GLOBAL {
+        |    String title "Fractional-second fixture";
+        |  }
+        |}""".stripMargin)
+    assert(spark.read.format("erddap").option("dataDir", d.toString)
+      .option("dataset", "frac").load().schema.fieldNames.toSeq == Seq("time", "depth"))
+    val got = spark.read.format("erddap")
+      .option("dataDir", d.toString).option("dataset", "frac").load()
+      .select(col("depth"), unix_micros(col("time"))).collect()
+      .map(r => r.getDouble(0) -> r.getLong(1)).sortBy(_._1).map(_._2).toSeq
+    assert(got == cells.map(_._2))
+  }
 }

@@ -4,6 +4,8 @@ import java.net.InetSocketAddress
 import java.nio.file.{Files, Path}
 import java.time.Instant
 
+import scala.jdk.CollectionConverters._
+
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
@@ -85,6 +87,8 @@ class HttpTransportSpec extends AnyFunSuite {
   // for the bounded-probe assertion
   val griddapBytes = new java.util.concurrent.atomic.AtomicLong(0)
   val filesHits = new java.util.concurrent.atomic.AtomicInteger(0)
+  val tabledapRequests = new java.util.concurrent.ConcurrentHashMap[
+    String, java.util.concurrent.atomic.AtomicInteger]()
 
   /** Fixture HTTP server: the SAME request grammar LocalErddapServer
     * executes, served over real sockets. Routes mirror ERDDAP's:
@@ -98,7 +102,7 @@ class HttpTransportSpec extends AnyFunSuite {
       ex.sendResponseHeaders(code, body.length)
       ex.getResponseBody.write(body); ex.close()
     }
-    srv.createContext("/tabledap/", (ex: HttpExchange) => {
+    def tabledap(ex: HttpExchange): Unit = {
       val path = ex.getRequestURI.getPath
       try {
         if (path.endsWith(".ncHeader")) {
@@ -114,6 +118,14 @@ class HttpTransportSpec extends AnyFunSuite {
           reply(ex, 200, local.fetch(url).mkString("\n").getBytes("UTF-8"))
         }
       } catch { case e: Exception => reply(ex, 500, e.toString.getBytes("UTF-8")) }
+    }
+    srv.createContext("/tabledap/", (ex: HttpExchange) => tabledap(ex))
+    // the same routes, counting requests per suffix (das, ncHeader, csvp…)
+    srv.createContext("/counted/tabledap/", (ex: HttpExchange) => {
+      val file = ex.getRequestURI.getPath.split('/').last
+      tabledapRequests.computeIfAbsent(file.substring(file.lastIndexOf('.') + 1),
+        _ => new java.util.concurrent.atomic.AtomicInteger()).incrementAndGet()
+      tabledap(ex)
     })
     srv.createContext("/griddap/", (ex: HttpExchange) => {
       try {
@@ -190,6 +202,21 @@ class HttpTransportSpec extends AnyFunSuite {
     val t = new HttpErddapTransport(base)
     assert(t.rowCount("buoy1") == 96)
     assert(t.sizeInBytes("buoy1") == 96 * 64)
+  }
+
+  test("a filtered load().count() sends one .das and one .ncHeader") {
+    server // started before counting
+    tabledapRequests.clear()
+    val n = spark.read.format("erddap")
+      .option("dataDir", s"$base/counted")
+      .option("dataset", "buoy1")
+      .option("chunkSize", "25").load()
+      .filter(col("time") >= lit("2024-06-02 00:00:00").cast("timestamp"))
+      .count()
+    assert(n == 72)
+    val sent = tabledapRequests.asScala.map { case (k, v) => k -> v.get }.toMap
+    assert(sent.get("das").contains(1), sent)
+    assert(sent.get("ncHeader").contains(1), sent)
   }
 
   test("aggregate pushdown answers from HTTP metadata only") {
