@@ -37,15 +37,11 @@ object LinkGraph {
     parseCadence(sys.props.getOrElse("graft.graph.ckptEvery",
       sys.env.getOrElse("SPARK_GRAFT_GRAPH_CKPT_EVERY", "2")))
 
-  /** Cadence ceiling. A cadence at or past a loop's round count pins
-    * only the final round; the loops here default to 3–8 rounds. */
-  private val MaxCadence = 64
-
-  /** A cadence knob value clamped to [1, [[MaxCadence]]]; a value that
-    * is not an integer fails fast, naming the knob. */
+  /** A cadence knob value raised to at least 1; a value that is not an
+    * integer fails fast, naming the knob. */
   private[operators] def parseCadence(raw: String): Int =
     raw.trim.toIntOption match {
-      case Some(k) => math.min(MaxCadence, math.max(1, k))
+      case Some(k) => math.max(1, k)
       case None => throw new IllegalArgumentException(
         s"graft.graph.ckptEvery / SPARK_GRAFT_GRAPH_CKPT_EVERY must be an " +
           s"integer, got '$raw'")

@@ -32,12 +32,9 @@ trait ErddapTransport extends Serializable {
   def griddapHeader(datasetId: String): graft.sources.griddap.GridNc.Grid
   /** ncHeader-style row-count probe — no data transfer. */
   def rowCount(datasetId: String): Long
-  /** Size estimate for `SupportsReportStatistics`. */
-  def sizeInBytes(datasetId: String): Long
-  /** [[sizeInBytes]] for a scan that already holds the [[rowCount]]
-    * probe's answer — a transport whose estimate derives from it
-    * skips a second probe. */
-  def sizeInBytes(datasetId: String, rowCount: Long): Long = sizeInBytes(datasetId)
+  /** Size estimate for `SupportsReportStatistics`, given the scan's
+    * [[rowCount]] probe answer so no transport probes twice. */
+  def sizeInBytes(datasetId: String, rowCount: Long): Long
 }
 
 object ErddapTransport {
@@ -181,9 +178,6 @@ class HttpErddapTransport(
       .getOrElse(throw new java.io.IOException(
         s"no row dimension in ncHeader for $datasetId"))
   }
-
-  override def sizeInBytes(datasetId: String): Long =
-    sizeInBytes(datasetId, rowCount(datasetId))
 
   override def sizeInBytes(datasetId: String, rowCount: Long): Long =
     rowCount * 64 // ~64 B/row: order-of-magnitude for planning

@@ -198,6 +198,7 @@ class LocalErddapServer(dataDir: String) extends ErddapTransport {
     Csv.recordLines(Files.readString(Path.of(dataDir, s"$datasetId.csv")))
       .count(_.nonEmpty) - 1
 
-  override def sizeInBytes(datasetId: String): Long =
+  /** The CSV's file size; `rowCount` is not needed for it. */
+  override def sizeInBytes(datasetId: String, rowCount: Long): Long =
     Files.size(Path.of(dataDir, s"$datasetId.csv"))
 }

@@ -1,5 +1,10 @@
 package graft.streaming
 
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -45,17 +50,41 @@ object Nrt {
     * multiplicity-sensitive where XOR is blind; COUNT catches
     * pure-duplication changes. Summed as decimal(38,0) so the wrapping
     * is ours (low 64 bits), not an ANSI overflow error. */
-  def tableFingerprint(df: DataFrame): Long = {
+  def tableFingerprint(df: DataFrame): Long =
+    fingerprint(df, ObservationTimeout)
+
+  private def fingerprint(df: DataFrame, timeout: FiniteDuration): Long = {
     val (observed, moments) = observeMoments(df)
     observed.write.format("noop").mode(SaveMode.Overwrite).save()
-    moments()._1
+    moments(timeout)._1
+  }
+
+  /** How long a refresh waits, after its action returned, for the
+    * action's observed metrics. Spark delivers them from a listener on
+    * the shared listener bus, which is asynchronous and drops events
+    * when full; an unbounded wait would hang the whole sequential
+    * cycle on one lost event. Normal delivery takes milliseconds. */
+  val ObservationTimeout: FiniteDuration = 60.seconds
+
+  /** `obs`'s metrics by name, or a [[TimeoutException]] once `timeout`
+    * passes without them — a failure [[refreshCycleViaPortal]] records
+    * as that dataset's FAILED outcome. */
+  private[streaming] def awaitObserved(obs: Observation,
+      timeout: FiniteDuration): Map[String, Any] = {
+    val row = try Await.result(obs.future, timeout) catch {
+      case _: TimeoutException => throw new TimeoutException(
+        s"observed metrics '${obs.name}' not delivered within $timeout")
+    }
+    row.getValuesMap[Any](row.schema.fieldNames.toIndexedSeq)
   }
 
   /** `df` with the fingerprint moments attached as an observation, and
     * a reader of (fingerprint, row count) over the rows the FIRST action
-    * on the returned frame saw. The observation is unnamed (UUID-named),
-    * so concurrent fingerprints ([[parMap]]) never share one. */
-  private def observeMoments(df: DataFrame): (DataFrame, () => (Long, Long)) = {
+    * on the returned frame saw, waiting at most the given bound. The
+    * observation is unnamed (UUID-named), so concurrent fingerprints
+    * ([[parMap]]) never share one. */
+  private def observeMoments(
+      df: DataFrame): (DataFrame, FiniteDuration => (Long, Long)) = {
     val h = xxhash64(to_json(struct(df.columns.toIndexedSeq.map(col): _*)))
     val obs = Observation()
     val observed = df.observe(obs,
@@ -63,8 +92,8 @@ object Nrt {
       count(lit(1)).as("n"),
       coalesce(sum(h.cast("decimal(38,0)")),
         lit(0).cast("decimal(38,0)")).as("s"))
-    (observed, () => {
-      val m = obs.get
+    (observed, timeout => {
+      val m = awaitObserved(obs, timeout)
       val n = m("n").asInstanceOf[Long]
       val wrappedSum = m("s").asInstanceOf[java.math.BigDecimal]
         .toBigInteger.longValue() // low 64 bits
@@ -113,15 +142,19 @@ object Nrt {
     * back). `fresh` is deliberately not persisted: a no-op never reuses
     * it, and when measured, caching planned the source scan once more
     * (more ERDDAP requests and partitions per refresh) and made the
-    * median refresh slower than re-reading the small window. */
+    * median refresh slower than re-reading the small window.
+    *
+    * Each job's answer is awaited at most `observationTimeout`
+    * ([[ObservationTimeout]]); past it the refresh throws. */
   def refreshViaPortal(spark: SparkSession, datasetId: String, fresh: DataFrame,
       transport: graft.sinks.PortalTransport, sinkRoot: String,
-      now: Long = System.currentTimeMillis()): RefreshOutcome = {
+      now: Long = System.currentTimeMillis(),
+      observationTimeout: FiniteDuration = ObservationTimeout): RefreshOutcome = {
     val item = transport.findByTitle(datasetId).getOrElse(
       transport.addOrRetry(datasetId, "Feature Service",
         Seq("erddap2agol", s"did_$datasetId")))
     val stored = transport.props(item.id).get("fingerprint").map(_.toLong)
-    val fp = tableFingerprint(fresh)
+    val fp = fingerprint(fresh, observationTimeout)
     if (stored.contains(fp)) {
       transport.touch(item.id, now)
       RefreshOutcome(datasetId, changed = false, fp, -1L)
@@ -135,7 +168,7 @@ object Nrt {
       val (observed, written) = observeMoments(fresh)
       observed.write.mode(SaveMode.Overwrite)
         .parquet(s"$sinkRoot/$datasetId/$inactive")
-      val (slotFp, n) = written()
+      val (slotFp, n) = written(observationTimeout)
       transport.update(item.id, Map(
         "activeSlot" -> inactive, "fingerprint" -> slotFp.toString))
       transport.touch(item.id, now)
@@ -157,13 +190,15 @@ object Nrt {
   def refreshCycleViaPortal(spark: SparkSession, datasetIds: Seq[String],
       readFresh: String => DataFrame, transport: graft.sinks.PortalTransport,
       sinkRoot: String,
-      now: Long = System.currentTimeMillis()): Seq[RefreshOutcome] =
+      now: Long = System.currentTimeMillis(),
+      observationTimeout: FiniteDuration = ObservationTimeout): Seq[RefreshOutcome] =
     // DELIBERATELY sequential, not on parMap: every refresh funnels
     // through the one PortalTransport, whose implementations (token
     // mint + per-request session state) are not proven thread-safe —
     // parallelize only after the transport is.
     datasetIds.map { id =>
-      try refreshViaPortal(spark, id, readFresh(id), transport, sinkRoot, now)
+      try refreshViaPortal(spark, id, readFresh(id), transport, sinkRoot, now,
+        observationTimeout)
       catch { case scala.util.control.NonFatal(_) =>
         RefreshOutcome(id, changed = false, newFingerprint = 0L,
           rows = -1L, failed = true)

@@ -201,7 +201,7 @@ class HttpTransportSpec extends AnyFunSuite {
   test("statistics come from the ncHeader probe over HTTP") {
     val t = new HttpErddapTransport(base)
     assert(t.rowCount("buoy1") == 96)
-    assert(t.sizeInBytes("buoy1") == 96 * 64)
+    assert(t.sizeInBytes("buoy1", t.rowCount("buoy1")) == 96 * 64)
   }
 
   test("a filtered load().count() sends one .das and one .ncHeader") {

@@ -1,13 +1,14 @@
 package graft.streaming
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeoutException}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import scala.concurrent.duration.DurationInt
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SpecBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
@@ -70,6 +71,24 @@ class NrtFingerprintSpec extends AnyFunSuite with TimeLimits {
       sc.setLocalProperty(TagKey, null)
       spark.listenerManager.unregister(queryListener)
       sc.removeSparkListener(jobListener)
+    }
+  }
+
+  /** `body` run while the shared listener queue, which delivers
+    * observed metrics, is stuck in a listener until `body` returns. */
+  private def withStalledBus[T](body: => T): T = {
+    val sc = spark.sparkContext
+    val release = new CountDownLatch(1)
+    val stall = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = release.await()
+    }
+    SpecBus.drain(sc)
+    sc.addSparkListener(stall)
+    try body
+    finally {
+      release.countDown()
+      SpecBus.drain(sc)
+      sc.removeSparkListener(stall)
     }
   }
 
@@ -176,5 +195,24 @@ class NrtFingerprintSpec extends AnyFunSuite with TimeLimits {
     assert(slot.filter($"ver" =!= 2L).isEmpty)
     val slotFp = Nrt.tableFingerprint(slot)
     assert(props("fingerprint") == slotFp.toString && slotFp != checked)
+  }
+
+  test("observed metrics that never arrive fail the refresh within the bound") {
+    val never = failAfter(Span(30, Seconds)) {
+      intercept[TimeoutException](Nrt.awaitObserved(Observation(), 200.millis))
+    }
+    assert(never.getMessage.contains("200 milliseconds"))
+
+    val sink = tmp("nrt_stall_sink")
+    val t = PortalTransport(tmp("nrt_stall_portal"))
+    val stalled = failAfter(Span(30, Seconds)) {
+      withStalledBus(Nrt.refreshCycleViaPortal(spark, Seq("ds"), _ => fresh(1),
+        t, sink, observationTimeout = 500.millis))
+    }
+    assert(stalled.map(_.failed) == Seq(true))
+    assert(!t.props(t.findByTitle("ds").get.id).contains("fingerprint"))
+    // on a delivering bus the next cycle refreshes the dataset
+    val healed = Nrt.refreshCycleViaPortal(spark, Seq("ds"), _ => fresh(1), t, sink)
+    assert(healed.map(o => (o.failed, o.changed, o.rows)) == Seq((false, true, 300L)))
   }
 }
