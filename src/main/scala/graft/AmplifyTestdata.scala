@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Materialize an AMPLIFIED copy of the synthetic tables on disk —
@@ -19,12 +19,7 @@ object AmplifyTestdata {
     require(args.length == 3, "usage: AmplifyTestdata <srcDir> <dstDir> <factor>")
     val Array(src, dst, factorS) = args
     val factor = factorS.toInt
-    val b = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(32)
 
     def maxOf(table: String, key: String): Long =
       Tables.load(spark, src, table).agg(max(col(key))).head().getLong(0) + 1

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.erddap._
 
 /** Runnable demo of the ERDDAP plan pipeline (SURVEY.md §3.1) against
@@ -16,13 +14,7 @@ import graft.erddap._
   */
 object ErddapPlanDemo {
   def main(args: Array[String]): Unit = {
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(4)
 
     // Materialize bundled fixtures so spark.read.json can reach them.
     def resourceToTmp(name: String): String = {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit main: prints executed plans for the headline queries AND
   * asserts the load-bearing physical properties (pushdown reached the
@@ -8,11 +7,7 @@ import org.apache.spark.sql.SparkSession
   * suite with a silently-regressed plan is exactly what this catches. */
 object ExplainCheck {
   def main(args: Array[String]): Unit = {
-    val b = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions","8").config("spark.ui.enabled","false")
-    Tables.sessionConfigs.foreach { case (k,v) => b.config(k,v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(8)
     val dir = "/root/testdata/sf0.01"
 
     var failures = List.empty[String]

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Empirical scaling AUDIT: runs the heavy operator families on 1× and
@@ -23,12 +23,7 @@ object ScaleProbe {
     val budget = sys.env.get("SPARK_GRAFT_SCALE_BUDGET").map(_.toDouble)
       .getOrElse(n * (1 + math.log(n) / math.log(2)))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val b = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(32)
 
     // cap-drop accounting: the skew guards record drops as lazy
     // CollectMetrics observations (`<tag>_cap_<n>.dropped_members`);

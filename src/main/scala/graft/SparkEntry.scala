@@ -154,35 +154,12 @@ object SparkEntry {
     // the stream_split metric; raise the cap for the gate's lifetime
     val progressKey = "spark.sql.streaming.numRecentProgressUpdates"
     val prevProgress = s.conf.getOption(progressKey)
-    // State-store provider knob (guide §5): "rocksdb" switches the
-    // stateful gates to Spark's stock RocksDBStateStoreProvider —
-    // state lives off-heap in a native store instead of per-batch
-    // copied HDFSBackedStateStore maps. Parameterized (prop then env,
-    // default hdfs) because which provider wins is state-volume- and
-    // hardware-dependent: at this fixture's ~100k keys/batch the
-    // HDFS-backed map is measurably faster (see OPTIMIZATION_r16.md
-    // for the paired A/B), while at production state volumes RocksDB
-    // is the documented choice for bounded heap + incremental
-    // checkpoints. The bench default stays hdfs = round-comparable.
-    val storeKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevStore = s.conf.getOption(storeKey)
-    val changelogKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevChangelog = s.conf.getOption(changelogKey)
     val schema = try {
-      s.conf.set("spark.sql.shuffle.partitions",
-        sys.props.getOrElse("graft.stream.parts",
-          sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8")))
-      if (sys.props.getOrElse("graft.stream.statestore",
-          sys.env.getOrElse("SPARK_GRAFT_STREAM_STATESTORE", "hdfs"))
-          == "rocksdb") {
-        s.conf.set(storeKey, "org.apache.spark.sql.execution." +
-          "streaming.state.RocksDBStateStoreProvider")
-        // changelog checkpointing: commit uploads the batch's delta
-        // instead of a full SST snapshot — the recommended production
-        // pairing for the RocksDB provider
-        s.conf.set(changelogKey, "true")
-      }
+      // 8 state partitions on the default HDFS-backed state store: at
+      // this fixture's ~100k keys/batch neither 4/16/32 partitions
+      // (OPTIMIZATION_r15.md "Streaming gates") nor RocksDB
+      // (OPTIMIZATION_r16.md §3) won a paired A/B
+      s.conf.set("spark.sql.shuffle.partitions", "8")
       s.conf.set(progressKey, "10000")
       val t0 = System.nanoTime()
       val src =
@@ -207,10 +184,6 @@ object SparkEntry {
       prevProgress match {
         case Some(v) => s.conf.set(progressKey, v)
         case None => s.conf.unset(progressKey)
-      }
-      Seq(storeKey -> prevStore, changelogKey -> prevChangelog).foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
       deleteTree(ckDir)
     }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,40 +9,16 @@ object Verify {
     // two): comma-separated gate names to dump, e.g. "bm25_topk"
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.envCores)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      val failed =
-        try { fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name"); false }
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          true
+        Harness.runGate(spark, name, "verify") {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
         }
-      // STORAGE-HYGIENE INVARIANT: a drained gate must leave zero
-      // persisted RDDs unless it is a documented lazy-pin operator
-      // (SparkEntry.lazyPinGates) — an undocumented residual FAILS the
-      // run. SPARK_GRAFT_PIN_AUDIT=warn is the allowlist-rediscovery
-      // mode (print-and-continue). A gate that FAILED mid-execution is
-      // exempt — an interrupted operator is expected to strand pins, so
-      // sweep + log rather than aborting the remaining gates.
-      if (failed) {
-        val swept = graft.operators.Snapshots.sweep(spark, blocking = true)
-        if (swept > 0) System.err.println(
-          s"[verify] $name failed mid-run; swept $swept stranded pin(s)")
-      } else graft.operators.Snapshots.assertDrained(spark, name,
-        SparkEntry.lazyPinGates, "verify",
-        warnOnly = sys.env.get("SPARK_GRAFT_PIN_AUDIT").contains("warn"))
-    }
+      }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

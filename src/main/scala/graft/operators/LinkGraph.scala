@@ -31,21 +31,8 @@ object LinkGraph {
     * NO per-round driver scalar defer (a scalar read forces the lazy
     * prefix per round — deferring would recompute it); pageRank/PPR
     * fall back to per-round pinning when the graph has dangling mass.
-    * Parameterized (prop, then env, default 2 — the sf0.1 paired-A/B
-    * winner, see OPTIMIZATION_r16.md; 1 restores round-15 behavior). */
-  private def ckptCadence: Int =
-    parseCadence(sys.props.getOrElse("graft.graph.ckptEvery",
-      sys.env.getOrElse("SPARK_GRAFT_GRAPH_CKPT_EVERY", "2")))
-
-  /** A cadence knob value raised to at least 1; a value that is not an
-    * integer fails fast, naming the knob. */
-  private[operators] def parseCadence(raw: String): Int =
-    raw.trim.toIntOption match {
-      case Some(k) => math.max(1, k)
-      case None => throw new IllegalArgumentException(
-        s"graft.graph.ckptEvery / SPARK_GRAFT_GRAPH_CKPT_EVERY must be an " +
-          s"integer, got '$raw'")
-    }
+    * k = 2 is the sf0.1 paired-A/B winner (OPTIMIZATION_r16.md §4). */
+  private val ckptCadence = 2
 
   /** Damped PageRank after exactly `iterations` rounds.
     *

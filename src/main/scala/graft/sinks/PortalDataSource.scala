@@ -36,8 +36,8 @@ import graft.sources.erddap.Csv
   * `tags` (comma-separated extra tags).
   *
   * The published container is headerless RFC-4180 CSV per partition
-  * (timestamps as ISO-8601 with microseconds); [[PortalSink.readPublished]]
-  * reads the active slot back with the original schema.
+  * (timestamps as ISO-8601 with microseconds); `spark.read.format("portal")`
+  * reads the active slot back with the schema recorded at publish.
   */
 class PortalDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "portal"
@@ -599,11 +599,8 @@ class PortalDataWriter(stagingDir: String, schema: StructType,
       case BooleanType => row.getBoolean(i).toString
       case TimestampType =>
         val us = row.getLong(i)
-        java.time.format.DateTimeFormatter
-          .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
-          .withZone(java.time.ZoneOffset.UTC)
-          .format(java.time.Instant.ofEpochSecond(
-            Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L))
+        PortalDataWriter.TimestampFormat.format(java.time.Instant.ofEpochSecond(
+          Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L))
       case DateType => java.time.LocalDate.ofEpochDay(row.getInt(i)).toString
       case dt => throw new UnsupportedOperationException(
         s"portal sink: unsupported type $dt")
@@ -640,20 +637,10 @@ class PortalDataWriter(stagingDir: String, schema: StructType,
   override def close(): Unit = ()
 }
 
-/** Read-back + introspection helpers for the published container. */
-object PortalSink {
-  /** Read the ACTIVE slot of a published item with its original schema. */
-  def readPublished(spark: org.apache.spark.sql.SparkSession, root: String,
-      title: String, schema: StructType): org.apache.spark.sql.DataFrame = {
-    val portal = Portal.forRoot(root)
-    val item = portal.findByTitle(title).getOrElse(
-      throw new IllegalArgumentException(s"no published item '$title'"))
-    val slot = portal.itemById(item.id).serviceProps.getOrElse("activeSlot",
-      throw new IllegalStateException("item has no published slot"))
-    spark.read.schema(schema)
-      .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
-      .option("escape", "\"") // RFC-4180 doubled quotes, not backslash
-      .option("multiLine", "true") // quoted CR/LF cells span physical lines
-      .csv(s"$root/${item.id}/$slot")
-  }
+object PortalDataWriter {
+  /** ISO-8601 UTC with microseconds; immutable and thread-safe, so one
+    * instance serves every writer. */
+  private val TimestampFormat = java.time.format.DateTimeFormatter
+    .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
+    .withZone(java.time.ZoneOffset.UTC)
 }

@@ -408,19 +408,13 @@ class ErddapReaderFactory(dataDir: String, schema: StructType)
 }
 
 /** Fetches one chunk URL through the transport and converts CSV lines to
-  * InternalRows of the pruned schema (with per-URL retry ×3 like the
-  * reference, `data_wrangler.py:557`; here retry = re-read). */
+  * InternalRows of the pruned schema. Retries are the transport's (the
+  * HTTP transport's ×3, like the reference, `data_wrangler.py:557`). */
 class ErddapPartitionReader(dataDir: String, schema: StructType, url: String)
     extends PartitionReader[InternalRow] {
 
   private val (headerCells: Array[String], lines: Iterator[String]) = {
-    var attempt = 0
-    var res: Seq[String] = null
-    while (res == null && attempt < 3) {
-      try res = ErddapTransport(dataDir).fetch(url)
-      catch { case e: Exception if attempt < 2 => attempt += 1 }
-    }
-    val it = res.iterator
+    val it = ErddapTransport(dataDir).fetch(url).iterator
     (Csv.split(it.next()), it)
   }
 

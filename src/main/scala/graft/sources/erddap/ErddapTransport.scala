@@ -5,8 +5,10 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
 
 /** Transport seam for the ERDDAP connectors: everything above this
-  * trait (URL grammar, chunk partitions, retries-as-rereads, pushdown)
-  * is transport-agnostic. Two implementations:
+  * trait (URL grammar, chunk partitions, pushdown) is
+  * transport-agnostic, and retrying a failed request is the transport's
+  * job alone — the partition readers call each URL once. Two
+  * implementations:
   *
   *  - [[LocalErddapServer]] — fixture-directory fake executing the same
   *    request grammar server-side (zero-egress test/bench path);

@@ -34,18 +34,6 @@ class LinkGraphSpec extends AnyFunSuite {
       .as[(Long, Double)].collect().toMap
   }
 
-  test("checkpoint cadence knob: raised to at least 1; a malformed value fails naming the knob") {
-    assert(LinkGraph.parseCadence("2") == 2)
-    assert(LinkGraph.parseCadence(" 3 ") == 3)
-    assert(LinkGraph.parseCadence("0") == 1)
-    assert(LinkGraph.parseCadence("-5") == 1)
-    Seq("", "two", "2.5", "99999999999").foreach { raw =>
-      val e = intercept[IllegalArgumentException](LinkGraph.parseCadence(raw))
-      assert(e.getMessage.contains("SPARK_GRAFT_GRAPH_CKPT_EVERY") &&
-        e.getMessage.contains(s"'$raw'"), raw)
-    }
-  }
-
   test("matches the dense reference on a mixed graph with dangling nodes") {
     // 0→1, 0→2, 1→2, 2→0, 3 dangling, 4→0 ; node 5 isolated (via nodes)
     val edges = Seq((0, 1), (0, 2), (1, 2), (2, 0), (4, 0), (0, 1) /* dup */)

@@ -23,6 +23,10 @@ class PortalSinkSpec extends AnyFunSuite {
   def df(rows: (Long, String, Double)*) =
     rows.toDF("id", "name", "v")
 
+  /** The active slot of a published item, through the DSv2 reader. */
+  def readBack(root: String, title: String) =
+    spark.read.format("portal").option("root", root).option("item", title).load()
+
   test("commit publishes into a slot, restores props, and is readable back") {
     val root = freshRoot()
     val data = df((1L, "alpha", 1.5), (2L, "with, comma", 2.5), (3L, "q\"q", 3.5))
@@ -36,7 +40,7 @@ class PortalSinkSpec extends AnyFunSuite {
     assert(portal.itemById(item.id).serviceProps("hasLiveData") == "false")
     assert(portal.itemById(item.id).lastTouched > 0)
 
-    val back = PortalSink.readPublished(spark, root, "SST buoys", schema)
+    val back = readBack(root, "SST buoys")
     assert(back.count() == 3)
     assert(back.filter(col("id") === 2L).head().getString(1) == "with, comma")
     assert(back.filter(col("id") === 3L).head().getString(1) == "q\"q")
@@ -65,7 +69,7 @@ class PortalSinkSpec extends AnyFunSuite {
     publish(df((1L, "a", 1.0), (2L, "b", 99.0))) // changed → flip to b
     assert(portal.itemById(id).serviceProps("activeSlot") == "b")
     assert(portal.itemById(id).serviceProps("fingerprint") != fp1)
-    val back = PortalSink.readPublished(spark, root, "NRT winds", schema)
+    val back = readBack(root, "NRT winds")
     assert(back.filter(col("id") === 2L).head().getDouble(2) == 99.0)
   }
 
@@ -89,7 +93,7 @@ class PortalSinkSpec extends AnyFunSuite {
     assert(!Files.list(Path.of(root)).toArray.map(_.toString)
       .exists(_.contains(".staging")))
     // published data still the pre-failure content
-    val back = PortalSink.readPublished(spark, root, "stable", schema)
+    val back = readBack(root, "stable")
     assert(back.count() == 1)
   }
 
@@ -144,7 +148,7 @@ class PortalSinkSpec extends AnyFunSuite {
       .option("item", "ow").mode("overwrite").save()
     val portal = Portal.forRoot(root)
     assert(portal.findByTitle("ow").isDefined)
-    val back = PortalSink.readPublished(spark, root, "ow", schema)
+    val back = readBack(root, "ow")
     assert(back.count() == 1)
   }
 
@@ -181,7 +185,9 @@ class PortalSinkSpec extends AnyFunSuite {
       .toDF("id", "ts")
     d.write.format("portal").option("root", root).option("item", "tsrt")
       .mode("append").save()
-    val back = PortalSink.readPublished(spark, root, "tsrt", tsSchema)
+    val back = readBack(root, "tsrt")
+    assert(back.schema.map(f => (f.name, f.dataType)) ==
+      tsSchema.map(f => (f.name, f.dataType)))
     assert(back.head().getTimestamp(1) ==
       java.sql.Timestamp.valueOf("2024-06-01 12:34:56.123456"))
   }

@@ -320,6 +320,38 @@ class HttpTransportSpec extends AnyFunSuite {
     assert(err.getMessage.contains("404") || err.getMessage.contains("HTTP"))
   }
 
+  test("a scan whose data route always 503s fails after the transport's 3 tries") {
+    // metadata served normally; every data request answers 503
+    val dataHits = new java.util.concurrent.atomic.AtomicInteger(0)
+    server.createContext("/down/tabledap/", (ex: HttpExchange) => {
+      val path = ex.getRequestURI.getPath
+      if (path.endsWith(".das") || path.endsWith(".ncHeader")) {
+        val id = path.substring(path.lastIndexOf('/') + 1)
+        val local = new LocalErddapServer(dir.toString)
+        val body =
+          if (id.endsWith(".das")) local.dasText(id.stripSuffix(".das"))
+          else s"netcdf x {\ndimensions:\n\trow = ${
+            local.rowCount(id.stripSuffix(".ncHeader"))} ;\n}\n"
+        val bytes = body.getBytes("UTF-8")
+        ex.sendResponseHeaders(200, bytes.length)
+        ex.getResponseBody.write(bytes); ex.close()
+      } else {
+        dataHits.incrementAndGet()
+        ex.sendResponseHeaders(503, -1); ex.close()
+      }
+    })
+    // collect, not count: a bare count() is answered from the ncHeader
+    // by the aggregate pushdown and never reads data
+    val err = intercept[Exception] {
+      spark.read.format("erddap")
+        .option("dataDir", s"$base/down")
+        .option("dataset", "buoy1").load().collect()
+    }
+    assert(err.toString.contains("503") ||
+      Option(err.getCause).exists(_.toString.contains("503")), err)
+    assert(dataHits.get() == 3)
+  }
+
   test("compiled URLs are rebased onto the endpoint (server option independent)") {
     // the default server prefix "https://local/erddap/tabledap/" must not
     // leak into the socket request — only the endpoint matters
