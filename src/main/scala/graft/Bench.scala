@@ -21,28 +21,14 @@ object Bench {
   /** FROZEN round-over-round comparability subset — the full-set total
     * and throughput shift every round as the gate mix grows (r9 2.03 →
     * r10 1.45 q/s was mix shift, not drift), so regressions are
-    * invisible in them. This 50-gate list was frozen at round 11 and
-    * MUST NOT be edited: comparability across rounds is its whole
-    * point. Feeds the summary's `total_frozen`; `frozen_n` counts the
-    * names that ran, so a missing or failed one shows instead of
-    * silently shrinking the denominator. */
-  val frozenGates: Seq[String] = Seq(
-    "a1_time_extent", "anchor_texts", "ann_ivf_topk", "ann_pq_topk",
-    "attribution_last_click", "bm25_topk", "bpe_token_ids",
-    "chunk_documents", "corpus_report", "decontam_fuzzy",
-    "dedup_embedding_clusters", "dedup_keep_best",
-    "dedup_minhash_oracle", "dedup_spans", "domain_cap",
-    "e3_union_chunks", "f10_numeric_prefix", "f14_json_flatten",
-    "f1_decode_datetime", "f2_epoch_clamp", "f6_extraction",
-    "f8_truncate_pad", "funnel_users", "heavy_hitters",
-    "j10_bloom_semi", "j4_semi_join", "j9_range_join", "kmv_distinct",
-    "labelprop_stable", "mix_temperature", "mm_audio_g711",
-    "mm_decode_image", "mm_image_dhash", "mm_image_resize",
-    "mm_mjpeg_sample", "mm_png_palette", "mm_router", "mm_video_stats",
-    "o4_latest", "p8_null_prune", "pack_windows", "pca_covariance",
-    "q1_agg", "reciprocity_links", "robots_sitemaps", "s2_catalog_scan",
-    "s8_griddap_scan_int16", "sample_token_budget", "session_paths",
-    "span_corrupt")
+    * invisible in them. This 50-gate set (the `frozen` gates of
+    * [[SparkEntry.gates]]) was frozen at round 11 and MUST NOT be
+    * edited: comparability across rounds is its whole point. Feeds the
+    * summary's `total_frozen`; `frozen_n` counts the names that ran, so
+    * a missing or failed one shows instead of silently shrinking the
+    * denominator. */
+  lazy val frozenGates: Seq[String] =
+    SparkEntry.gates.collect { case (n, g) if g.frozen => n }.toSeq.sorted
 
   type Gate = (SparkSession, String) => DataFrame
 

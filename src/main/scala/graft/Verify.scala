@@ -1,7 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each [[SparkEntry.gates]] result →
+  * parquet, plus its oracle SQL in oracle_sql.json (keys sorted, so two
+  * dumps compare byte for byte), for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -11,11 +12,11 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val spark = Harness.session(Harness.envCores)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    SparkEntry.gates
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+      .foreach { case (name, gate) =>
         Harness.runGate(spark, name, "verify") {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          gate.run(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
         }
       }
@@ -31,8 +32,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.gates.toSeq.sortBy(_._1)
+      .map { case (k, gate) => s"${q(k)}: ${q(gate.oracle)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -81,13 +81,6 @@ class Portal(root: String) {
   def findByTitle(title: String): Option[Item] =
     items.values.find(_.title == title)
 
-  /** F23 — instance alias of [[Portal.itemProperties]] (kept so a
-    * portal handle exposes the whole item-shaping surface). */
-  def itemProperties(datasetId: String, title: String, server: String,
-      attributes: Seq[String], isNrt: Boolean,
-      ncGlobal: Map[String, String]): (String, Seq[String], Map[String, String]) =
-    Portal.itemProperties(datasetId, title, server, attributes, isNrt, ncGlobal)
-
   /** K5 — add with 409-style conflict retry: existing title → `_1`,
     * `_2`, … up to `maxAttempts`, then fail (reference raises). */
   def addOrRetry(title: String, itemType: String, tags: Seq[String],

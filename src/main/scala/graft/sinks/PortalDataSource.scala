@@ -49,7 +49,9 @@ class PortalDataSource extends TableProvider with DataSourceRegister {
   override def supportsExternalMetadata(): Boolean = true
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val title = options.get("item")
-    PortalDataSource.transportFor(options) match {
+    def opt(key: String) = Option(options.get(key))
+    PortalDataSource.transportFor(opt("root"), opt("portalUrl"),
+      opt("username").getOrElse(""), opt("password").getOrElse("")) match {
       case Some(t) if title != null =>
         t.findByTitle(title)
           .flatMap(i => t.props(i.id).get("schema"))
@@ -77,13 +79,9 @@ object PortalDataSource {
     mix(xor) ^ mix(sum + 0x9E3779B97F4A7C15L) ^ mix(count)
   }
 
-  /** Scheme-selected transport from reader/writer options: `portalUrl`
-    * set → live REST backend; else the local model at `root`. */
-  def transportFor(options: CaseInsensitiveStringMap): Option[PortalTransport] =
-    transportFor(Option(options.get("root")), Option(options.get("portalUrl")),
-      Option(options.get("username")).getOrElse(""),
-      Option(options.get("password")).getOrElse(""))
-
+  /** The one transport selection for the reader and the writer:
+    * `portalUrl` set → live REST backend; else the local model at
+    * `root`. */
   def transportFor(root: Option[String], portalUrl: Option[String],
       username: String, password: String): Option[PortalTransport] =
     portalUrl.map(u => PortalTransport(u, username, password))
@@ -451,24 +449,23 @@ class PortalBatchWrite(root: String, title: String, tags: Seq[String],
 
   private val stagingDir = s"$root/.staging-${UUID.randomUUID()}"
 
-  /** All control-plane (and slot data-plane) calls go through the ONE
-    * portal seam; `portalUrl` selects the live REST backend while the
-    * executors keep staging to the local filesystem — pointing the sink
-    * at a real portal is an option change, not a rewrite. */
-  private def transport: PortalTransport =
-    portalUrl.map(u => PortalTransport(u, username, password))
-      .getOrElse(PortalTransport(root))
-
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new PortalWriterFactory(stagingDir, schema)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val msgs = messages.map(_.asInstanceOf[PortalCommitMessage])
-    val t = transport
+    // All control-plane (and slot data-plane) calls go through the ONE
+    // portal seam; `portalUrl` selects the live REST backend while the
+    // executors keep staging to the local filesystem — pointing the sink
+    // at a real portal is an option change, not a rewrite.
+    val t = PortalDataSource.transportFor(Some(root), portalUrl, username, password).get
     val item = t.findByTitle(title).getOrElse(
       t.addOrRetry(title, "Feature Service", Seq("erddap2agol") ++ tags))
+    // one property read serves the refusal tiers, the change check and
+    // the slot flip
+    val props = t.props(item.id)
     // refusal tiers run before ANY portal mutation (OverwriteFS.py:2093-2106)
-    try PortalTransport.verifyOverwrite(t, item.id)
+    try PortalTransport.verifyOverwrite(t, item.id, props)
     catch { case e: Throwable => deleteRecursively(Path.of(stagingDir)); throw e }
 
     // distributed change fingerprint from the per-task moments
@@ -477,13 +474,16 @@ class PortalBatchWrite(root: String, title: String, tags: Seq[String],
     val rows = msgs.foldLeft(0L)(_ + _.rows)
     val fp = PortalDataSource.combineMoments(xor, sum, rows).toString
 
-    if (ifChanged && t.props(item.id).get("fingerprint").contains(fp)) {
-      deleteRecursively(Path.of(stagingDir)) // unchanged → no-op publish
+    if (ifChanged && props.get("fingerprint").contains(fp)) {
+      // unchanged → no-op publish that still touches the item, as the
+      // reference's no-op overwrite does (OverwriteFS.py:2182-2196)
+      deleteRecursively(Path.of(stagingDir))
+      t.touch(item.id, System.currentTimeMillis())
       return
     }
 
     val backup = t.backupProperties(item.id)
-    val active = t.props(item.id).getOrElse("activeSlot", "b")
+    val active = props.getOrElse("activeSlot", "b")
     val inactive = if (active == "a") "b" else "a"
     t.replaceData(item.id, inactive,
       msgs.filter(_.path.nonEmpty).map(m => Path.of(m.path)).toSeq)

@@ -173,9 +173,14 @@ object PortalTransport {
   /** Overwrite refusal tiers (`OverwriteFS.py:2093-2106`), expressed
     * over the seam so both backends refuse identically: a dependent
     * view with change tracking enabled, or a dependent WFS service,
-    * blocks the overwrite with the reference's exact outcomes. */
-  def verifyOverwrite(t: PortalTransport, itemId: String): Unit = {
-    if (t.props(itemId).get("hasChangeTrackingEnabledViews").contains("true"))
+    * blocks the overwrite with the reference's exact outcomes. `props`
+    * is the item's property map, when the caller has already read it. */
+  def verifyOverwrite(t: PortalTransport, itemId: String): Unit =
+    verifyOverwrite(t, itemId, t.props(itemId))
+
+  def verifyOverwrite(t: PortalTransport, itemId: String,
+      props: Map[String, String]): Unit = {
+    if (props.get("hasChangeTrackingEnabledViews").contains("true"))
       throw new IllegalStateException(
         "Overwrite on Service is NOT allowed, a dependent View or Service " +
           "has Change Tracking Enabled!")

@@ -1,7 +1,13 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions, SpecExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
 class GraftExtensionsSpec extends AnyFunSuite {
 
@@ -111,5 +117,28 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(row.getString(3) == "audio") // 7 % 3 == 1
     assert(row.getInt(4) == "payload bytes".length)
     assert(row.isNullAt(5))
+  }
+
+  test("builder-time extensions and register expose the same 48 functions") {
+    val builtin = FunctionRegistry.builtin.listFunction().map(_.funcName).toSet
+    val ext = new SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    val injected = SpecExtensions.functionRegistry(ext)
+    val viaBuilder = injected.listFunction().map(_.funcName).toSet -- builtin
+    val fresh = graft.operators.SparkTestSession.spark.newSession()
+    GraftExtensions.register(fresh)
+    val viaRegister =
+      fresh.sessionState.functionRegistry.listFunction().map(_.funcName).toSet -- builtin
+    assert(viaBuilder.size == 48)
+    assert(viaBuilder == viaRegister,
+      s"builder only: ${viaBuilder -- viaRegister}; register only: ${viaRegister -- viaBuilder}")
+    // html_links resolves and runs through the builder-time registry
+    val links = injected.lookupFunction(FunctionIdentifier("html_links"),
+      Seq(Literal("""<a href="../b?x=1#f">b</a> <a href='mailto:m@x'>m</a>"""),
+        Literal("http://ex.com/a/c.html"))).eval().asInstanceOf[ArrayData]
+    assert(links.toSeq[UTF8String](StringType).map(_.toString) == Seq("http://ex.com/b?x=1"))
+    // and through SQL on the register path
+    assert(fresh.sql("SELECT html_links('<a href=\"/z\">z</a>', 'http://ex.com/a/')")
+      .head().getSeq[String](0) == Seq("http://ex.com/z"))
   }
 }

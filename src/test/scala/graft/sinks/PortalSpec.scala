@@ -13,8 +13,7 @@ class PortalSpec extends AnyFunSuite {
     java.nio.file.Files.createTempDirectory("portal").toString)
 
   test("item properties: tags + snippet composed from NC_GLOBAL") {
-    val p = newPortal()
-    val (title, tags, props) = p.itemProperties("gcoos_42G01", "Buoy 42G01",
+    val (title, tags, props) = Portal.itemProperties("gcoos_42G01", "Buoy 42G01",
       "https://erddap2.gcoos.org/erddap/tabledap/",
       Seq("time", "latitude"), isNrt = true,
       Map("institution" -> "GCOOS", "summary" -> "Buoy observations",

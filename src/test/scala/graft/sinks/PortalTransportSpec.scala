@@ -184,6 +184,40 @@ class PortalTransportSpec extends AnyFunSuite with FakeAgolServers {
       == Seq("x", "y"))
   }
 
+  /** Publishes the same rows twice through the DSv2 sink, backdating the
+    * item's touch time in between: the second commit is an unchanged
+    * no-op that must still touch the item and leave its slot pointer and
+    * fingerprint alone (OverwriteFS.py:2182-2196). */
+  private def unchangedRepublishTouches(portal: Portal,
+      options: Map[String, String]): Unit = {
+    import spark.implicits._
+    def publish(): Unit = Seq((1, "x"), (2, "y")).toDF("id", "v").repartition(1)
+      .write.format("portal").options(options).mode("append").save()
+    publish()
+    val id = portal.findByTitle(options("item")).get.id
+    portal.touch(portal.itemById(id), 1L)
+    val before = portal.itemById(id).serviceProps
+    publish()
+    val after = portal.itemById(id)
+    assert(after.lastTouched > 1L)
+    assert(after.serviceProps("activeSlot") == before("activeSlot"))
+    assert(after.serviceProps("fingerprint") == before("fingerprint"))
+  }
+
+  test("[local] DSv2 sink: an unchanged republish still touches the item") {
+    val root = java.nio.file.Files.createTempDirectory("pt_noop_local").toString
+    unchangedRepublishTouches(Portal.forRoot(root),
+      Map("root" -> root, "item" -> "noop local"))
+  }
+
+  test("[rest] DSv2 sink: an unchanged republish still touches the item") {
+    val server = startServer("pt_noop_rest")
+    val root = java.nio.file.Files.createTempDirectory("pt_noop_stage").toString
+    unchangedRepublishTouches(server.portal, Map("root" -> root,
+      "item" -> "noop rest", "portalUrl" -> server.base,
+      "username" -> "gcoos", "password" -> "fixture-pass"))
+  }
+
   test("write→read round trip across A/B slot flips, local backend") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("pt_rt_local").toString
