@@ -2,7 +2,11 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit, try_to_timestamp}
+
 import graft.erddap._
+import graft.operators.Relational
 
 /** Runnable demo of the ERDDAP plan pipeline (SURVEY.md §3.1) against
   * bundled fixtures: catalog scan/search/recency → DAS parse → QC
@@ -25,12 +29,14 @@ object ErddapPlanDemo {
     }
 
     val cat = Catalog.fromTableJson(spark, resourceToTmp("catalog.json"))
-    println("scan tabledap: " + Catalog.scan(cat, "tabledap")
-      .select("datasetID").collect().map(_.getString(0)).mkString(","))
-    println("search 'widget': " + Catalog.search(cat, "WIDGET")
-      .select("datasetID").collect().map(_.getString(0)).mkString(","))
-    println("recent 7d: " + Catalog.recent(cat, 7)
-      .select("datasetID").collect().map(_.getString(0)).sorted.mkString(","))
+    def ids(df: DataFrame): String =
+      df.select("datasetID").collect().map(_.getString(0)).sorted.mkString(",")
+    println("scan tabledap: " + ids(Relational.catalogScan(cat, "datasetID", "tabledap")))
+    println("search 'widget': " + ids(Relational.textSearch(cat, "title", "WIDGET")))
+    // catalog maxTime may be an EMPTY string (FIXTURES.md §1): ANSI cast
+    // would throw, try_to_timestamp maps it to null and the window drops it
+    val timed = cat.withColumn("maxTs", try_to_timestamp(col("maxTime")))
+    println("recent 7d: " + ids(Relational.recentWindow(timed, "maxTs", 7)))
 
     val das = Das.parse(Files.readString(Path.of(resourceToTmp("gcoos_42G01.das"))))
     val sel = AttributePolicy.actualAttributes(das)
@@ -82,8 +88,7 @@ object ErddapPlanDemo {
       .option("das", dataDir.resolve("buoy1.das").toString)
       .option("chunkSize", "25")
       .load()
-      .filter(org.apache.spark.sql.functions.col("time") >=
-        org.apache.spark.sql.functions.lit("2024-06-02 00:00:00").cast("timestamp"))
+      .filter(col("time") >= lit("2024-06-02 00:00:00").cast("timestamp"))
       .select("time", "sea_surface_temperature_0")
     println("connector rows: " + df.count() +
       " partitions: " + df.rdd.getNumPartitions)

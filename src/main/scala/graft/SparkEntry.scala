@@ -1,9 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.{AudioCodec, Geometry, GifCodec, HtmlOps, ImageCodec, Mojibake, RobotsOps, Sitemap, TiffCodec, VideoCodec, WarcCodec}
+import graft.functions.Extraction.{Add, Concat, Length, Mult, Offset, Start, pipeline}
 import graft.operators.{Dedup, EventAnalytics, Glider, LinkGraph, Multimodal, Relational, Similarity, Sketches, Spatial, TextAnalysis}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -545,30 +547,8 @@ object SparkEntry {
       // streaming anomaly = the anomaly_hours formula over t1's emitted
       // (watermark-closed) window set — stats and scores both restricted
       // to hour + 2h <= max ts
-      oracle = """WITH hourly AS (
-        |  SELECT date_trunc('hour', ts) AS hour, event_type,
-        |    count(*) AS n
-        |  FROM events
-        |  WHERE date_trunc('hour', ts) + INTERVAL 2 HOUR
-        |    <= (SELECT date_trunc('microsecond', max(ts)) FROM events)
-        |  GROUP BY 1, 2),
-        | st AS (
-        |  SELECT event_type, count(*) AS h, sum(n) AS s,
-        |    sum(n*n) AS s2
-        |  FROM hourly GROUP BY 1),
-        | zs AS (
-        |  SELECT hr.hour, hr.event_type, hr.n,
-        |    CASE WHEN st.s2::DOUBLE/st.h
-        |              - (st.s::DOUBLE/st.h)*(st.s::DOUBLE/st.h) <= 0
-        |         THEN 0.0
-        |         ELSE (hr.n - st.s::DOUBLE/st.h) /
-        |              sqrt(st.s2::DOUBLE/st.h
-        |                   - (st.s::DOUBLE/st.h)*(st.s::DOUBLE/st.h))
-        |    END AS z
-        |  FROM hourly hr JOIN st ON hr.event_type = st.event_type)
-        |SELECT hour, event_type, n, round(z, 6) AS z,
-        |  abs(z) >= 2.0 AS is_anomaly
-        |FROM zs""".stripMargin),
+      oracle = anomalyOracleSql(" WHERE date_trunc('hour', ts) + INTERVAL 2 HOUR" +
+        " <= (SELECT date_trunc('microsecond', max(ts)) FROM events)")),
 
     // ---- T8 streaming incremental dedup: new docs stream in, the
     //      portable-minhash signature + banding run STATELESS, and a
@@ -843,19 +823,7 @@ object SparkEntry {
       // the funnel's conditional-min chain unrolled: s1 = earliest 'view'
       // per user; s2 = earliest 'click' after s1 within the 7-day window
       // of s1; s3 = earliest 'purchase' after s2 within the same window
-      oracle = """WITH s1 AS (
-        |  SELECT user_id, min(epoch_us(ts)) AS t1 FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        | s2 AS (
-        |  SELECT e.user_id, min(s1.t1) AS t1, min(epoch_us(e.ts)) AS t
-        |  FROM events e JOIN s1 ON e.user_id = s1.user_id
-        |  WHERE e.event_type = 'click' AND epoch_us(e.ts) > s1.t1
-        |    AND epoch_us(e.ts) <= s1.t1 + 604800000000 GROUP BY 1),
-        | s3 AS (
-        |  SELECT e.user_id, min(epoch_us(e.ts)) AS t
-        |  FROM events e JOIN s2 ON e.user_id = s2.user_id
-        |  WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > s2.t
-        |    AND epoch_us(e.ts) <= s2.t1 + 604800000000 GROUP BY 1)
+      oracle = s"""WITH ${funnelCtes()}
         |SELECT CAST(1 AS BIGINT) AS step, 'view' AS step_name,
         |       count(*) AS users FROM s1
         |UNION ALL SELECT 2, 'click', count(*) FROM s2
@@ -866,19 +834,7 @@ object SparkEntry {
       EventAnalytics.funnelUsers(t(s, dir, "events"), "user_id", "ts",
         "event_type", Seq("view", "click", "purchase"),
         windowSeconds = 7 * 86400L),
-      oracle = """WITH s1 AS (
-        |  SELECT user_id, min(epoch_us(ts)) AS t1 FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        | s2 AS (
-        |  SELECT e.user_id, min(s1.t1) AS t1, min(epoch_us(e.ts)) AS t
-        |  FROM events e JOIN s1 ON e.user_id = s1.user_id
-        |  WHERE e.event_type = 'click' AND epoch_us(e.ts) > s1.t1
-        |    AND epoch_us(e.ts) <= s1.t1 + 604800000000 GROUP BY 1),
-        | s3 AS (
-        |  SELECT e.user_id, min(epoch_us(e.ts)) AS t
-        |  FROM events e JOIN s2 ON e.user_id = s2.user_id
-        |  WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > s2.t
-        |    AND epoch_us(e.ts) <= s2.t1 + 604800000000 GROUP BY 1)
+      oracle = s"""WITH ${funnelCtes()}
         |SELECT user_id, CAST(max(step) AS BIGINT) AS steps_completed FROM (
         |  SELECT user_id, 1 AS step FROM s1
         |  UNION ALL SELECT user_id, 2 FROM s2
@@ -893,19 +849,7 @@ object SparkEntry {
       // the funnel chain with t1 carried through every step: latency is
       // (step time − step-1 time), exact µs integers until the final
       // sum/users/1e6 division
-      oracle = """WITH s1 AS (
-        |  SELECT user_id, min(epoch_us(ts)) AS t1 FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        | s2 AS (
-        |  SELECT e.user_id, min(s1.t1) AS t1, min(epoch_us(e.ts)) AS t
-        |  FROM events e JOIN s1 ON e.user_id = s1.user_id
-        |  WHERE e.event_type = 'click' AND epoch_us(e.ts) > s1.t1
-        |    AND epoch_us(e.ts) <= s1.t1 + 604800000000 GROUP BY 1),
-        | s3 AS (
-        |  SELECT e.user_id, min(s2.t1) AS t1, min(epoch_us(e.ts)) AS t
-        |  FROM events e JOIN s2 ON e.user_id = s2.user_id
-        |  WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > s2.t
-        |    AND epoch_us(e.ts) <= s2.t1 + 604800000000 GROUP BY 1)
+      oracle = s"""WITH ${funnelCtes("min(s2.t1) AS t1, ")}
         |SELECT CAST(2 AS BIGINT) AS step, 'click' AS step_name,
         |  count(*) AS users,
         |  round(sum(t - t1)::DOUBLE / count(*) / 1000000.0, 6)
@@ -1137,14 +1081,7 @@ object SparkEntry {
     "rolling_drift" -> Gate((s, dir) =>
       EventAnalytics.rollingDrift(t(s, dir, "events"), "ts",
         "event_type", windowHours = 6, threshold = 3.0),
-      oracle = """WITH hourly AS (
-        |  SELECT date_trunc('hour', ts) AS hour, event_type,
-        |    count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        | st AS (
-        |  SELECT event_type, count(*) AS h, sum(n) AS s,
-        |    sum(n*n) AS s2
-        |  FROM hourly GROUP BY 1),
+      oracle = s"""WITH ${hourlyCtes()},
         | rolled AS (
         |  SELECT hour, event_type, n,
         |    sum(n) OVER w AS rsum, count(*) OVER w AS rn
@@ -1278,27 +1215,7 @@ object SparkEntry {
     "anomaly_hours" -> Gate((s, dir) =>
       EventAnalytics.hourlyAnomalies(t(s, dir, "events"), "ts",
         "event_type", threshold = 2.0),
-      oracle = """WITH hourly AS (
-        |  SELECT date_trunc('hour', ts) AS hour, event_type,
-        |    count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        | st AS (
-        |  SELECT event_type, count(*) AS h, sum(n) AS s,
-        |    sum(n*n) AS s2
-        |  FROM hourly GROUP BY 1),
-        | zs AS (
-        |  SELECT hr.hour, hr.event_type, hr.n,
-        |    CASE WHEN st.s2::DOUBLE/st.h
-        |              - (st.s::DOUBLE/st.h)*(st.s::DOUBLE/st.h) <= 0
-        |         THEN 0.0
-        |         ELSE (hr.n - st.s::DOUBLE/st.h) /
-        |              sqrt(st.s2::DOUBLE/st.h
-        |                   - (st.s::DOUBLE/st.h)*(st.s::DOUBLE/st.h))
-        |    END AS z
-        |  FROM hourly hr JOIN st ON hr.event_type = st.event_type)
-        |SELECT hour, event_type, n, round(z, 6) AS z,
-        |  abs(z) >= 2.0 AS is_anomaly
-        |FROM zs""".stripMargin),
+      oracle = anomalyOracleSql()),
 
     // ---- event analytics: top-20 session paths (gap 600 s, first 5
     //      event types per session) ----
@@ -1424,7 +1341,6 @@ object SparkEntry {
 
     // ---- F6 extraction DSL pipeline ----
     "f6_extraction_dsl" -> Gate((s, dir) => {
-      import graft.functions.Extraction._
       t(s, dir, "part").select(col("p_partkey"),
         pipeline(col("p_name"), Seq(Offset(2), Length(4))).as("mid"),
         pipeline(col("p_retailprice").cast("string"),
@@ -1447,7 +1363,7 @@ object SparkEntry {
         col("value").as("x"),
         get_json_object(col("props"), "$.k").cast("double").as("y"))
       pts.select(col("event_id"),
-        graft.functions.Geometry.featureJson(
+        Geometry.featureJson(
           struct(col("event_id"), col("user_id")),
           struct(lit("Point").as("type"),
             array(col("x"), col("y")).as("coordinates"))).as("feature"))
@@ -1876,7 +1792,6 @@ object SparkEntry {
     //      canonicalize (F20), then >1 part promotes to Multi<Type>
     //      with the deeper coordinate nesting (F19) ----
     "f19_geometry_promote" -> Gate((s, dir) => {
-      import graft.functions.Geometry
       val d = col("doc_id").cast("double")
       val part1 = array(array(d, lit(0.5)), array(d + 1.0, lit(2.25)))
       val part2 = array(array(d + 2.0, lit(3.5)), array(d + 3.0, lit(4.75)))
@@ -2115,41 +2030,9 @@ object SparkEntry {
 
     // ---- dedup: connected components → keep-one-per-cluster ----
     "dedup_clusters" -> Gate((s, dir) => {
-      val cust = t(s, dir, "customer")
-      // deterministic near-dup graph both engines can derive: same-nation
-      // customers with custkey gap ≤ 3 are "duplicates". Pair generation
-      // is BANDED on custkey div 4 (gap ≤ 3 ⇒ the partner is in the same
-      // or the next block), so both joins are equi-joins on
-      // (nation, block) — the naive same-nation join compares every
-      // custkey pair within a nation, O(n²/nations), and was measured
-      // 25× the whole-query cost at sf1. Identical pair set; the two
-      // block joins are disjoint by construction.
-      def side(idc: String) = cust.select(col("c_custkey").as(idc),
-        col("c_nationkey").as("n"), expr("c_custkey div 4").as("blk"))
-      val a = side("id1")
-      val sameBlk = a.join(side("id2"), Seq("n", "blk"))
-      val nextBlk = a.withColumn("blk", col("blk") + 1)
-        .join(side("id2"), Seq("n", "blk"))
-      val pairs = sameBlk.unionByName(nextBlk)
-        .filter(col("id1") < col("id2") && col("id2") - col("id1") <= 3)
-        .select("id1", "id2")
-      Dedup.connectedComponents(pairs)
+      Dedup.connectedComponents(custPairs(t(s, dir, "customer")))
     }, oracle =
-      """WITH pairs AS (
-        |  SELECT a.c_custkey AS id1, b.c_custkey AS id2
-        |  FROM customer a JOIN customer b
-        |    ON a.c_nationkey = b.c_nationkey
-        |   AND a.c_custkey < b.c_custkey
-        |   AND b.c_custkey - a.c_custkey <= 3),
-        |edges AS (
-        |  SELECT id1 AS a, id2 AS b FROM pairs
-        |  UNION SELECT id2, id1 FROM pairs),
-        |walk AS (
-        |  WITH RECURSIVE r(id, lbl) AS (
-        |    SELECT a, a FROM edges
-        |    UNION
-        |    SELECT e.b, r.lbl FROM r JOIN edges e ON r.id = e.a)
-        |  SELECT * FROM r)
+      s"""WITH $custWalkCtes
         |SELECT id, min(lbl) AS cluster FROM walk GROUP BY id""".stripMargin),
 
     // ---- dedup: QUALITY-AWARE keep — highest c_acctbal per duplicate
@@ -2157,35 +2040,13 @@ object SparkEntry {
     //      policy; same banded pair graph as dedup_clusters ----
     "dedup_keep_best" -> Gate((s, dir) => {
       val cust = t(s, dir, "customer")
-      def side(idc: String) = cust.select(col("c_custkey").as(idc),
-        col("c_nationkey").as("n"), expr("c_custkey div 4").as("blk"))
-      val a = side("id1")
-      val sameBlk = a.join(side("id2"), Seq("n", "blk"))
-      val nextBlk = a.withColumn("blk", col("blk") + 1)
-        .join(side("id2"), Seq("n", "blk"))
-      val pairs = sameBlk.unionByName(nextBlk)
-        .filter(col("id1") < col("id2") && col("id2") - col("id1") <= 3)
-        .select("id1", "id2")
+      val pairs = custPairs(cust)
       Dedup.dedupByClustersBest(
         cust.select(col("c_custkey"), col("c_acctbal")),
         "c_custkey", pairs, "c_acctbal")
     }, oracle =
       // quality-aware keep: same components, arg-max by (acctbal, -key)
-      """WITH pairs AS (
-        |  SELECT a.c_custkey AS id1, b.c_custkey AS id2
-        |  FROM customer a JOIN customer b
-        |    ON a.c_nationkey = b.c_nationkey
-        |   AND a.c_custkey < b.c_custkey
-        |   AND b.c_custkey - a.c_custkey <= 3),
-        |edges AS (
-        |  SELECT id1 AS a, id2 AS b FROM pairs
-        |  UNION SELECT id2, id1 FROM pairs),
-        |walk AS (
-        |  WITH RECURSIVE r(id, lbl) AS (
-        |    SELECT a, a FROM edges
-        |    UNION
-        |    SELECT e.b, r.lbl FROM r JOIN edges e ON r.id = e.a)
-        |  SELECT * FROM r),
+      s"""WITH $custWalkCtes,
         |lab AS (SELECT id, min(lbl) AS cluster FROM walk GROUP BY id),
         |win AS (
         |  SELECT l.cluster, c.c_custkey,
@@ -2200,36 +2061,14 @@ object SparkEntry {
     //      copies never straddle train/test ----
     "split_by_cluster" -> Gate((s, dir) => {
       val cust = t(s, dir, "customer")
-      def side(idc: String) = cust.select(col("c_custkey").as(idc),
-        col("c_nationkey").as("n"), expr("c_custkey div 4").as("blk"))
-      val a = side("id1")
-      val sameBlk = a.join(side("id2"), Seq("n", "blk"))
-      val nextBlk = a.withColumn("blk", col("blk") + 1)
-        .join(side("id2"), Seq("n", "blk"))
-      val pairs = sameBlk.unionByName(nextBlk)
-        .filter(col("id1") < col("id2") && col("id2") - col("id1") <= 3)
-        .select("id1", "id2")
+      val pairs = custPairs(cust)
       Dedup.splitByCluster(cust.select(col("c_custkey"), col("c_nationkey")),
         "c_custkey", pairs, testPct = 20)
     }, oracle =
       // same chain pair graph + recursive-CTE components as
       // dedup_clusters, then the sampleByHash md5 bucket of the cluster
       // representative decides the side
-      """WITH pairs AS (
-        |  SELECT a.c_custkey AS id1, b.c_custkey AS id2
-        |  FROM customer a JOIN customer b
-        |    ON a.c_nationkey = b.c_nationkey
-        |   AND a.c_custkey < b.c_custkey
-        |   AND b.c_custkey - a.c_custkey <= 3),
-        |edges AS (
-        |  SELECT id1 AS a, id2 AS b FROM pairs
-        |  UNION SELECT id2, id1 FROM pairs),
-        |walk AS (
-        |  WITH RECURSIVE r(id, lbl) AS (
-        |    SELECT a, a FROM edges
-        |    UNION
-        |    SELECT e.b, r.lbl FROM r JOIN edges e ON r.id = e.a)
-        |  SELECT * FROM r),
+      s"""WITH $custWalkCtes,
         |labels AS (SELECT id, min(lbl) AS cluster FROM walk GROUP BY id)
         |SELECT c_custkey, c_nationkey,
         |  CASE WHEN ('0x' || substr(md5(CAST(coalesce(cluster, c_custkey)
@@ -2401,22 +2240,13 @@ object SparkEntry {
         .select(col("qid"), col("vec_id"), round(col("cosine"), 6).as("cos"),
           col("rank"))
     }, oracle =
-      """WITH q AS (
+      s"""WITH q AS (
         |  SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
         |  FROM embeddings WHERE vec_id < 5),
         | c AS (
         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         |  FROM embeddings WHERE vec_id >= 5),
-        | scored AS (
-        |  SELECT q.qid, c.vec_id,
-        |    CASE WHEN sqrt(list_sum(list_transform(c.v, x -> x*x))) *
-        |              sqrt(list_sum(list_transform(q.qv, x -> x*x))) = 0
-        |         THEN 0.0
-        |         ELSE list_sum(list_transform(list_zip(c.v, q.qv), p -> p[1]*p[2])) /
-        |              (sqrt(list_sum(list_transform(c.v, x -> x*x))) *
-        |               sqrt(list_sum(list_transform(q.qv, x -> x*x))))
-        |    END AS cos
-        |  FROM c CROSS JOIN q),
+        | $knnScoredCte,
         | ranked AS (
         |  SELECT qid, vec_id, cos, row_number() OVER (
         |    PARTITION BY qid ORDER BY cos DESC, vec_id) AS rn
@@ -2538,22 +2368,13 @@ object SparkEntry {
     }, oracle =
       // the same knn run at k=10, scored against label-match qrels with
       // the identical ascending-summation ideal-DCG table
-      """WITH q AS (
+      s"""WITH q AS (
         |  SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv, label
         |  FROM embeddings WHERE vec_id < 5),
         | c AS (
         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label
         |  FROM embeddings WHERE vec_id >= 5),
-        | scored AS (
-        |  SELECT q.qid, c.vec_id,
-        |    CASE WHEN sqrt(list_sum(list_transform(c.v, x -> x*x))) *
-        |              sqrt(list_sum(list_transform(q.qv, x -> x*x))) = 0
-        |         THEN 0.0
-        |         ELSE list_sum(list_transform(list_zip(c.v, q.qv), p -> p[1]*p[2])) /
-        |              (sqrt(list_sum(list_transform(c.v, x -> x*x))) *
-        |               sqrt(list_sum(list_transform(q.qv, x -> x*x))))
-        |    END AS cos
-        |  FROM c CROSS JOIN q),
+        | $knnScoredCte,
         | ranked AS (
         |  SELECT qid, vec_id, row_number() OVER (
         |    PARTITION BY qid ORDER BY cos DESC, vec_id) AS rn
@@ -2741,8 +2562,8 @@ object SparkEntry {
     "mm_decode_image" -> Gate((s, dir) => {
       val docs = t(s, dir, "documents")
       docs.select(col("doc_id"),
-          graft.functions.ImageCodec.image_meta(
-            graft.functions.ImageCodec.image_synth(
+          ImageCodec.image_meta(
+            ImageCodec.image_synth(
               col("doc_id"), col("text"))).as("m"))
         .select(col("doc_id"), col("m.format").as("format"),
           col("m.width").as("width"), col("m.height").as("height"),
@@ -2787,18 +2608,12 @@ object SparkEntry {
     //      nearest-neighbor resize it to 16×9 for real, then decode the
     //      resized pixels back to exact integer channel sums. The
     //      oracle recomputes every resized pixel analytically ----
-    "mm_image_resize" -> Gate((s, dir) => {
-      import graft.functions.ImageCodec
-      t(s, dir, "documents").select(col("doc_id"),
-          ImageCodec.image_pixel_stats(
-            ImageCodec.image_resize_nn(
-              ImageCodec.image_synth_bmp(col("doc_id"), col("text")),
-              lit(16), lit(9))).as("st"))
-        .select(col("doc_id"), col("st.width").as("width"),
-          col("st.height").as("height"), col("st.n_px").as("n_px"),
-          col("st.sum_r").as("sum_r"), col("st.sum_g").as("sum_g"),
-          col("st.sum_b").as("sum_b"))
-    }, oracle =
+    "mm_image_resize" -> Gate((s, dir) =>
+      imageStats(s, dir,
+        ImageCodec.image_resize_nn(
+          ImageCodec.image_synth_bmp(col("doc_id"), col("text")),
+          lit(16), lit(9))),
+      oracle =
       """WITH dims AS (
         |  SELECT doc_id,
         |         octet_length(encode(text)) % 37 + 4 AS w,
@@ -2832,7 +2647,6 @@ object SparkEntry {
     //      than-next; text length pinned ≥ 45 so every clip clears the
     //      65-frame floor; oracle re-pools the affine samples ----
     "mm_audio_fingerprint" -> Gate((s, dir) => {
-      import graft.functions.AudioCodec
       t(s, dir, "documents").select(col("doc_id"),
         AudioCodec.audio_fingerprint(AudioCodec.audio_synth_g711(col("doc_id"),
           expr("repeat('x', CAST(doc_id % 50 + 60 AS INT))"))).as("afp"))
@@ -2844,7 +2658,6 @@ object SparkEntry {
     //      through the shared 4×16-bit banding; synth ids fold to
     //      doc_id%6 so genuine duplicate clips exist; cap pinned 0 ----
     "mm_audio_neardup" -> Gate((s, dir) => {
-      import graft.functions.AudioCodec
       val clips = t(s, dir, "documents").filter(col("doc_id") < 300)
         .select(col("doc_id"),
           AudioCodec.audio_synth_g711(pmod(col("doc_id"), lit(6)),
@@ -2871,7 +2684,6 @@ object SparkEntry {
     //      so every synth image clears the 9×8 grid; the oracle
     //      re-pools the affine pixels in SQL and rebuilds the hash ----
     "mm_image_dhash" -> Gate((s, dir) => {
-      import graft.functions.ImageCodec
       t(s, dir, "documents").select(col("doc_id"),
         ImageCodec.image_dhash(ImageCodec.image_synth_png(col("doc_id"),
           expr("repeat('x', CAST(doc_id % 4 + 15 AS INT))"))).as("dhash"))
@@ -2885,7 +2697,6 @@ object SparkEntry {
     //      doc_id%8 so genuine duplicate images exist. Cap pinned 0
     //      for the exact oracle ----
     "mm_image_neardup" -> Gate((s, dir) => {
-      import graft.functions.ImageCodec
       val imgs = t(s, dir, "documents").filter(col("doc_id") < 300)
         .select(col("doc_id"),
           ImageCodec.image_synth_png(pmod(col("doc_id"), lit(8)),
@@ -2914,7 +2725,6 @@ object SparkEntry {
     //      length pinned to doc_id%4+24 so every synth image clears
     //      the 16×8 grid ----
     "mm_image_phash" -> Gate((s, dir) => {
-      import graft.functions.ImageCodec
       t(s, dir, "documents").select(col("doc_id"),
         ImageCodec.image_phash(ImageCodec.image_synth_png(col("doc_id"),
           expr("repeat('x', CAST(doc_id % 4 + 24 AS INT))"))).as("phash"))
@@ -2927,7 +2737,6 @@ object SparkEntry {
     //      fold to doc_id%8 so genuine duplicates exist. Cap pinned 0
     //      for the exact oracle ----
     "mm_image_neardup_phash" -> Gate((s, dir) => {
-      import graft.functions.ImageCodec
       val imgs = t(s, dir, "documents").filter(col("doc_id") < 300)
         .select(col("doc_id"),
           ImageCodec.image_synth_png(pmod(col("doc_id"), lit(8)),
@@ -2947,45 +2756,29 @@ object SparkEntry {
          |SELECT id1, id2, CAST(bit_count(xor(h1, h2)) AS BIGINT) AS hamming
          |FROM cand WHERE bit_count(xor(h1, h2)) <= 3""".stripMargin),
 
-    "mm_png_pixel_stats" -> Gate((s, dir) => {
-      import graft.functions.ImageCodec
-      t(s, dir, "documents").select(col("doc_id"),
-          ImageCodec.image_pixel_stats(
-            ImageCodec.image_synth_png(col("doc_id"), col("text"))).as("st"))
-        .select(col("doc_id"), col("st.width").as("width"),
-          col("st.height").as("height"), col("st.n_px").as("n_px"),
-          col("st.sum_r").as("sum_r"), col("st.sum_g").as("sum_g"),
-          col("st.sum_b").as("sum_b"), col("st.sum_a").as("sum_a"))
-    }, oracle =
+    "mm_png_pixel_stats" -> Gate((s, dir) =>
+      imageStats(s, dir,
+        ImageCodec.image_synth_png(col("doc_id"), col("text")), alpha = true),
+      oracle =
       // mirrors ImageCodec.synthPngPixels: sample value for channel slot c
       // is floorMod(x*(3+2c) + y*(5+2c) + id*(c+1), 256); color type
       // cycles gray/RGB/gray+alpha/RGBA by doc_id % 4. The Spark side
       // decodes REAL zlib-compressed PNG bytes; the oracle never parses a
       // byte — it recomputes the channel sums analytically.
-      """WITH dims AS (
+      s"""WITH dims AS (
         |  SELECT doc_id, ((doc_id % 4) + 4) % 4 AS cti,
         |         octet_length(encode(text)) % 29 + 4 AS w,
         |         octet_length(encode(text)) % 19 + 3 AS h
         |  FROM documents),
         | vals AS (
         |  SELECT d.doc_id, d.cti, d.w, d.h,
-        |         ((xs.x*3 + ys.y*5 + d.doc_id) % 256 + 256) % 256 AS v0,
-        |         ((xs.x*5 + ys.y*7 + d.doc_id*2) % 256 + 256) % 256 AS v1,
-        |         ((xs.x*7 + ys.y*9 + d.doc_id*3) % 256 + 256) % 256 AS v2,
-        |         ((xs.x*9 + ys.y*11 + d.doc_id*4) % 256 + 256) % 256 AS v3
+        |         ${pngSamples("xs.x", "ys.y", "d.doc_id")}
         |  FROM dims d, range(32) xs(x), range(21) ys(y)
         |  WHERE xs.x < d.w AND ys.y < d.h)
         |SELECT doc_id,
-        |  CAST(max(w) AS INTEGER) AS width,
-        |  CAST(max(h) AS INTEGER) AS height,
+        |  $maxDims,
         |  CAST(count(*) AS BIGINT) AS n_px,
-        |  CAST(sum(v0) AS BIGINT) AS sum_r,
-        |  CAST(sum(CASE WHEN cti IN (0, 2) THEN v0 ELSE v1 END) AS BIGINT)
-        |    AS sum_g,
-        |  CAST(sum(CASE WHEN cti IN (0, 2) THEN v0 ELSE v2 END) AS BIGINT)
-        |    AS sum_b,
-        |  CAST(CASE WHEN max(cti) = 2 THEN sum(v1)
-        |            WHEN max(cti) = 3 THEN sum(v3) END AS BIGINT) AS sum_a
+        |  $pngSums
         |FROM vals GROUP BY doc_id""".stripMargin),
 
     // ---- multimodal: BASELINE JPEG entropy decode — real Huffman
@@ -2995,22 +2788,15 @@ object SparkEntry {
     //      (flat quant: a constant block is one DC coefficient) and the
     //      oracle recomputes every pixel analytically, incl. the fixed
     //      floor(x+0.5) YCbCr→RGB rounding ----
-    "mm_jpeg_pixel_stats" -> Gate((s, dir) => {
-      import graft.functions.ImageCodec
-      t(s, dir, "documents").select(col("doc_id"),
-          ImageCodec.image_pixel_stats(
-            ImageCodec.image_synth_jpeg_px(col("doc_id"), col("text"))).as("st"))
-        .select(col("doc_id"), col("st.width").as("width"),
-          col("st.height").as("height"), col("st.n_px").as("n_px"),
-          col("st.sum_r").as("sum_r"), col("st.sum_g").as("sum_g"),
-          col("st.sum_b").as("sum_b"))
-    }, oracle =
+    "mm_jpeg_pixel_stats" -> Gate((s, dir) =>
+      imageStats(s, dir, ImageCodec.image_synth_jpeg_px(col("doc_id"), col("text"))),
+      oracle =
       // mirrors JpegCodec.synthJpegPixels: every 8×8 block constant
       // (value affine in blockX/blockY/id), gray vs YCbCr by id parity;
       // the YCbCr→RGB conversion uses the decoder's exact constants with
       // floor(x+0.5) rounding — the e0 suffixes force DOUBLE arithmetic
       // (a bare 1.402 is DECIMAL in DuckDB, which rounds differently)
-      """WITH dims AS (
+      s"""WITH dims AS (
         |  SELECT doc_id, ((doc_id % 2) + 2) % 2 = 0 AS gray,
         |         octet_length(encode(text)) % 39 + 8 AS w,
         |         octet_length(encode(text)) % 25 + 8 AS h
@@ -3028,20 +2814,12 @@ object SparkEntry {
         |  FROM px),
         | rgb AS (
         |  SELECT doc_id, gray, w, h, gv,
-        |    greatest(0, least(255,
-        |      CAST(floor(yv + 1.402e0*cr + 0.5e0) AS BIGINT))) AS r,
-        |    greatest(0, least(255,
-        |      CAST(floor(yv - 0.344136e0*cb - 0.714136e0*cr + 0.5e0) AS BIGINT))) AS g,
-        |    greatest(0, least(255,
-        |      CAST(floor(yv + 1.772e0*cb + 0.5e0) AS BIGINT))) AS b
+        |    $ycbcrRgb
         |  FROM blocks)
         |SELECT doc_id,
-        |  CAST(max(w) AS INTEGER) AS width,
-        |  CAST(max(h) AS INTEGER) AS height,
+        |  $maxDims,
         |  CAST(count(*) AS BIGINT) AS n_px,
-        |  CAST(sum(CASE WHEN gray THEN gv ELSE r END) AS BIGINT) AS sum_r,
-        |  CAST(sum(CASE WHEN gray THEN gv ELSE g END) AS BIGINT) AS sum_g,
-        |  CAST(sum(CASE WHEN gray THEN gv ELSE b END) AS BIGINT) AS sum_b
+        |  $grayRgbSums
         |FROM rgb GROUP BY doc_id""".stripMargin),
 
     // ---- multimodal: 4:2:0 chroma-subsampled JPEG (the layout most
@@ -3049,20 +2827,13 @@ object SparkEntry {
     //      chroma block; decode replicate-upsamples chroma. Chroma
     //      blocks live on the SUBSAMPLED grid, so the oracle indexes
     //      them by (x/16, y/16) ----
-    "mm_jpeg_420" -> Gate((s, dir) => {
-      import graft.functions.ImageCodec
-      t(s, dir, "documents").select(col("doc_id"),
-          ImageCodec.image_pixel_stats(
-            ImageCodec.image_synth_jpeg420(col("doc_id"), col("text"))).as("st"))
-        .select(col("doc_id"), col("st.width").as("width"),
-          col("st.height").as("height"), col("st.n_px").as("n_px"),
-          col("st.sum_r").as("sum_r"), col("st.sum_g").as("sum_g"),
-          col("st.sum_b").as("sum_b"))
-    }, oracle =
+    "mm_jpeg_420" -> Gate((s, dir) =>
+      imageStats(s, dir, ImageCodec.image_synth_jpeg420(col("doc_id"), col("text"))),
+      oracle =
       // mirrors JpegCodec.synthJpeg420: Y block (x//8, y//8) on the full
       // grid, chroma block (x//16, y//16) on the subsampled grid, same
       // fixed-rounding YCbCr→RGB as mm_jpeg_pixel_stats
-      """WITH dims AS (
+      s"""WITH dims AS (
         |  SELECT doc_id,
         |         octet_length(encode(text)) % 37 + 8 AS w,
         |         octet_length(encode(text)) % 23 + 8 AS h
@@ -3080,8 +2851,7 @@ object SparkEntry {
         |    ((cbx*11 + cby*3 + doc_id*3) % 256 + 256) % 256 - 128 AS cr
         |  FROM px)
         |SELECT doc_id,
-        |  CAST(max(w) AS INTEGER) AS width,
-        |  CAST(max(h) AS INTEGER) AS height,
+        |  $maxDims,
         |  CAST(count(*) AS BIGINT) AS n_px,
         |  CAST(sum(greatest(0, least(255,
         |    CAST(floor(yv + 1.402e0*cr + 0.5e0) AS BIGINT)))) AS BIGINT) AS sum_r,
@@ -3097,21 +2867,14 @@ object SparkEntry {
     //      refinement scans, EOBn runs), block-constant so the lossy
     //      transform round-trips exactly; chroma on the /16 grid for
     //      the 4:2:0 ids (every fifth color id), /8 otherwise ----
-    "mm_jpeg_progressive" -> Gate((s, dir) => {
-      import graft.functions.ImageCodec
-      t(s, dir, "documents").select(col("doc_id"),
-          ImageCodec.image_pixel_stats(
-            ImageCodec.image_synth_jpeg_prog(col("doc_id"), col("text"))).as("st"))
-        .select(col("doc_id"), col("st.width").as("width"),
-          col("st.height").as("height"), col("st.n_px").as("n_px"),
-          col("st.sum_r").as("sum_r"), col("st.sum_g").as("sum_g"),
-          col("st.sum_b").as("sum_b"))
-    }, oracle =
+    "mm_jpeg_progressive" -> Gate((s, dir) =>
+      imageStats(s, dir, ImageCodec.image_synth_jpeg_prog(col("doc_id"), col("text"))),
+      oracle =
       // mirrors JpegCodec.synthJpegProg: the baseline block rules with the
       // chroma grid switching to /16 for the 4:2:0 ids (color, id%5==0);
       // progressive scans reconstruct the very same coefficients, so the
       // analytic oracle is unchanged from the baseline gates
-      """WITH dims AS (
+      s"""WITH dims AS (
         |  SELECT doc_id, ((doc_id % 2) + 2) % 2 = 0 AS gray,
         |         ((doc_id % 2) + 2) % 2 = 1 AND ((doc_id % 5) + 5) % 5 = 0 AS sub,
         |         octet_length(encode(text)) % 35 + 8 AS w,
@@ -3132,62 +2895,38 @@ object SparkEntry {
         |  FROM px),
         | rgb AS (
         |  SELECT doc_id, gray, w, h, gv,
-        |    greatest(0, least(255,
-        |      CAST(floor(yv + 1.402e0*cr + 0.5e0) AS BIGINT))) AS r,
-        |    greatest(0, least(255,
-        |      CAST(floor(yv - 0.344136e0*cb - 0.714136e0*cr + 0.5e0) AS BIGINT))) AS g,
-        |    greatest(0, least(255,
-        |      CAST(floor(yv + 1.772e0*cb + 0.5e0) AS BIGINT))) AS b
+        |    $ycbcrRgb
         |  FROM blocks)
         |SELECT doc_id,
-        |  CAST(max(w) AS INTEGER) AS width,
-        |  CAST(max(h) AS INTEGER) AS height,
+        |  $maxDims,
         |  CAST(count(*) AS BIGINT) AS n_px,
-        |  CAST(sum(CASE WHEN gray THEN gv ELSE r END) AS BIGINT) AS sum_r,
-        |  CAST(sum(CASE WHEN gray THEN gv ELSE g END) AS BIGINT) AS sum_g,
-        |  CAST(sum(CASE WHEN gray THEN gv ELSE b END) AS BIGINT) AS sum_b
+        |  $grayRgbSums
         |FROM rgb GROUP BY doc_id""".stripMargin),
 
     // ---- multimodal: Adam7-INTERLACED PNG — seven-pass wire layout
     //      with per-pass scanline filtering, dims down to 1×1 (empty
     //      passes). Interlacing only reorders scanlines, so the oracle
     //      is the same per-pixel affine rule as mm_png_pixel_stats ----
-    "mm_png_interlaced" -> Gate((s, dir) => {
-      import graft.functions.ImageCodec
-      t(s, dir, "documents").select(col("doc_id"),
-          ImageCodec.image_pixel_stats(
-            ImageCodec.image_synth_png_i7(col("doc_id"), col("text"))).as("st"))
-        .select(col("doc_id"), col("st.width").as("width"),
-          col("st.height").as("height"), col("st.n_px").as("n_px"),
-          col("st.sum_r").as("sum_r"), col("st.sum_g").as("sum_g"),
-          col("st.sum_b").as("sum_b"), col("st.sum_a").as("sum_a"))
-    }, oracle =
+    "mm_png_interlaced" -> Gate((s, dir) =>
+      imageStats(s, dir,
+        ImageCodec.image_synth_png_i7(col("doc_id"), col("text")), alpha = true),
+      oracle =
       // mirrors ImageCodec.synthPngInterlaced: identical value rule to
       // mm_png_pixel_stats (Adam7 only reorders the wire), tiny dims
-      """WITH dims AS (
+      s"""WITH dims AS (
         |  SELECT doc_id, ((doc_id % 4) + 4) % 4 AS cti,
         |         octet_length(encode(text)) % 27 + 1 AS w,
         |         octet_length(encode(text)) % 21 + 1 AS h
         |  FROM documents),
         | vals AS (
         |  SELECT d.doc_id, d.cti, d.w, d.h,
-        |         ((xs.x*3 + ys.y*5 + d.doc_id) % 256 + 256) % 256 AS v0,
-        |         ((xs.x*5 + ys.y*7 + d.doc_id*2) % 256 + 256) % 256 AS v1,
-        |         ((xs.x*7 + ys.y*9 + d.doc_id*3) % 256 + 256) % 256 AS v2,
-        |         ((xs.x*9 + ys.y*11 + d.doc_id*4) % 256 + 256) % 256 AS v3
+        |         ${pngSamples("xs.x", "ys.y", "d.doc_id")}
         |  FROM dims d, range(27) xs(x), range(21) ys(y)
         |  WHERE xs.x < d.w AND ys.y < d.h)
         |SELECT doc_id,
-        |  CAST(max(w) AS INTEGER) AS width,
-        |  CAST(max(h) AS INTEGER) AS height,
+        |  $maxDims,
         |  CAST(count(*) AS BIGINT) AS n_px,
-        |  CAST(sum(v0) AS BIGINT) AS sum_r,
-        |  CAST(sum(CASE WHEN cti IN (0, 2) THEN v0 ELSE v1 END) AS BIGINT)
-        |    AS sum_g,
-        |  CAST(sum(CASE WHEN cti IN (0, 2) THEN v0 ELSE v2 END) AS BIGINT)
-        |    AS sum_b,
-        |  CAST(CASE WHEN max(cti) = 2 THEN sum(v1)
-        |            WHEN max(cti) = 3 THEN sum(v3) END AS BIGINT) AS sum_a
+        |  $pngSums
         |FROM vals GROUP BY doc_id""".stripMargin),
 
     // ---- multimodal: REAL GIF decode — variable-width LZW, 8-color
@@ -3195,23 +2934,19 @@ object SparkEntry {
     //      frames interlaced (wire order only). The oracle recomputes
     //      channel sums from the affine palette/index rule ----
     "mm_gif_pixel_stats" -> Gate((s, dir) => {
-      import graft.functions.{GifCodec, ImageCodec}
       t(s, dir, "documents").select(col("doc_id"),
           GifCodec.gif_synth(col("doc_id"), col("text")).as("g"))
         .select(col("doc_id"),
           ImageCodec.image_pixel_stats(col("g")).as("st"),
           GifCodec.gif_meta(col("g")).as("mt"))
-        .select(col("doc_id"), col("mt.width").as("width"),
-          col("mt.height").as("height"), col("mt.n_frames").as("n_frames"),
-          col("st.n_px").as("n_px"),
-          col("st.sum_r").as("sum_r"), col("st.sum_g").as("sum_g"),
-          col("st.sum_b").as("sum_b"))
+        .select(statCols("mt.width", "mt.height", "mt.n_frames", "st.n_px", "st.sum_r",
+          "st.sum_g", "st.sum_b"): _*)
     }, oracle =
       // mirrors GifCodec.synthGif: w = n%21+4, h = n%11+3, frames =
       // floorMod(id,3)+1, 8-color palette and per-pixel index both
       // affine with floor-mod semantics; interlace is wire-order only,
       // so the oracle never sees it
-      """WITH dims AS (
+      s"""WITH dims AS (
         |  SELECT doc_id,
         |    octet_length(encode(text)) % 21 + 4 AS w,
         |    octet_length(encode(text)) % 11 + 3 AS h,
@@ -3223,8 +2958,7 @@ object SparkEntry {
         |  FROM dims d, range(25) xs(x), range(14) ys(y), range(3) fs(f)
         |  WHERE xs.x < d.w AND ys.y < d.h AND fs.f < d.nf)
         |SELECT doc_id,
-        |  CAST(max(w) AS INTEGER) AS width,
-        |  CAST(max(h) AS INTEGER) AS height,
+        |  $maxDims,
         |  CAST(max(nf) AS INTEGER) AS n_frames,
         |  CAST(count(*) AS BIGINT) AS n_px,
         |  CAST(sum(((j*31 + doc_id) % 256 + 256) % 256) AS BIGINT) AS sum_r,
@@ -3236,17 +2970,13 @@ object SparkEntry {
     //      re-encoded through the real LZW encoder as a valid GIF,
     //      then re-decoded; oracle keeps even frame indices ----
     "mm_gif_frames" -> Gate((s, dir) => {
-      import graft.functions.{GifCodec, ImageCodec}
       t(s, dir, "documents").select(col("doc_id"),
           GifCodec.gif_frame_sample(
             GifCodec.gif_synth(col("doc_id"), col("text")), lit(2)).as("g"))
         .select(col("doc_id"),
           ImageCodec.image_pixel_stats(col("g")).as("st"),
           GifCodec.gif_meta(col("g")).as("mt"))
-        .select(col("doc_id"), col("mt.n_frames").as("n_frames"),
-          col("st.n_px").as("n_px"),
-          col("st.sum_r").as("sum_r"), col("st.sum_g").as("sum_g"),
-          col("st.sum_b").as("sum_b"))
+        .select(statCols("mt.n_frames", "st.n_px", "st.sum_r", "st.sum_g", "st.sum_b"): _*)
     }, oracle =
       // every-2nd-frame sampling: the oracle keeps even frame indices
       """WITH dims AS (
@@ -3273,24 +3003,18 @@ object SparkEntry {
     //      palette photometrics cycling by id, PackBits RLE on even
     //      ids, multi-strip assembly. Oracle mirrors the synth rule ----
     "mm_tiff_pixel_stats" -> Gate((s, dir) => {
-      import graft.functions.{ImageCodec, TiffCodec}
       t(s, dir, "documents").select(col("doc_id"),
           TiffCodec.tiff_synth(col("doc_id"), col("text")).as("ti"))
         .select(col("doc_id"),
           ImageCodec.image_pixel_stats(col("ti")).as("st"),
           TiffCodec.tiff_meta(col("ti")).as("mt"))
-        .select(col("doc_id"), col("mt.width").as("width"),
-          col("mt.height").as("height"),
-          col("mt.photometric").as("photometric"),
-          col("mt.compression").as("compression"),
-          col("st.n_px").as("n_px"),
-          col("st.sum_r").as("sum_r"), col("st.sum_g").as("sum_g"),
-          col("st.sum_b").as("sum_b"))
+        .select(statCols("mt.width", "mt.height", "mt.photometric", "mt.compression", "st.n_px",
+          "st.sum_r", "st.sum_g", "st.sum_b"): _*)
     }, oracle =
       // mirrors TiffCodec.synthTiff: photometric 1/2/3 by id, gray base
       // value (x*3+y*5+id) fm 256 doubles as the palette index; PackBits
       // and byte order are wire-level only
-      """WITH dims AS (
+      s"""WITH dims AS (
         |  SELECT doc_id,
         |    octet_length(encode(text)) % 19 + 4 AS w,
         |    octet_length(encode(text)) % 9 + 3 AS h,
@@ -3314,8 +3038,7 @@ object SparkEntry {
         |      ELSE ((base*89 + doc_id*3) % 256 + 256) % 256 END AS b
         |  FROM px)
         |SELECT doc_id,
-        |  CAST(max(w) AS INTEGER) AS width,
-        |  CAST(max(h) AS INTEGER) AS height,
+        |  $maxDims,
         |  CAST(max(pm) AS INTEGER) AS photometric,
         |  CAST(max(comp) AS INTEGER) AS compression,
         |  CAST(count(*) AS BIGINT) AS n_px,
@@ -3327,19 +3050,12 @@ object SparkEntry {
     // ---- multimodal: SUB-BYTE PNG (depths 1/2/4) — MSB-first bit
     //      unpacking after the byte-wise unfilter, Adam7 on even ids,
     //      sums over the NATIVE code range (0..2^depth−1) ----
-    "mm_png_tiny" -> Gate((s, dir) => {
-      import graft.functions.ImageCodec
-      t(s, dir, "documents").select(col("doc_id"),
-          ImageCodec.image_pixel_stats(
-            ImageCodec.image_synth_png_tiny(col("doc_id"), col("text"))).as("st"))
-        .select(col("doc_id"), col("st.width").as("width"),
-          col("st.height").as("height"), col("st.n_px").as("n_px"),
-          col("st.sum_r").as("sum_r"), col("st.sum_g").as("sum_g"),
-          col("st.sum_b").as("sum_b"))
-    }, oracle =
+    "mm_png_tiny" -> Gate((s, dir) =>
+      imageStats(s, dir, ImageCodec.image_synth_png_tiny(col("doc_id"), col("text"))),
+      oracle =
       // mirrors ImageCodec.synthPngTiny: gray code value
       // floorMod(x*3 + y*5 + id, 2^depth), depth cycling 1/2/4 by id
-      """WITH dims AS (
+      s"""WITH dims AS (
         |  SELECT doc_id,
         |         CASE ((doc_id % 3) + 3) % 3 WHEN 0 THEN 2 WHEN 1 THEN 4
         |           ELSE 16 END AS maxv,
@@ -3352,8 +3068,7 @@ object SparkEntry {
         |  FROM dims d, range(33) xs(x), range(19) ys(y)
         |  WHERE xs.x < d.w AND ys.y < d.h)
         |SELECT doc_id,
-        |  CAST(max(w) AS INTEGER) AS width,
-        |  CAST(max(h) AS INTEGER) AS height,
+        |  $maxDims,
         |  CAST(count(*) AS BIGINT) AS n_px,
         |  CAST(sum(v) AS BIGINT) AS sum_r,
         |  CAST(sum(v) AS BIGINT) AS sum_g,
@@ -3364,22 +3079,15 @@ object SparkEntry {
     //      type 3 image (indices AND palette both affine in the
     //      inputs), decoded through inflate + unfilter + palette
     //      expansion to exact RGB sums ----
-    "mm_png_palette" -> Gate((s, dir) => {
-      import graft.functions.ImageCodec
-      t(s, dir, "documents").select(col("doc_id"),
-          ImageCodec.image_pixel_stats(
-            ImageCodec.image_synth_png_pal(col("doc_id"), col("text"))).as("st"))
-        .select(col("doc_id"), col("st.width").as("width"),
-          col("st.height").as("height"), col("st.n_px").as("n_px"),
-          col("st.sum_r").as("sum_r"), col("st.sum_g").as("sum_g"),
-          col("st.sum_b").as("sum_b"))
-    }, oracle =
+    "mm_png_palette" -> Gate((s, dir) =>
+      imageStats(s, dir, ImageCodec.image_synth_png_pal(col("doc_id"), col("text"))),
+      oracle =
       // mirrors ImageCodec.synthPngPalette: pixel (x, y) holds palette
       // index floorMod(x*3 + y*5 + id, ps) with ps = floorMod(id,15)+2;
       // entry e expands to r = (e*5 + id*7) mod 256, g = (e*11 + id*3)
       // mod 256, b = (e*13 + id) mod 256 — the oracle composes the two
       // affine rules
-      """WITH dims AS (
+      s"""WITH dims AS (
         |  SELECT doc_id, ((doc_id % 15) + 15) % 15 + 2 AS ps,
         |         octet_length(encode(text)) % 31 + 4 AS w,
         |         octet_length(encode(text)) % 17 + 3 AS h
@@ -3390,8 +3098,7 @@ object SparkEntry {
         |  FROM dims d, range(34) xs(x), range(19) ys(y)
         |  WHERE xs.x < d.w AND ys.y < d.h)
         |SELECT doc_id,
-        |  CAST(max(w) AS INTEGER) AS width,
-        |  CAST(max(h) AS INTEGER) AS height,
+        |  $maxDims,
         |  CAST(count(*) AS BIGINT) AS n_px,
         |  CAST(sum(((e*5 + doc_id*7) % 256 + 256) % 256) AS BIGINT) AS sum_r,
         |  CAST(sum(((e*11 + doc_id*3) % 256 + 256) % 256) AS BIGINT) AS sum_g,
@@ -3402,20 +3109,13 @@ object SparkEntry {
     //      sample, gray or RGB by id parity, full-range (0..65535)
     //      channel sums; resize preserves the deep samples (16-bit in →
     //      16-bit out → decoded again) ----
-    "mm_png_deep" -> Gate((s, dir) => {
-      import graft.functions.ImageCodec
-      t(s, dir, "documents").select(col("doc_id"),
-          ImageCodec.image_pixel_stats(
-            ImageCodec.image_synth_png16(col("doc_id"), col("text"))).as("st"))
-        .select(col("doc_id"), col("st.width").as("width"),
-          col("st.height").as("height"), col("st.n_px").as("n_px"),
-          col("st.sum_r").as("sum_r"), col("st.sum_g").as("sum_g"),
-          col("st.sum_b").as("sum_b"))
-    }, oracle =
+    "mm_png_deep" -> Gate((s, dir) =>
+      imageStats(s, dir, ImageCodec.image_synth_png16(col("doc_id"), col("text"))),
+      oracle =
       // mirrors ImageCodec.synthPng16: sample (x, y, c) =
       // floorMod(x*(31+2c) + y*(47+2c) + id*(c+1), 65536); id parity
       // picks gray (r=g=b from c=0) vs RGB
-      """WITH dims AS (
+      s"""WITH dims AS (
         |  SELECT doc_id, ((doc_id % 2) + 2) % 2 = 0 AS gray,
         |         octet_length(encode(text)) % 23 + 4 AS w,
         |         octet_length(encode(text)) % 15 + 3 AS h
@@ -3428,8 +3128,7 @@ object SparkEntry {
         |  FROM dims d, range(26) xs(x), range(17) ys(y)
         |  WHERE xs.x < d.w AND ys.y < d.h)
         |SELECT doc_id,
-        |  CAST(max(w) AS INTEGER) AS width,
-        |  CAST(max(h) AS INTEGER) AS height,
+        |  $maxDims,
         |  CAST(count(*) AS BIGINT) AS n_px,
         |  CAST(sum(v0) AS BIGINT) AS sum_r,
         |  CAST(sum(CASE WHEN gray THEN v0 ELSE v1 END) AS BIGINT) AS sum_g,
@@ -3440,19 +3139,13 @@ object SparkEntry {
     //      resample in sample space, re-encode through the zlib PNG
     //      writer, decode AGAIN for stats. Exercises the whole codec
     //      round-trip per row; still a pure zero-Exchange projection ----
-    "mm_png_resize" -> Gate((s, dir) => {
-      import graft.functions.ImageCodec
-      t(s, dir, "documents").select(col("doc_id"),
-          ImageCodec.image_pixel_stats(
-            ImageCodec.image_resize_nn(
-              ImageCodec.image_synth_png(col("doc_id"), col("text")),
-              lit(11), lit(6))).as("st"))
-        .select(col("doc_id"), col("st.width").as("width"),
-          col("st.height").as("height"), col("st.n_px").as("n_px"),
-          col("st.sum_r").as("sum_r"), col("st.sum_g").as("sum_g"),
-          col("st.sum_b").as("sum_b"), col("st.sum_a").as("sum_a"))
-    }, oracle =
-      """WITH dims AS (
+    "mm_png_resize" -> Gate((s, dir) =>
+      imageStats(s, dir,
+        ImageCodec.image_resize_nn(
+          ImageCodec.image_synth_png(col("doc_id"), col("text")),
+          lit(11), lit(6)), alpha = true),
+      oracle =
+      s"""WITH dims AS (
         |  SELECT doc_id, ((doc_id % 4) + 4) % 4 AS cti,
         |         octet_length(encode(text)) % 29 + 4 AS w,
         |         octet_length(encode(text)) % 19 + 3 AS h
@@ -3463,22 +3156,13 @@ object SparkEntry {
         |  FROM dims d, range(11) xs(x), range(6) ys(y)),
         | chans AS (
         |  SELECT doc_id, cti,
-        |         ((sx*3 + sy*5 + doc_id) % 256 + 256) % 256 AS v0,
-        |         ((sx*5 + sy*7 + doc_id*2) % 256 + 256) % 256 AS v1,
-        |         ((sx*7 + sy*9 + doc_id*3) % 256 + 256) % 256 AS v2,
-        |         ((sx*9 + sy*11 + doc_id*4) % 256 + 256) % 256 AS v3
+        |         ${pngSamples("sx", "sy", "doc_id")}
         |  FROM vals)
         |SELECT doc_id,
         |  CAST(11 AS INTEGER) AS width,
         |  CAST(6 AS INTEGER) AS height,
         |  CAST(66 AS BIGINT) AS n_px,
-        |  CAST(sum(v0) AS BIGINT) AS sum_r,
-        |  CAST(sum(CASE WHEN cti IN (0, 2) THEN v0 ELSE v1 END) AS BIGINT)
-        |    AS sum_g,
-        |  CAST(sum(CASE WHEN cti IN (0, 2) THEN v0 ELSE v2 END) AS BIGINT)
-        |    AS sum_b,
-        |  CAST(CASE WHEN max(cti) = 2 THEN sum(v1)
-        |            WHEN max(cti) = 3 THEN sum(v3) END AS BIGINT) AS sum_a
+        |  $pngSums
         |FROM chans GROUP BY doc_id""".stripMargin),
 
     // ---- multimodal: REAL audio decode — synthesize RIFF/WAVE 16-bit
@@ -3487,29 +3171,22 @@ object SparkEntry {
     //      decode every frame to exact per-channel sums + peak. The
     //      oracle recomputes from the affine sample rule ----
     "mm_audio_stats" -> Gate((s, dir) => {
-      import graft.functions.AudioCodec
       val wav = AudioCodec.audio_synth_wav(col("doc_id"), col("text"))
       t(s, dir, "documents").select(col("doc_id"),
           AudioCodec.audio_meta(wav).as("m"),
           AudioCodec.audio_pcm_stats(wav).as("st"))
-        .select(col("doc_id"),
-          col("st.channels").as("channels"),
-          col("st.sample_rate").as("sample_rate"),
-          col("st.n_frames").as("n_frames"),
-          col("m.duration_us").as("duration_us"),
-          col("st.sum_l").as("sum_l"), col("st.sum_r").as("sum_r"),
-          col("st.peak").as("peak"))
+        .select(statCols("st.channels", "st.sample_rate", "st.n_frames", "m.duration_us",
+          "st.sum_l", "st.sum_r", "st.peak"): _*)
     }, oracle =
       // mirrors AudioCodec.synthWav: sample (i, c) =
       // floorMod(i*(7+2c) + id*(3+c), 65536) - 32768; frames from the
       // text's byte length, channels/rate cycle by doc_id. The Spark side
       // decodes REAL RIFF/WAVE bytes; the oracle recomputes analytically.
-      """WITH dims AS (
+      s"""WITH dims AS (
         |  SELECT doc_id,
         |         octet_length(encode(text)) % 241 + 20 AS f,
         |         ((doc_id % 2) + 2) % 2 + 1 AS ch,
-        |         CASE ((doc_id % 4) + 4) % 4 WHEN 0 THEN 8000
-        |           WHEN 1 THEN 16000 WHEN 2 THEN 22050 ELSE 44100 END AS rate
+        |         $pcmRate
         |  FROM documents),
         | vals AS (
         |  SELECT d.doc_id, d.f, d.ch, d.rate,
@@ -3521,10 +3198,7 @@ object SparkEntry {
         |  CAST(max(rate) AS INTEGER) AS sample_rate,
         |  CAST(count(*) AS BIGINT) AS n_frames,
         |  CAST((max(f) * 1000000) // max(rate) AS BIGINT) AS duration_us,
-        |  CAST(sum(v0) AS BIGINT) AS sum_l,
-        |  CAST(CASE WHEN max(ch) = 2 THEN sum(v1) END AS BIGINT) AS sum_r,
-        |  CAST(max(greatest(abs(v0),
-        |    CASE WHEN ch = 2 THEN abs(v1) ELSE 0 END)) AS INTEGER) AS peak
+        |  $pcmSums
         |FROM vals GROUP BY doc_id""".stripMargin),
 
     // ---- multimodal: wider PCM matrix — 8-bit excess-128, 24-bit
@@ -3532,29 +3206,23 @@ object SparkEntry {
     //      float samples map through floor(v·32767 + 0.5) so stats
     //      stay exact integers the oracle recomputes ----
     "mm_audio_deep" -> Gate((s, dir) => {
-      import graft.functions.AudioCodec
       val wav = AudioCodec.audio_synth_deep(col("doc_id"), col("text"))
       t(s, dir, "documents").select(col("doc_id"),
           AudioCodec.audio_meta(wav).as("m"),
           AudioCodec.audio_pcm_stats(wav).as("st"))
-        .select(col("doc_id"), col("m.format").as("format"),
-          col("st.channels").as("channels"),
-          col("st.sample_rate").as("sample_rate"),
-          col("st.n_frames").as("n_frames"),
-          col("st.sum_l").as("sum_l"), col("st.sum_r").as("sum_r"),
-          col("st.peak").as("peak"))
+        .select(statCols("m.format", "st.channels", "st.sample_rate", "st.n_frames", "st.sum_l",
+          "st.sum_r", "st.peak"): _*)
     }, oracle =
       // mirrors AudioCodec.synthWavDeep: with e = i·(7+2c) + id·(3+c),
       // 8-bit decodes to floorMod(e,256)−128, 24-bit to
       // floorMod(e,2^24)−2^23, float32 stores (floorMod(e,131072)−65536)
       // /65536 exactly and decodes through floor(v·32767 + 0.5)
-      """WITH dims AS (
+      s"""WITH dims AS (
         |  SELECT doc_id,
         |         octet_length(encode(text)) % 97 + 10 AS f,
         |         ((doc_id % 2) + 2) % 2 + 1 AS ch,
         |         ((doc_id % 3) + 3) % 3 AS kind,
-        |         CASE ((doc_id % 4) + 4) % 4 WHEN 0 THEN 8000
-        |           WHEN 1 THEN 16000 WHEN 2 THEN 22050 ELSE 44100 END AS rate
+        |         $pcmRate
         |  FROM documents),
         | sm AS (
         |  SELECT d.doc_id, d.f, d.ch, d.kind, d.rate, cs.c,
@@ -3586,21 +3254,17 @@ object SparkEntry {
     //      recurrence (predictor + step index per nibble) in a
     //      recursive CTE over the public 89-entry step table ----
     "mm_audio_adpcm" -> Gate((s, dir) => {
-      import graft.functions.AudioCodec
       val wav = AudioCodec.audio_synth_adpcm(col("doc_id"), col("text"))
       t(s, dir, "documents").select(col("doc_id"),
           AudioCodec.audio_meta(wav).as("m"),
           AudioCodec.audio_pcm_stats(wav).as("st"))
-        .select(col("doc_id"), col("m.format").as("format"),
-          col("st.sample_rate").as("sample_rate"),
-          col("st.n_frames").as("n_frames"),
-          col("st.sum_l").as("sum_l"), col("st.peak").as("peak"))
+        .select(statCols("m.format", "st.sample_rate", "st.n_frames", "st.sum_l", "st.peak"): _*)
     }, oracle = {
       // the IMA decoder recurrence unrolled: per (doc, block), 16
       // recursive steps carry (predictor, step-index) through the nibble
       // stream; the 89-entry step table is inlined as VALUES and the
       // block header predictor is itself sample 0
-      val steps = graft.functions.AudioCodec.AdpcmSteps.zipWithIndex
+      val steps = AudioCodec.AdpcmSteps.zipWithIndex
         .map { case (st, i) => s"($i,$st)" }.mkString(",")
       s"""WITH RECURSIVE dims AS (
          |  SELECT doc_id, octet_length(encode(text)) % 5 + 2 AS nb,
@@ -3651,7 +3315,6 @@ object SparkEntry {
     //      expanded to linear by the CCITT integer formulas; the
     //      oracle reproduces the expansion arithmetic in SQL ----
     "mm_audio_g711" -> Gate((s, dir) => {
-      import graft.functions.AudioCodec
       val wav = AudioCodec.audio_synth_g711(col("doc_id"), col("text"))
       t(s, dir, "documents").select(col("doc_id"),
           AudioCodec.audio_meta(wav).as("m"),
@@ -3668,7 +3331,7 @@ object SparkEntry {
       // v = sign(u&128) ? 132-t : t-132. A-law (odd): a = code XOR 85;
       // seg = (a&112)>>4; base = (a&15)*16; t = seg=0 ? base+8 :
       // (base+264) << (seg-1); v = (a&128) ? t : -t
-      """WITH dims AS (
+      s"""WITH dims AS (
         |  SELECT doc_id,
         |         octet_length(encode(text)) % 241 + 20 AS f,
         |         ((doc_id % 4) + 4) % 4 AS m4,
@@ -3684,73 +3347,34 @@ object SparkEntry {
         |  FROM dims d, range(261) s(i) WHERE s.i < d.f),
         | vals AS (
         |  SELECT doc_id, ulaw, ch, rate, f,
-        |   CASE WHEN ulaw THEN
-        |     CASE WHEN ((255 - c0) & 128) <> 0
-        |       THEN 132 - (((((255 - c0) & 15) * 8) + 132) << (((255 - c0) >> 4) & 7))
-        |       ELSE (((((255 - c0) & 15) * 8) + 132) << (((255 - c0) >> 4) & 7)) - 132 END
-        |   ELSE
-        |     CASE WHEN (xor(c0, 85) & 128) <> 0 THEN
-        |       CASE WHEN ((xor(c0, 85) & 112) >> 4) = 0
-        |         THEN (xor(c0, 85) & 15) * 16 + 8
-        |         ELSE ((xor(c0, 85) & 15) * 16 + 264)
-        |           << (greatest(1, (xor(c0, 85) & 112) >> 4) - 1) END
-        |     ELSE -(
-        |       CASE WHEN ((xor(c0, 85) & 112) >> 4) = 0
-        |         THEN (xor(c0, 85) & 15) * 16 + 8
-        |         ELSE ((xor(c0, 85) & 15) * 16 + 264)
-        |           << (greatest(1, (xor(c0, 85) & 112) >> 4) - 1) END) END
-        |   END AS v0,
-        |   CASE WHEN ulaw THEN
-        |     CASE WHEN ((255 - c1) & 128) <> 0
-        |       THEN 132 - (((((255 - c1) & 15) * 8) + 132) << (((255 - c1) >> 4) & 7))
-        |       ELSE (((((255 - c1) & 15) * 8) + 132) << (((255 - c1) >> 4) & 7)) - 132 END
-        |   ELSE
-        |     CASE WHEN (xor(c1, 85) & 128) <> 0 THEN
-        |       CASE WHEN ((xor(c1, 85) & 112) >> 4) = 0
-        |         THEN (xor(c1, 85) & 15) * 16 + 8
-        |         ELSE ((xor(c1, 85) & 15) * 16 + 264)
-        |           << (greatest(1, (xor(c1, 85) & 112) >> 4) - 1) END
-        |     ELSE -(
-        |       CASE WHEN ((xor(c1, 85) & 112) >> 4) = 0
-        |         THEN (xor(c1, 85) & 15) * 16 + 8
-        |         ELSE ((xor(c1, 85) & 15) * 16 + 264)
-        |           << (greatest(1, (xor(c1, 85) & 112) >> 4) - 1) END) END
-        |   END AS v1
+        |   ${g711ExpandSql("c0")} AS v0,
+        |   ${g711ExpandSql("c1")} AS v1
         |  FROM codes)
         |SELECT doc_id,
         |  CASE WHEN max(CAST(ulaw AS INTEGER)) = 1 THEN 'ulaw' ELSE 'alaw' END AS kind,
         |  CAST(max(ch) AS INTEGER) AS channels,
         |  CAST(max(rate) AS INTEGER) AS sample_rate,
         |  CAST(count(*) AS BIGINT) AS n_frames,
-        |  CAST(sum(v0) AS BIGINT) AS sum_l,
-        |  CAST(CASE WHEN max(ch) = 2 THEN sum(v1) END AS BIGINT) AS sum_r,
-        |  CAST(max(greatest(abs(v0),
-        |    CASE WHEN ch = 2 THEN abs(v1) ELSE 0 END)) AS INTEGER) AS peak
+        |  $pcmSums
         |FROM vals GROUP BY doc_id""".stripMargin, frozen = true),
 
     // ---- multimodal: audio frame decimation — keep every 3rd PCM
     //      frame, re-emit a VALID WAV, decode it again for stats (the
     //      audio analog of video frame sampling) ----
     "mm_audio_sample" -> Gate((s, dir) => {
-      import graft.functions.AudioCodec
       t(s, dir, "documents").select(col("doc_id"),
           AudioCodec.audio_pcm_stats(
             AudioCodec.audio_frame_sample(
               AudioCodec.audio_synth_wav(col("doc_id"), col("text")),
               lit(3))).as("st"))
-        .select(col("doc_id"),
-          col("st.channels").as("channels"),
-          col("st.sample_rate").as("sample_rate"),
-          col("st.n_frames").as("n_frames"),
-          col("st.sum_l").as("sum_l"), col("st.sum_r").as("sum_r"),
-          col("st.peak").as("peak"))
+        .select(statCols("st.channels", "st.sample_rate", "st.n_frames", "st.sum_l", "st.sum_r",
+          "st.peak"): _*)
     }, oracle =
-      """WITH dims AS (
+      s"""WITH dims AS (
         |  SELECT doc_id,
         |         octet_length(encode(text)) % 241 + 20 AS f,
         |         ((doc_id % 2) + 2) % 2 + 1 AS ch,
-        |         CASE ((doc_id % 4) + 4) % 4 WHEN 0 THEN 8000
-        |           WHEN 1 THEN 16000 WHEN 2 THEN 22050 ELSE 44100 END AS rate
+        |         $pcmRate
         |  FROM documents),
         | vals AS (
         |  SELECT d.doc_id, d.ch, d.rate, s.j * 3 AS i
@@ -3764,10 +3388,7 @@ object SparkEntry {
         |  CAST(max(ch) AS INTEGER) AS channels,
         |  CAST(max(rate) AS INTEGER) AS sample_rate,
         |  CAST(count(*) AS BIGINT) AS n_frames,
-        |  CAST(sum(v0) AS BIGINT) AS sum_l,
-        |  CAST(CASE WHEN max(ch) = 2 THEN sum(v1) END AS BIGINT) AS sum_r,
-        |  CAST(max(greatest(abs(v0),
-        |    CASE WHEN ch = 2 THEN abs(v1) ELSE 0 END)) AS INTEGER) AS peak
+        |  $pcmSums
         |FROM chans GROUP BY doc_id""".stripMargin),
 
     // ---- multimodal: REAL video decode — synthesize an AVI (RIFF)
@@ -3779,7 +3400,6 @@ object SparkEntry {
     //      (exact integers, one decode pass); thresholding stays
     //      relational, so one array serves every cut policy ----
     "mm_video_scenes" -> Gate((s, dir) => {
-      import graft.functions.VideoCodec
       t(s, dir, "documents").select(col("doc_id"),
           posexplode(VideoCodec.video_frame_deltas(
             VideoCodec.video_synth_avi(col("doc_id"), col("text")))))
@@ -3813,20 +3433,14 @@ object SparkEntry {
         |FROM px GROUP BY 1, 2""".stripMargin),
 
     "mm_video_stats" -> Gate((s, dir) => {
-      import graft.functions.VideoCodec
       val avi = VideoCodec.video_synth_avi(col("doc_id"), col("text"))
       t(s, dir, "documents").select(col("doc_id"),
           VideoCodec.video_meta(avi).as("m"),
           VideoCodec.video_pixel_stats(avi).as("st"))
-        .select(col("doc_id"),
-          col("st.width").as("width"), col("st.height").as("height"),
-          col("st.n_frames").as("n_frames"),
-          col("m.us_per_frame").as("us_per_frame"),
-          col("m.duration_us").as("duration_us"),
-          col("st.sum_r").as("sum_r"), col("st.sum_g").as("sum_g"),
-          col("st.sum_b").as("sum_b"))
+        .select(statCols("st.width", "st.height", "st.n_frames", "m.us_per_frame",
+          "m.duration_us", "st.sum_r", "st.sum_g", "st.sum_b"): _*)
     }, oracle =
-      """WITH dims AS (
+      s"""WITH dims AS (
         |  SELECT doc_id,
         |         octet_length(encode(text)) % 21 + 4 AS w,
         |         octet_length(encode(text)) % 13 + 3 AS h,
@@ -3839,36 +3453,26 @@ object SparkEntry {
         |  FROM dims d, range(24) xs(x), range(15) ys(y), range(18) ts(t)
         |  WHERE xs.x < d.w AND ys.y < d.h AND ts.t < d.f)
         |SELECT doc_id,
-        |  CAST(max(w) AS INTEGER) AS width,
-        |  CAST(max(h) AS INTEGER) AS height,
+        |  $maxDims,
         |  CAST(max(f) AS BIGINT) AS n_frames,
         |  CAST(max(us) AS BIGINT) AS us_per_frame,
         |  CAST(max(f) * max(us) AS BIGINT) AS duration_us,
-        |  CAST(sum(((x*13 + y*17 + t*19 + doc_id*3) % 256 + 256) % 256)
-        |    AS BIGINT) AS sum_r,
-        |  CAST(sum(((x*7 + y*11 + t*23 + doc_id*2) % 256 + 256) % 256)
-        |    AS BIGINT) AS sum_g,
-        |  CAST(sum(((x*3 + y*5 + t*29 + doc_id) % 256 + 256) % 256)
-        |    AS BIGINT) AS sum_b
+        |  $aviSums
         |FROM px GROUP BY doc_id""".stripMargin, frozen = true),
 
     // ---- multimodal: video frame sampling — keep every 2nd frame,
     //      re-emit a VALID AVI, decode it again for stats (the core
     //      video op of a training-data pipeline, done for real) ----
     "mm_video_sample" -> Gate((s, dir) => {
-      import graft.functions.VideoCodec
       t(s, dir, "documents").select(col("doc_id"),
           VideoCodec.video_pixel_stats(
             VideoCodec.video_frame_sample(
               VideoCodec.video_synth_avi(col("doc_id"), col("text")),
               lit(2))).as("st"))
-        .select(col("doc_id"),
-          col("st.width").as("width"), col("st.height").as("height"),
-          col("st.n_frames").as("n_frames"), col("st.n_px").as("n_px"),
-          col("st.sum_r").as("sum_r"), col("st.sum_g").as("sum_g"),
-          col("st.sum_b").as("sum_b"))
+        .select(statCols("st.width", "st.height", "st.n_frames", "st.n_px", "st.sum_r",
+          "st.sum_g", "st.sum_b"): _*)
     }, oracle =
-      """WITH dims AS (
+      s"""WITH dims AS (
         |  SELECT doc_id,
         |         octet_length(encode(text)) % 21 + 4 AS w,
         |         octet_length(encode(text)) % 13 + 3 AS h,
@@ -3880,16 +3484,10 @@ object SparkEntry {
         |  FROM dims d, range(24) xs(x), range(15) ys(y), range(9) js(j)
         |  WHERE xs.x < d.w AND ys.y < d.h AND js.j < (d.f + 1) // 2)
         |SELECT doc_id,
-        |  CAST(max(w) AS INTEGER) AS width,
-        |  CAST(max(h) AS INTEGER) AS height,
+        |  $maxDims,
         |  CAST(max(nf) AS BIGINT) AS n_frames,
         |  CAST(max(w) * max(h) * max(nf) AS BIGINT) AS n_px,
-        |  CAST(sum(((x*13 + y*17 + t*19 + doc_id*3) % 256 + 256) % 256)
-        |    AS BIGINT) AS sum_r,
-        |  CAST(sum(((x*7 + y*11 + t*23 + doc_id*2) % 256 + 256) % 256)
-        |    AS BIGINT) AS sum_g,
-        |  CAST(sum(((x*3 + y*5 + t*29 + doc_id) % 256 + 256) % 256)
-        |    AS BIGINT) AS sum_b
+        |  $aviSums
         |FROM px GROUP BY doc_id""".stripMargin),
 
     // ---- multimodal: MJPEG-in-AVI — every `00dc` chunk one real
@@ -3897,21 +3495,17 @@ object SparkEntry {
     //      (block-constant planes, so the lossy transform round-trips
     //      exactly and the oracle composes the affine + YCbCr rules) ----
     "mm_mjpeg_stats" -> Gate((s, dir) => {
-      import graft.functions.VideoCodec
       val avi = VideoCodec.video_synth_mjpeg(col("doc_id"), col("text"))
       t(s, dir, "documents").select(col("doc_id"),
           VideoCodec.video_meta(avi).as("m"),
           VideoCodec.video_pixel_stats(avi).as("st"))
-        .select(col("doc_id"), col("m.format").as("format"),
-          col("st.width").as("width"), col("st.height").as("height"),
-          col("st.n_frames").as("n_frames"),
-          col("st.sum_r").as("sum_r"), col("st.sum_g").as("sum_g"),
-          col("st.sum_b").as("sum_b"))
+        .select(statCols("m.format", "st.width", "st.height", "st.n_frames", "st.sum_r",
+          "st.sum_g", "st.sum_b"): _*)
     }, oracle =
       // mirrors VideoCodec.synthAviMjpeg: block-constant planes with a
       // frame term, fixed-rounding YCbCr→RGB (same rule as the still
       // mm_jpeg_pixel_stats oracle), gray when doc_id is even
-      """WITH dims AS (
+      s"""WITH dims AS (
         |  SELECT doc_id, ((doc_id % 2) + 2) % 2 = 0 AS gray,
         |         octet_length(encode(text)) % 39 + 8 AS w,
         |         octet_length(encode(text)) % 25 + 8 AS h,
@@ -3924,46 +3518,31 @@ object SparkEntry {
         |  WHERE xs.x < d.w AND ys.y < d.h AND ts.t < d.f),
         | blocks AS (
         |  SELECT doc_id, gray, w, h, f,
-        |    ((bx*7 + by*11 + t*19 + doc_id) % 256 + 256) % 256 AS gv,
-        |    ((bx*5 + by*7 + t*17 + doc_id) % 256 + 256) % 256 AS yv,
-        |    ((bx*3 + by*13 + t*5 + doc_id*2) % 256 + 256) % 256 - 128 AS cb,
-        |    ((bx*11 + by*3 + t*7 + doc_id*3) % 256 + 256) % 256 - 128 AS cr
+        |    $mjpegBlockPlanes
         |  FROM px),
         | rgb AS (
         |  SELECT doc_id, gray, w, h, f, gv,
-        |    greatest(0, least(255,
-        |      CAST(floor(yv + 1.402e0*cr + 0.5e0) AS BIGINT))) AS r,
-        |    greatest(0, least(255,
-        |      CAST(floor(yv - 0.344136e0*cb - 0.714136e0*cr + 0.5e0) AS BIGINT))) AS g,
-        |    greatest(0, least(255,
-        |      CAST(floor(yv + 1.772e0*cb + 0.5e0) AS BIGINT))) AS b
+        |    $ycbcrRgb
         |  FROM blocks)
         |SELECT doc_id, 'avi-mjpeg' AS format,
-        |  CAST(max(w) AS INTEGER) AS width,
-        |  CAST(max(h) AS INTEGER) AS height,
+        |  $maxDims,
         |  CAST(max(f) AS BIGINT) AS n_frames,
-        |  CAST(sum(CASE WHEN gray THEN gv ELSE r END) AS BIGINT) AS sum_r,
-        |  CAST(sum(CASE WHEN gray THEN gv ELSE g END) AS BIGINT) AS sum_g,
-        |  CAST(sum(CASE WHEN gray THEN gv ELSE b END) AS BIGINT) AS sum_b
+        |  $grayRgbSums
         |FROM rgb GROUP BY doc_id""".stripMargin),
 
     // ---- multimodal: MJPEG frame sampling — every 2nd JPEG copied
     //      VERBATIM (bytes move, pixels never decode on the sampling
     //      path), then re-parsed and decoded for stats ----
     "mm_mjpeg_sample" -> Gate((s, dir) => {
-      import graft.functions.VideoCodec
       t(s, dir, "documents").select(col("doc_id"),
           VideoCodec.video_pixel_stats(
             VideoCodec.video_frame_sample(
               VideoCodec.video_synth_mjpeg(col("doc_id"), col("text")),
               lit(2))).as("st"))
-        .select(col("doc_id"),
-          col("st.width").as("width"), col("st.height").as("height"),
-          col("st.n_frames").as("n_frames"), col("st.n_px").as("n_px"),
-          col("st.sum_r").as("sum_r"), col("st.sum_g").as("sum_g"),
-          col("st.sum_b").as("sum_b"))
+        .select(statCols("st.width", "st.height", "st.n_frames", "st.n_px", "st.sum_r",
+          "st.sum_g", "st.sum_b"): _*)
     }, oracle =
-      """WITH dims AS (
+      s"""WITH dims AS (
         |  SELECT doc_id, ((doc_id % 2) + 2) % 2 = 0 AS gray,
         |         octet_length(encode(text)) % 39 + 8 AS w,
         |         octet_length(encode(text)) % 25 + 8 AS h,
@@ -3976,28 +3555,17 @@ object SparkEntry {
         |  WHERE xs.x < d.w AND ys.y < d.h AND js.j < (d.f + 1) // 2),
         | blocks AS (
         |  SELECT doc_id, gray, w, h, nf,
-        |    ((bx*7 + by*11 + t*19 + doc_id) % 256 + 256) % 256 AS gv,
-        |    ((bx*5 + by*7 + t*17 + doc_id) % 256 + 256) % 256 AS yv,
-        |    ((bx*3 + by*13 + t*5 + doc_id*2) % 256 + 256) % 256 - 128 AS cb,
-        |    ((bx*11 + by*3 + t*7 + doc_id*3) % 256 + 256) % 256 - 128 AS cr
+        |    $mjpegBlockPlanes
         |  FROM px),
         | rgb AS (
         |  SELECT doc_id, gray, w, h, nf, gv,
-        |    greatest(0, least(255,
-        |      CAST(floor(yv + 1.402e0*cr + 0.5e0) AS BIGINT))) AS r,
-        |    greatest(0, least(255,
-        |      CAST(floor(yv - 0.344136e0*cb - 0.714136e0*cr + 0.5e0) AS BIGINT))) AS g,
-        |    greatest(0, least(255,
-        |      CAST(floor(yv + 1.772e0*cb + 0.5e0) AS BIGINT))) AS b
+        |    $ycbcrRgb
         |  FROM blocks)
         |SELECT doc_id,
-        |  CAST(max(w) AS INTEGER) AS width,
-        |  CAST(max(h) AS INTEGER) AS height,
+        |  $maxDims,
         |  CAST(max(nf) AS BIGINT) AS n_frames,
         |  CAST(max(w) * max(h) * max(nf) AS BIGINT) AS n_px,
-        |  CAST(sum(CASE WHEN gray THEN gv ELSE r END) AS BIGINT) AS sum_r,
-        |  CAST(sum(CASE WHEN gray THEN gv ELSE g END) AS BIGINT) AS sum_g,
-        |  CAST(sum(CASE WHEN gray THEN gv ELSE b END) AS BIGINT) AS sum_b
+        |  $grayRgbSums
         |FROM rgb GROUP BY doc_id""".stripMargin, frozen = true),
 
     // ---- multimodal: mixed-modality ROUTER — one binary column holds
@@ -4006,20 +3574,7 @@ object SparkEntry {
     //      on whichever succeeds. Pure composition of the three meta
     //      expressions — no new operator, no Exchange ----
     "mm_router" -> Gate((s, dir) => {
-      import graft.functions.{AudioCodec, GifCodec, ImageCodec, VideoCodec}
-      val m = pmod(col("doc_id"), lit(5))
-      val payload = when(m === 0,
-          ImageCodec.image_synth_png(col("doc_id"), col("text")))
-        .when(m === 1, AudioCodec.audio_synth_wav(col("doc_id"), col("text")))
-        .when(m === 2, VideoCodec.video_synth_avi(col("doc_id"), col("text")))
-        .when(m === 3, ImageCodec.image_synth_jpeg420(col("doc_id"), col("text")))
-        .otherwise(GifCodec.gif_synth(col("doc_id"), col("text")))
-      t(s, dir, "documents").select(col("doc_id"), payload.as("payload"))
-        .select(col("doc_id"),
-          ImageCodec.image_meta(col("payload")).as("im"),
-          AudioCodec.audio_meta(col("payload")).as("am"),
-          VideoCodec.video_meta(col("payload")).as("vm"),
-          GifCodec.gif_meta(col("payload")).as("gm"))
+      routedMeta(s, dir)
         .select(col("doc_id"),
           coalesce(col("im.format"), col("am.format"), col("vm.format"))
             .as("kind"),
@@ -4049,20 +3604,7 @@ object SparkEntry {
     //      multimodal twin of pipeline_corpus (one groupBy over four
     //      keys; decode stays in the map side) ----
     "pipeline_multimodal" -> Gate((s, dir) => {
-      import graft.functions.{AudioCodec, GifCodec, ImageCodec, VideoCodec}
-      val m = pmod(col("doc_id"), lit(5))
-      val payload = when(m === 0,
-          ImageCodec.image_synth_png(col("doc_id"), col("text")))
-        .when(m === 1, AudioCodec.audio_synth_wav(col("doc_id"), col("text")))
-        .when(m === 2, VideoCodec.video_synth_avi(col("doc_id"), col("text")))
-        .when(m === 3, ImageCodec.image_synth_jpeg420(col("doc_id"), col("text")))
-        .otherwise(GifCodec.gif_synth(col("doc_id"), col("text")))
-      t(s, dir, "documents").select(col("doc_id"), payload.as("payload"))
-        .select(col("doc_id"),
-          ImageCodec.image_meta(col("payload")).as("im"),
-          AudioCodec.audio_meta(col("payload")).as("am"),
-          VideoCodec.video_meta(col("payload")).as("vm"),
-          GifCodec.gif_meta(col("payload")).as("gm"))
+      routedMeta(s, dir)
         .select(
           coalesce(col("im.format"), col("am.format"), col("vm.format"))
             .as("kind"),
@@ -4117,14 +3659,10 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_docs"),
           round(avg(col("n_tokens")), 4).as("avg_tokens"))
     }, oracle =
-      """WITH base AS (
+      s"""WITH base AS (
         | SELECT doc_id, text, source,
-        |  CASE WHEN length(trim(text)) = 0 THEN 0
-        |       ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens,
-        |  len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |    t -> list_contains(['the','a','an','and','or','of','to','in','is','it',
-        |      'that','was','for','on','with','as','at','by','be'],
-        |      regexp_replace(t, '[^a-z]', '', 'g')))) AS stops
+        |  $tokenCountSql AS n_tokens,
+        |  ${wordHits(stopWords)} AS stops
         | FROM documents),
         |filt AS (
         | SELECT * FROM base
@@ -4133,18 +3671,7 @@ object SparkEntry {
         |     THEN CAST(stops AS DOUBLE)/n_tokens ELSE 0 END, 6) <= 0.5),
         |scored AS (
         | SELECT f.*,
-        |  len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |   t -> list_contains(['der','die','das','und','ist','nicht','ein','mit','von','zu'],
-        |     regexp_replace(t, '[^a-z]', '', 'g')))) AS s_de,
-        |  len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |   t -> list_contains(['the','and','of','to','is','in','that','was','with','for'],
-        |     regexp_replace(t, '[^a-z]', '', 'g')))) AS s_en,
-        |  len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |   t -> list_contains(['el','la','los','y','es','en','que','una','por','con'],
-        |     regexp_replace(t, '[^a-z]', '', 'g')))) AS s_es,
-        |  len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |   t -> list_contains(['le','la','les','et','est','une','dans','que','pour','des'],
-        |     regexp_replace(t, '[^a-z]', '', 'g')))) AS s_fr
+        |  $langHits
         | FROM filt f),
         |en AS (
         | SELECT * FROM scored
@@ -4165,9 +3692,8 @@ object SparkEntry {
       t(s, dir, "documents").select(col("doc_id"),
         TextAnalysis.tokenCount(col("text")).as("n_tokens"),
         TextAnalysis.subwordCount(col("text")).as("n_subwords")),
-      oracle = """SELECT doc_id,
-        | CASE WHEN length(trim(text)) = 0 THEN 0
-        |      ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens,
+      oracle = raw"""SELECT doc_id,
+        | $tokenCountSql AS n_tokens,
         | CASE WHEN length(trim(text)) = 0 THEN 0
         |      ELSE CAST(list_sum(list_transform(string_split_regex(trim(text), '\s+'),
         |        w -> CAST(ceil(length(w)/4.0) AS BIGINT))) AS BIGINT) END AS n_subwords
@@ -4196,7 +3722,6 @@ object SparkEntry {
     //      hash the same rendering (concat_ws and array_to_string both
     //      skip the nulled Z) ----
     "f18_zm_surgery" -> Gate((s, dir) => {
-      import graft.functions.Geometry
       val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_linenumber"),
         round(col("l_extendedprice"), 2).as("x"),
         round(col("l_discount"), 2).as("y"),
@@ -4227,16 +3752,12 @@ object SparkEntry {
       TextAnalysis.qualitySignals(t(s, dir, "documents"), "text")
         .select(col("doc_id"), col("n_tokens"), col("mean_word_len"),
           col("punct_ratio"), col("digit_ratio"), col("stopword_ratio")),
-      oracle = """WITH base AS (
+      oracle = s"""WITH base AS (
         | SELECT doc_id, text, length(text) AS nc,
-        |  CASE WHEN length(trim(text)) = 0 THEN 0
-        |       ELSE len(string_split_regex(trim(text), '\s+')) END AS toks,
+        |  $tokenCountSql AS toks,
         |  length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS punct,
         |  length(regexp_replace(text, '[^0-9]', '', 'g')) AS digits,
-        |  len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |    t -> list_contains(['the','a','an','and','or','of','to','in','is','it',
-        |      'that','was','for','on','with','as','at','by','be'],
-        |      regexp_replace(t, '[^a-z]', '', 'g')))) AS stops
+        |  ${wordHits(stopWords)} AS stops
         | FROM documents)
         |SELECT doc_id, toks AS n_tokens,
         | round(CASE WHEN toks > 0 THEN CAST(nc - (toks - 1) AS DOUBLE)/toks ELSE 0 END, 4)
@@ -4253,17 +3774,13 @@ object SparkEntry {
     "quality_score" -> Gate((s, dir) =>
       TextAnalysis.qualityScore(t(s, dir, "documents"), "text", minScore = 0.5)
         .select(col("doc_id"), col("quality_score")),
-      oracle = """WITH base AS (
+      oracle = s"""WITH base AS (
         | SELECT doc_id, text, length(text) AS nc,
-        |  CASE WHEN length(trim(text)) = 0 THEN 0
-        |       ELSE len(string_split_regex(trim(text), '\s+')) END AS toks,
+        |  $tokenCountSql AS toks,
         |  length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS punct,
         |  length(regexp_replace(text, '[^0-9]', '', 'g')) AS digits,
         |  length(regexp_replace(text, '[^A-Z]', '', 'g')) AS uppers,
-        |  len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |    t -> list_contains(['the','a','an','and','or','of','to','in','is','it',
-        |      'that','was','for','on','with','as','at','by','be'],
-        |      regexp_replace(t, '[^a-z]', '', 'g')))) AS stops
+        |  ${wordHits(stopWords)} AS stops
         | FROM documents),
         | feats AS (SELECT doc_id,
         |  round(CASE WHEN toks>0 THEN CAST(nc-(toks-1) AS DOUBLE)/toks ELSE 0 END,4) AS mwl,
@@ -4294,20 +3811,9 @@ object SparkEntry {
     "text_langid" -> Gate((s, dir) =>
       TextAnalysis.languageId(t(s, dir, "documents"), "text")
         .select(col("doc_id"), col("lang_guess")),
-      oracle = """WITH s AS (
+      oracle = s"""WITH s AS (
         | SELECT doc_id,
-        |  len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |   t -> list_contains(['der','die','das','und','ist','nicht','ein','mit','von','zu'],
-        |     regexp_replace(t, '[^a-z]', '', 'g')))) AS s_de,
-        |  len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |   t -> list_contains(['the','and','of','to','is','in','that','was','with','for'],
-        |     regexp_replace(t, '[^a-z]', '', 'g')))) AS s_en,
-        |  len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |   t -> list_contains(['el','la','los','y','es','en','que','una','por','con'],
-        |     regexp_replace(t, '[^a-z]', '', 'g')))) AS s_es,
-        |  len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |   t -> list_contains(['le','la','les','et','est','une','dans','que','pour','des'],
-        |     regexp_replace(t, '[^a-z]', '', 'g')))) AS s_fr
+        |  $langHits
         | FROM documents)
         |SELECT doc_id,
         | CASE WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr AND s_de > 0 THEN 'de'
@@ -4394,70 +3900,14 @@ object SparkEntry {
     "pack_windows" -> Gate((s, dir) =>
       TextAnalysis.packWindows(t(s, dir, "documents"), "text", "doc_id",
         ctxLen = 512),
-      oracle = """WITH tc AS (
-        |  SELECT doc_id,
-        |    CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens
-        |  FROM documents),
-        | c AS (
-        |  SELECT doc_id, n_tokens,
-        |    CAST(SUM(n_tokens) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens
-        |      AS BIGINT) AS start_off
-        |  FROM tc WHERE n_tokens > 0),
-        | b AS (
-        |  SELECT doc_id, n_tokens, start_off,
-        |    unnest(range(start_off // 512,
-        |                 (start_off + n_tokens - 1) // 512 + 1)) AS bin
-        |  FROM c),
-        | s AS (
-        |  SELECT bin, doc_id,
-        |    greatest(start_off, bin * 512) - bin * 512 AS span_start,
-        |    least(start_off + n_tokens, bin * 512 + 512)
-        |      - greatest(start_off, bin * 512) AS span_len
-        |  FROM b)
-        |SELECT bin, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(span_len) AS BIGINT) AS n_tokens,
-        |  string_agg(CAST(doc_id AS VARCHAR) || ':' ||
-        |             CAST(span_start AS VARCHAR) || ':' ||
-        |             CAST(span_len AS VARCHAR),
-        |             ',' ORDER BY span_start, doc_id) AS doc_spans
-        |FROM s GROUP BY bin""".stripMargin, frozen = true),
+      oracle = packOracleSql(512), frozen = true),
 
     // ---- text: window packing with a HARD source boundary — no
     //      context window mixes sources ----
     "pack_windows_by_source" -> Gate((s, dir) =>
       TextAnalysis.packWindowsBySource(t(s, dir, "documents"), "text",
         "doc_id", "source", ctxLen = 512),
-      oracle = """WITH tc AS (
-        |  SELECT source, doc_id,
-        |    CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens
-        |  FROM documents),
-        | c AS (
-        |  SELECT source, doc_id, n_tokens,
-        |    CAST(SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens
-        |      AS BIGINT) AS start_off
-        |  FROM tc WHERE n_tokens > 0),
-        | b AS (
-        |  SELECT source, doc_id, n_tokens, start_off,
-        |    unnest(range(start_off // 512,
-        |                 (start_off + n_tokens - 1) // 512 + 1)) AS bin
-        |  FROM c),
-        | s AS (
-        |  SELECT source, bin, doc_id,
-        |    greatest(start_off, bin * 512) - bin * 512 AS span_start,
-        |    least(start_off + n_tokens, bin * 512 + 512)
-        |      - greatest(start_off, bin * 512) AS span_len
-        |  FROM b)
-        |SELECT source, bin, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(span_len) AS BIGINT) AS n_tokens,
-        |  string_agg(CAST(doc_id AS VARCHAR) || ':' ||
-        |             CAST(span_start AS VARCHAR) || ':' ||
-        |             CAST(span_len AS VARCHAR),
-        |             ',' ORDER BY span_start, doc_id) AS doc_spans
-        |FROM s GROUP BY source, bin""".stripMargin),
+      oracle = packOracleSql(512, "source")),
 
     // ---- text: window packing with a HIGH-CARDINALITY stratum key
     //      (per-user-grade) — the keyed-window path: one shuffle on the
@@ -4472,35 +3922,7 @@ object SparkEntry {
       // the keyed-window twin of pack_windows_by_source: same packing rule
       // with a synthetic per-user stratum (doc_id mod 97) and 128-token
       // windows — the oracle is path-independent
-      oracle = """WITH tc AS (
-        |  SELECT ((doc_id % 97) + 97) % 97 AS user_bucket, doc_id,
-        |    CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens
-        |  FROM documents),
-        | c AS (
-        |  SELECT user_bucket, doc_id, n_tokens,
-        |    CAST(SUM(n_tokens) OVER (PARTITION BY user_bucket ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens
-        |      AS BIGINT) AS start_off
-        |  FROM tc WHERE n_tokens > 0),
-        | b AS (
-        |  SELECT user_bucket, doc_id, n_tokens, start_off,
-        |    unnest(range(start_off // 128,
-        |                 (start_off + n_tokens - 1) // 128 + 1)) AS bin
-        |  FROM c),
-        | s AS (
-        |  SELECT user_bucket, bin, doc_id,
-        |    greatest(start_off, bin * 128) - bin * 128 AS span_start,
-        |    least(start_off + n_tokens, bin * 128 + 128)
-        |      - greatest(start_off, bin * 128) AS span_len
-        |  FROM b)
-        |SELECT user_bucket, bin, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(span_len) AS BIGINT) AS n_tokens,
-        |  string_agg(CAST(doc_id AS VARCHAR) || ':' ||
-        |             CAST(span_start AS VARCHAR) || ':' ||
-        |             CAST(span_len AS VARCHAR),
-        |             ',' ORDER BY span_start, doc_id) AS doc_spans
-        |FROM s GROUP BY user_bucket, bin""".stripMargin),
+      oracle = packOracleSql(128, "user_bucket", "((doc_id % 97) + 97) % 97")),
 
     // ---- layout: Z-ORDER (Morton) clustering code — scale each
     //      dimension to 16 bits against its global min/max, interleave
@@ -4583,7 +4005,6 @@ object SparkEntry {
     //      named headers, Content-Length payload slicing, HTTP status/
     //      content-type/body extraction for response records ----
     "warc_records" -> Gate((s, dir) => {
-      import graft.functions.WarcCodec
       t(s, dir, "documents").select(col("doc_id"),
           explode(WarcCodec.warc_records(
             WarcCodec.warc_synth(col("doc_id"), col("text")))).as("r"))
@@ -4603,7 +4024,6 @@ object SparkEntry {
     //      sniffs the magic, inflates the member chain, and must land
     //      on byte-identical fields ----
     "warc_records_gz" -> Gate((s, dir) => {
-      import graft.functions.WarcCodec
       t(s, dir, "documents").select(col("doc_id"),
           explode(WarcCodec.warc_records(
             WarcCodec.warc_synth_gz(col("doc_id"), col("text")))).as("r"))
@@ -4622,7 +4042,6 @@ object SparkEntry {
     //      protocol fields, namespace-qualified, exploded one row per
     //      URL (the crawl-frontier seeding step) ----
     "sitemap_urls" -> Gate((s, dir) => {
-      import graft.functions.Sitemap
       def urlEntry(j: Int) = concat(
         lit("<url><loc>https://site"), pmod(col("doc_id"), lit(11)),
         lit(s".example/p/"), col("doc_id"), lit(s"/$j</loc>"),
@@ -4637,10 +4056,7 @@ object SparkEntry {
         urlEntry(0), urlEntry(1), lit("</urlset>"))
       t(s, dir, "documents")
         .select(col("doc_id"), explode(Sitemap.sitemap_entries(xml)).as("e"))
-        .select(col("doc_id"), col("e.kind").as("kind"),
-          col("e.loc").as("loc"), col("e.lastmod").as("lastmod"),
-          col("e.changefreq").as("changefreq"),
-          col("e.priority").as("priority"))
+        .select(statCols("e.kind", "e.loc", "e.lastmod", "e.changefreq", "e.priority"): _*)
     }, oracle =
       // two constructed url entries per document, fields recomputed
       // directly from the synthesis rule
@@ -4780,7 +4196,6 @@ object SparkEntry {
     //      root-relative and ../ shapes all land on the oracle's
     //      directly-constructed URLs ----
     "html_links" -> Gate((s, dir) => {
-      import graft.functions.HtmlOps
       val base = concat(lit("https://base"), pmod(col("doc_id"), lit(11)),
         lit(".example/dir/page"), col("doc_id"), lit(".html"))
       val html = concat(
@@ -4872,7 +4287,6 @@ object SparkEntry {
     //      root-relative links die at the robots gate; everything
     //      composes as plain projections + one aggregation ----
     "pipeline_crawl" -> Gate((s, dir) => {
-      import graft.functions.{HtmlOps, RobotsOps}
       val base = concat(lit("https://base"), pmod(col("doc_id"), lit(11)),
         lit(".example/dir/page"), col("doc_id"), lit(".html"))
       val html = concat(
@@ -4918,33 +4332,7 @@ object SparkEntry {
     //      event_type; the oracle replays the due/changed rules and
     //      window counts from events.parquet ----
     "pipeline_nrt" -> Gate((s, dir) => graft.streaming.NrtPipeline.run(s, dir),
-      // NRT lifecycle replay: datasets = event_types ranked alphabetically;
-      // rank 1 not due (source mtime unchanged), even ranks due+changed
-      // (stale stored fingerprint → overwrite of the window count), odd
-      // ranks > 1 due+unchanged (no-op, touched only). now = the truncated
-      // max event time; the 7-day window is closed on both ends at second
-      // granularity (the ERDDAP URL grammar the connector compiles to)
-      oracle = """WITH nw AS (SELECT date_trunc('second', max(ts)) AS now FROM events),
-        |ds AS (SELECT event_type,
-        |         row_number() OVER (ORDER BY event_type) AS r
-        |       FROM (SELECT DISTINCT event_type FROM events)),
-        |win AS (SELECT e.event_type, count(*) AS n
-        |        FROM events e, nw
-        |        WHERE date_trunc('second', e.ts) >= nw.now - INTERVAL 7 DAY
-        |          AND date_trunc('second', e.ts) <= nw.now
-        |        GROUP BY e.event_type)
-        |SELECT 'ds_' || ds.event_type AS dataset_id,
-        |       ds.r > 1 AS was_due,
-        |       (ds.r > 1 AND ds.r % 2 = 0) AS changed,
-        |       CASE WHEN ds.r > 1 AND ds.r % 2 = 0
-        |            THEN CAST(coalesce(win.n, 0) AS BIGINT)
-        |            ELSE CAST(-1 AS BIGINT) END AS rows_written,
-        |       CASE WHEN ds.r > 1 AND ds.r % 2 = 0 THEN 'b'
-        |            ELSE 'a' END AS slot_after,
-        |       CASE WHEN ds.r > 1 THEN nw.now
-        |            ELSE nw.now - INTERVAL 1 DAY END AS refreshed_at_s
-        |FROM ds LEFT JOIN win ON ds.event_type = win.event_type
-        |CROSS JOIN nw""".stripMargin),
+      oracle = nrtLifecycleOracleSql),
 
     // ---- streaming: the SAME NRT lifecycle body driven through the
     //      live ArcGIS-sharing-REST transport over real sockets
@@ -4952,45 +4340,22 @@ object SparkEntry {
     //      (add/search/props/update/touch all HTTP). Same oracle as
     //      pipeline_nrt. ----
     "pipeline_nrt_rest" -> Gate((s, dir) => graft.streaming.NrtPipeline.runViaRest(s, dir),
-      // same lifecycle rules, REST transport — identical oracle shape
-      oracle = """WITH nw AS (SELECT date_trunc('second', max(ts)) AS now FROM events),
-        |ds AS (SELECT event_type,
-        |         row_number() OVER (ORDER BY event_type) AS r
-        |       FROM (SELECT DISTINCT event_type FROM events)),
-        |win AS (SELECT e.event_type, count(*) AS n
-        |        FROM events e, nw
-        |        WHERE date_trunc('second', e.ts) >= nw.now - INTERVAL 7 DAY
-        |          AND date_trunc('second', e.ts) <= nw.now
-        |        GROUP BY e.event_type)
-        |SELECT 'ds_' || ds.event_type AS dataset_id,
-        |       ds.r > 1 AS was_due,
-        |       (ds.r > 1 AND ds.r % 2 = 0) AS changed,
-        |       CASE WHEN ds.r > 1 AND ds.r % 2 = 0
-        |            THEN CAST(coalesce(win.n, 0) AS BIGINT)
-        |            ELSE CAST(-1 AS BIGINT) END AS rows_written,
-        |       CASE WHEN ds.r > 1 AND ds.r % 2 = 0 THEN 'b'
-        |            ELSE 'a' END AS slot_after,
-        |       CASE WHEN ds.r > 1 THEN nw.now
-        |            ELSE nw.now - INTERVAL 1 DAY END AS refreshed_at_s
-        |FROM ds LEFT JOIN win ON ds.event_type = win.event_type
-        |CROSS JOIN nw""".stripMargin),
+      oracle = nrtLifecycleOracleSql),
 
     // ---- graph: damped PageRank over a deterministic link graph
     //      (doc i → (3i+1, 5i+2, 7i+3) mod N) — 5 fixed power-iteration
     //      rounds, lineage checkpoint-truncated per round; the oracle
     //      unrolls the same 5 rounds in SQL ----
     "pagerank_links" -> Gate((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"))
-      val n = docs.count()
-      val edges = docs.select(col("doc_id").as("src"),
-        explode(array(
-          pmod(col("doc_id") * 3 + 1, lit(n)),
-          pmod(col("doc_id") * 5 + 2, lit(n)),
-          pmod(col("doc_id") * 7 + 3, lit(n)))).as("dst"))
+      val (_, edges) = linkGraph(s, dir, 3)
       LinkGraph.pageRank(edges, "src", "dst", iterations = 5,
         idCol = "doc_id")
         .select(col("doc_id"), round(col("rank"), 9).as("rank"))
     }, oracle = {
+      // the same 5 power-iteration rounds unrolled; (1 - 0.85)/n is kept
+      // as the literal two-op form so both engines compute the identical
+      // IEEE double, and ranks round to 9 decimals (values ~2e-3, cross-
+      // engine summation-order noise ~1e-17 — eight orders of margin)
       def round(prev: String, cur: String): String =
         s"""$cur AS (SELECT nd.id,
            |  (1 - 0.85)/(SELECT n FROM nn)
@@ -5000,13 +4365,8 @@ object SparkEntry {
            |  LEFT JOIN $prev p ON p.id = e.src
            |  LEFT JOIN deg dg ON dg.src = e.src
            |  GROUP BY nd.id)""".stripMargin
-      s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-         | nodes AS (SELECT doc_id AS id FROM documents),
-         | edges AS (
-         |  SELECT DISTINCT id AS src, dst FROM (
-         |    SELECT id, (id*3+1) % (SELECT n FROM nn) AS dst FROM nodes
-         |    UNION ALL SELECT id, (id*5+2) % (SELECT n FROM nn) FROM nodes
-         |    UNION ALL SELECT id, (id*7+3) % (SELECT n FROM nn) FROM nodes)),
+      s"""WITH ${linkCtes(3)},
+         | edges AS (SELECT DISTINCT src, dst FROM dir),
          | deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
          | r0 AS (SELECT id, 1.0/(SELECT n FROM nn) AS r FROM nodes),
          | ${round("r0", "r1")},
@@ -5020,37 +4380,25 @@ object SparkEntry {
     // ---- graph: bounded-radius harmonic centrality (3 hops) over the
     //      undirected synthetic graph — Σ n_d/d from exact counts ----
     "harmonic_links" -> Gate((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"))
-      val n = docs.count()
-      val edges = docs.select(col("doc_id").as("src"),
-        explode(array(
-          pmod(col("doc_id") * 3 + 1, lit(n)),
-          pmod(col("doc_id") * 5 + 2, lit(n)))).as("dst"))
+      val (docs, edges) = linkGraph(s, dir, 2)
       LinkGraph.harmonicCentrality(edges, "src", "dst", maxDist = 3,
         nodes = docs, idCol = "doc_id")
     }, oracle =
       // harmonic centrality: BFS radius 3 unrolled — d2/d3 are frontier
       // joins minus already-seen pairs; the score folds exact counts as
       // n1/1.0 + n2/2.0 + n3/3.0 (the Spark expression verbatim)
-      """WITH nn AS (SELECT count(*) AS n FROM documents),
-        | nodes AS (SELECT doc_id AS id FROM documents),
-        | dirx AS (
-        |  SELECT id AS a, (id*3+1) % (SELECT n FROM nn) AS b FROM nodes
-        |  UNION ALL SELECT id, (id*5+2) % (SELECT n FROM nn) FROM nodes),
-        | und AS (
-        |  SELECT DISTINCT a, b FROM (
-        |    SELECT a, b FROM dirx UNION ALL SELECT b, a FROM dirx)
-        |  WHERE a <> b),
-        | d1 AS (SELECT a AS u, b AS v FROM und),
+      s"""WITH ${linkCtes(2)},
+        | $undCte,
+        | d1 AS (SELECT src AS u, dst AS v FROM und),
         | d2 AS (
-        |  SELECT DISTINCT f.u, e.b AS v FROM d1 f JOIN und e ON e.a = f.v
-        |  WHERE e.b <> f.u AND NOT EXISTS (
-        |    SELECT 1 FROM d1 x WHERE x.u = f.u AND x.v = e.b)),
+        |  SELECT DISTINCT f.u, e.dst AS v FROM d1 f JOIN und e ON e.src = f.v
+        |  WHERE e.dst <> f.u AND NOT EXISTS (
+        |    SELECT 1 FROM d1 x WHERE x.u = f.u AND x.v = e.dst)),
         | d3 AS (
-        |  SELECT DISTINCT f.u, e.b AS v FROM d2 f JOIN und e ON e.a = f.v
-        |  WHERE e.b <> f.u
-        |    AND NOT EXISTS (SELECT 1 FROM d1 x WHERE x.u = f.u AND x.v = e.b)
-        |    AND NOT EXISTS (SELECT 1 FROM d2 x WHERE x.u = f.u AND x.v = e.b)),
+        |  SELECT DISTINCT f.u, e.dst AS v FROM d2 f JOIN und e ON e.src = f.v
+        |  WHERE e.dst <> f.u
+        |    AND NOT EXISTS (SELECT 1 FROM d1 x WHERE x.u = f.u AND x.v = e.dst)
+        |    AND NOT EXISTS (SELECT 1 FROM d2 x WHERE x.u = f.u AND x.v = e.dst)),
         | c1 AS (SELECT u, count(*) AS n FROM d1 GROUP BY 1),
         | c2 AS (SELECT u, count(*) AS n FROM d2 GROUP BY 1),
         | c3 AS (SELECT u, count(*) AS n FROM d3 GROUP BY 1)
@@ -5064,21 +4412,11 @@ object SparkEntry {
 
     // ---- graph: reciprocity of the DIRECTED synthetic graph ----
     "reciprocity_links" -> Gate((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"))
-      val n = docs.count()
-      val edges = docs.select(col("doc_id").as("src"),
-        explode(array(
-          pmod(col("doc_id") * 3 + 1, lit(n)),
-          pmod(col("doc_id") * 5 + 2, lit(n)))).as("dst"))
+      val (_, edges) = linkGraph(s, dir, 2)
       LinkGraph.reciprocity(edges, "src", "dst")
     }, oracle =
-      """WITH nn AS (SELECT count(*) AS n FROM documents),
-        | nodes AS (SELECT doc_id AS id FROM documents),
-        | e AS (
-        |  SELECT DISTINCT a, b FROM (
-        |   SELECT id AS a, (id*3+1) % (SELECT n FROM nn) AS b FROM nodes
-        |   UNION ALL SELECT id, (id*5+2) % (SELECT n FROM nn) FROM nodes)
-        |  WHERE a <> b),
+      s"""WITH ${linkCtes(2)},
+        | e AS (SELECT DISTINCT src AS a, dst AS b FROM dir WHERE src <> dst),
         | mu AS (
         |  SELECT count(*) AS r FROM e
         |  WHERE EXISTS (SELECT 1 FROM e x WHERE x.a = e.b AND x.b = e.a)),
@@ -5091,27 +4429,15 @@ object SparkEntry {
     // ---- graph: degree assortativity (Newman 2002) of the synthetic
     //      undirected graph — one number, exact integer sums ----
     "assortativity_links" -> Gate((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"))
-      val n = docs.count()
-      val edges = docs.select(col("doc_id").as("src"),
-        explode(array(
-          pmod(col("doc_id") * 3 + 1, lit(n)),
-          pmod(col("doc_id") * 5 + 2, lit(n)))).as("dst"))
+      val (_, edges) = linkGraph(s, dir, 2)
       LinkGraph.degreeAssortativity(edges, "src", "dst")
     }, oracle =
-      """WITH nn AS (SELECT count(*) AS n FROM documents),
-        | nodes AS (SELECT doc_id AS id FROM documents),
-        | dirx AS (
-        |  SELECT id AS a, (id*3+1) % (SELECT n FROM nn) AS b FROM nodes
-        |  UNION ALL SELECT id, (id*5+2) % (SELECT n FROM nn) FROM nodes),
-        | und AS (
-        |  SELECT DISTINCT a, b FROM (
-        |    SELECT a, b FROM dirx UNION ALL SELECT b, a FROM dirx)
-        |  WHERE a <> b),
-        | deg AS (SELECT a AS id, count(*) AS d FROM und GROUP BY 1),
+      s"""WITH ${linkCtes(2)},
+        | $undCte,
+        | deg AS (SELECT src AS id, count(*) AS d FROM und GROUP BY 1),
         | wd AS (
         |  SELECT da.d AS dx, db.d AS dy FROM und u
-        |  JOIN deg da ON da.id = u.a JOIN deg db ON db.id = u.b),
+        |  JOIN deg da ON da.id = u.src JOIN deg db ON db.id = u.dst),
         | agg AS (
         |  SELECT count(*) AS m, sum(dx) AS sx, sum(dy) AS sy,
         |    sum(dx*dy) AS sxy, sum(dx*dx) AS sxx, sum(dy*dy) AS syy
@@ -5128,13 +4454,7 @@ object SparkEntry {
     //      seed set over the same synthetic graph (4 rounds; the graph
     //      has no dangling nodes, so the oracle needs no dangling term) ----
     "ppr_links" -> Gate((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"))
-      val n = docs.count()
-      val edges = docs.select(col("doc_id").as("src"),
-        explode(array(
-          pmod(col("doc_id") * 3 + 1, lit(n)),
-          pmod(col("doc_id") * 5 + 2, lit(n)),
-          pmod(col("doc_id") * 7 + 3, lit(n)))).as("dst"))
+      val (docs, edges) = linkGraph(s, dir, 3)
       val seeds = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
       LinkGraph.personalizedPageRank(edges, "src", "dst", seeds,
         iterations = 4, idCol = "doc_id")
@@ -5153,13 +4473,8 @@ object SparkEntry {
            |  LEFT JOIN $prev p2 ON p2.id = e.src
            |  LEFT JOIN deg dg ON dg.src = e.src
            |  GROUP BY nd.id, pp.p)""".stripMargin
-      s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-         | nodes AS (SELECT doc_id AS id FROM documents),
-         | edges AS (
-         |  SELECT DISTINCT id AS src, dst FROM (
-         |    SELECT id, (id*3+1) % (SELECT n FROM nn) AS dst FROM nodes
-         |    UNION ALL SELECT id, (id*5+2) % (SELECT n FROM nn) FROM nodes
-         |    UNION ALL SELECT id, (id*7+3) % (SELECT n FROM nn) FROM nodes)),
+      s"""WITH ${linkCtes(3)},
+         | edges AS (SELECT DISTINCT src, dst FROM dir),
          | deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
          | ns AS (SELECT count(*) AS s FROM nodes WHERE id % 10 = 0),
          | p AS (SELECT id, CASE WHEN id % 10 = 0
@@ -5177,102 +4492,45 @@ object SparkEntry {
     //      mirror of the same synthetic link graph; deterministic so
     //      the oracle replays identical rounds ----
     "labelprop_links" -> Gate((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"))
-      val n = docs.count()
-      val edges = docs.select(col("doc_id").as("src"),
-        explode(array(
-          pmod(col("doc_id") * 3 + 1, lit(n)),
-          pmod(col("doc_id") * 5 + 2, lit(n)))).as("dst"))
+      val (_, edges) = linkGraph(s, dir, 2)
       LinkGraph.labelPropagation(edges, "src", "dst", iterations = 3,
         idCol = "doc_id")
         .select(col("doc_id"), col("label"))
-    }, oracle = {
-      // the same 5 power-iteration rounds unrolled; (1 - 0.85)/n is kept
-      // as the literal two-op form so both engines compute the identical
-      // IEEE double, and ranks round to 9 decimals (values ~2e-3, cross-
-      // engine summation-order noise ~1e-17 — eight orders of margin)
-      // three unrolled synchronous rounds: neighbor-label counts, winner
-      // by (count desc, label asc), keep-own-label when isolated
-      def lpRound(prev: String, v: String, w: String, cur: String): String =
-        s"""$v AS (SELECT e.dst AS id, p.lbl, count(*) AS n
-           |  FROM und e JOIN $prev p ON e.src = p.id GROUP BY 1, 2),
-           |$w AS (SELECT id, lbl FROM (
-           |  SELECT id, lbl, row_number() OVER (
-           |    PARTITION BY id ORDER BY n DESC, lbl) AS rn FROM $v)
-           |  WHERE rn = 1),
-           |$cur AS (SELECT p.id, coalesce($w.lbl, p.lbl) AS lbl
-           |  FROM $prev p LEFT JOIN $w ON p.id = $w.id)""".stripMargin
-      s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-         | nodes AS (SELECT doc_id AS id FROM documents),
-         | dir AS (
-         |  SELECT id AS src, (id*3+1) % (SELECT n FROM nn) AS dst FROM nodes
-         |  UNION ALL
-         |  SELECT id, (id*5+2) % (SELECT n FROM nn) FROM nodes),
-         | und AS (
-         |  SELECT DISTINCT src, dst FROM (
-         |    SELECT src, dst FROM dir UNION ALL SELECT dst, src FROM dir)
-         |  WHERE src <> dst),
+    }, oracle =
+      // three unrolled synchronous rounds (lpRound)
+      s"""WITH ${linkCtes(2)},
+         | $undCte,
          | l0 AS (SELECT DISTINCT src AS id, src AS lbl FROM und),
          |${lpRound("l0", "v1", "w1", "l1")},
          |${lpRound("l1", "v2", "w2", "l2")},
          |${lpRound("l2", "v3", "w3", "l3")}
-         |SELECT id AS doc_id, lbl AS label FROM l3""".stripMargin
-    }, lazyPin = true),
+         |SELECT id AS doc_id, lbl AS label FROM l3""".stripMargin, lazyPin = true),
 
     // ---- graph: oscillation-hardened label propagation — one extra
     //      round, `stable` = consecutive states agree, label = min of
     //      the pair (phase-independent on bipartite 2-cycles) ----
     "labelprop_stable" -> Gate((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"))
-      val n = docs.count()
-      val edges = docs.select(col("doc_id").as("src"),
-        explode(array(
-          pmod(col("doc_id") * 3 + 1, lit(n)),
-          pmod(col("doc_id") * 5 + 2, lit(n)))).as("dst"))
+      val (_, edges) = linkGraph(s, dir, 2)
       LinkGraph.labelPropagationStable(edges, "src", "dst", iterations = 2,
         idCol = "doc_id")
         .select(col("doc_id"), col("label"), col("stable"))
-    }, oracle = {
+    }, oracle =
       // same vote rounds; compare rounds 2 and 3, min-resolve the pair
-      def lpRound(prev: String, v: String, w: String, cur: String): String =
-        s"""$v AS (SELECT e.dst AS id, p.lbl, count(*) AS n
-           |  FROM und e JOIN $prev p ON e.src = p.id GROUP BY 1, 2),
-           |$w AS (SELECT id, lbl FROM (
-           |  SELECT id, lbl, row_number() OVER (
-           |    PARTITION BY id ORDER BY n DESC, lbl) AS rn FROM $v)
-           |  WHERE rn = 1),
-           |$cur AS (SELECT p.id, coalesce($w.lbl, p.lbl) AS lbl
-           |  FROM $prev p LEFT JOIN $w ON p.id = $w.id)""".stripMargin
-      s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-         | nodes AS (SELECT doc_id AS id FROM documents),
-         | dir AS (
-         |  SELECT id AS src, (id*3+1) % (SELECT n FROM nn) AS dst FROM nodes
-         |  UNION ALL
-         |  SELECT id, (id*5+2) % (SELECT n FROM nn) FROM nodes),
-         | und AS (
-         |  SELECT DISTINCT src, dst FROM (
-         |    SELECT src, dst FROM dir UNION ALL SELECT dst, src FROM dir)
-         |  WHERE src <> dst),
+      s"""WITH ${linkCtes(2)},
+         | $undCte,
          | l0 AS (SELECT DISTINCT src AS id, src AS lbl FROM und),
          |${lpRound("l0", "v1", "w1", "l1")},
          |${lpRound("l1", "v2", "w2", "l2")},
          |${lpRound("l2", "v3", "w3", "l3")}
          |SELECT a.id AS doc_id, least(a.lbl, b.lbl) AS label,
          |       a.lbl = b.lbl AS stable
-         |FROM l2 a JOIN l3 b ON a.id = b.id""".stripMargin
-    }, lazyPin = true, frozen = true),
+         |FROM l2 a JOIN l3 b ON a.id = b.id""".stripMargin, lazyPin = true, frozen = true),
 
     // ---- graph: HITS hubs & authorities (3 rounds) over the same
     //      synthetic link graph — max-normalized + 6-dp pinned per
     //      half-round, so the oracle replays the identical trajectory ----
     "hits_links" -> Gate((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"))
-      val n = docs.count()
-      val edges = docs.select(col("doc_id").as("src"),
-        explode(array(
-          pmod(col("doc_id") * 3 + 1, lit(n)),
-          pmod(col("doc_id") * 5 + 2, lit(n)),
-          pmod(col("doc_id") * 7 + 3, lit(n)))).as("dst"))
+      val (_, edges) = linkGraph(s, dir, 3)
       LinkGraph.hits(edges, "src", "dst", iterations = 3, idCol = "doc_id")
         .select(col("doc_id"), col("hub"), col("authority"))
     }, oracle = {
@@ -5290,13 +4548,8 @@ object SparkEntry {
            |$out AS MATERIALIZED (SELECT nd.id,
            |  round(coalesce(x.s, 0) / (SELECT max(s) FROM $sums), 6) AS s
            |  FROM nodes nd LEFT JOIN $sums x ON nd.id = x.id)""".stripMargin
-      s"""WITH nn AS MATERIALIZED (SELECT count(*) AS n FROM documents),
-         | nodes AS (SELECT doc_id AS id FROM documents),
-         | edges AS MATERIALIZED (
-         |  SELECT DISTINCT id AS src, dst FROM (
-         |    SELECT id, (id*3+1) % n AS dst FROM nodes, nn
-         |    UNION ALL SELECT id, (id*5+2) % n FROM nodes, nn
-         |    UNION ALL SELECT id, (id*7+3) % n FROM nodes, nn)),
+      s"""WITH ${linkCtes(3)},
+         | edges AS MATERIALIZED (SELECT DISTINCT src, dst FROM dir),
          | h0 AS (SELECT id, 1.0 AS s FROM nodes),
          |${half("h0", "src", "dst", "a1s", "a1")},
          |${half("a1", "dst", "src", "h1s", "h1")},
@@ -5312,13 +4565,7 @@ object SparkEntry {
     //      coefficient — degree-ordered wedge enumeration (no Σ deg²
     //      blowup); exact integers, orientation-independent oracle ----
     "triangle_counts" -> Gate((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"))
-      val n = docs.count()
-      val edges = docs.select(col("doc_id").as("src"),
-        explode(array(
-          pmod(col("doc_id") * 3 + 1, lit(n)),
-          pmod(col("doc_id") * 5 + 2, lit(n)),
-          pmod(col("doc_id") * 7 + 3, lit(n)))).as("dst"))
+      val (_, edges) = linkGraph(s, dir, 3)
       LinkGraph.triangleCounts(edges, "src", "dst", idCol = "doc_id")
         .select(col("doc_id"), col("triangles"), col("degree"),
           round(col("lcc"), 6).as("lcc"))
@@ -5327,15 +4574,10 @@ object SparkEntry {
       // the oracle enumerates each triangle once by canonical a<b<c
       // (the Spark side's degree-ordered orientation is a physical
       // optimization with the identical result)
-      """WITH nn AS (SELECT count(*) AS n FROM documents),
-        | nodes AS (SELECT doc_id AS id FROM documents),
-        | dir AS (
-        |  SELECT id AS a, (id*3+1) % (SELECT n FROM nn) AS b FROM nodes
-        |  UNION ALL SELECT id, (id*5+2) % (SELECT n FROM nn) FROM nodes
-        |  UNION ALL SELECT id, (id*7+3) % (SELECT n FROM nn) FROM nodes),
+      s"""WITH ${linkCtes(3)},
         | und AS (
-        |  SELECT DISTINCT least(a, b) AS lo, greatest(a, b) AS hi
-        |  FROM dir WHERE a <> b),
+        |  SELECT DISTINCT least(src, dst) AS lo, greatest(src, dst) AS hi
+        |  FROM dir WHERE src <> dst),
         | deg AS (SELECT id, count(*) AS deg FROM (
         |   SELECT lo AS id FROM und UNION ALL SELECT hi FROM und)
         |  GROUP BY 1),
@@ -5391,8 +4633,7 @@ object SparkEntry {
            |  SELECT u.lo, u.hi FROM $prev u
            |  JOIN sup_$cur s ON s.lo = u.lo AND s.hi = u.hi
            |  WHERE s.s >= 2)""".stripMargin
-      s"""WITH nn AS MATERIALIZED (SELECT count(*) AS n FROM documents),
-         | nodes AS (SELECT doc_id AS id FROM documents),
+      s"""WITH $linkNodeCtes,
          | dir AS (
          |  SELECT id AS a, (id + 1) % n AS b FROM nodes, nn WHERE id < n // 2
          |  UNION ALL SELECT id, (id + 2) % n FROM nodes, nn WHERE id < n // 2
@@ -5413,13 +4654,7 @@ object SparkEntry {
     //      past convergence are no-ops); the oracle unrolls the same
     //      deterministic trajectory ----
     "graph_coreness" -> Gate((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"))
-      val n = docs.count()
-      val edges = docs.select(col("doc_id").as("src"),
-        explode(array(
-          pmod(col("doc_id") * 3 + 1, lit(n)),
-          pmod(col("doc_id") * 5 + 2, lit(n)),
-          pmod(col("doc_id") * 7 + 3, lit(n)))).as("dst"))
+      val (docs, edges) = linkGraph(s, dir, 3)
       LinkGraph.coreness(edges, "src", "dst", iterations = 6,
         nodes = docs, idCol = "doc_id")
         .select(col("doc_id"), col("coreness"))
@@ -5436,16 +4671,8 @@ object SparkEntry {
            |      row_number() OVER (PARTITION BY e.dst ORDER BY p.h DESC) AS rn
            |    FROM und e JOIN $prev p ON e.src = p.id) x ON x.id = nd.id
            |  GROUP BY nd.id)""".stripMargin
-      s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-         | nodes AS (SELECT doc_id AS id FROM documents),
-         | dir AS (
-         |  SELECT id AS src, (id*3+1) % (SELECT n FROM nn) AS dst FROM nodes
-         |  UNION ALL SELECT id, (id*5+2) % (SELECT n FROM nn) FROM nodes
-         |  UNION ALL SELECT id, (id*7+3) % (SELECT n FROM nn) FROM nodes),
-         | und AS (
-         |  SELECT DISTINCT src, dst FROM (
-         |    SELECT src, dst FROM dir UNION ALL SELECT dst, src FROM dir)
-         |  WHERE src <> dst),
+      s"""WITH ${linkCtes(3)},
+         | $undCte,
          | h0 AS (SELECT nd.id, coalesce(d.deg, 0) AS h FROM nodes nd
          |   LEFT JOIN (SELECT dst AS id, count(*) AS deg FROM und
          |     GROUP BY 1) d ON d.id = nd.id),
@@ -5513,7 +4740,6 @@ object SparkEntry {
     //      appended to every document and must invert exactly, while
     //      an already-clean accent suffix passes through untouched ----
     "text_fix_mojibake" -> Gate((s, dir) => {
-      import graft.functions.Mojibake
       val clean = "café naïve — “ok’ №"
       val broken = new String(
         clean.getBytes(java.nio.charset.StandardCharsets.UTF_8),
@@ -5534,7 +4760,6 @@ object SparkEntry {
     //      UA specificity, longest-pattern decision, Allow tie-break;
     //      even ids carry a crawler-specific group, odd ids fall to * ----
     "robots_filter" -> Gate((s, dir) => {
-      import graft.functions.RobotsOps
       val robots = concat(
         when(pmod(col("doc_id"), lit(2)) === 0,
           concat(lit("User-agent: crawler0\nDisallow: /a"),
@@ -5564,7 +4789,6 @@ object SparkEntry {
     //      specific-agent group beats *, fractional seconds legal,
     //      absent → null; the politeness input for crawl_schedule ----
     "robots_delay" -> Gate((s, dir) => {
-      import graft.functions.RobotsOps
       val k = pmod(col("doc_id"), lit(4))
       val robots =
         when(k === 0, concat(lit("User-agent: *\nCrawl-delay: "),
@@ -5625,7 +4849,6 @@ object SparkEntry {
     //      independent per RFC 9309 §2.2.4, collected file-wide in
     //      order (comments stripped, blanks skipped) ----
     "robots_sitemaps" -> Gate((s, dir) => {
-      import graft.functions.RobotsOps
       val robots = concat(
         lit("User-agent: *\nDisallow: /private\n"),
         lit("Sitemap: https://s"), pmod(col("doc_id"), lit(7)),
@@ -5679,7 +4902,6 @@ object SparkEntry {
     //      deterministically; the oracle constructs the clean form
     //      directly (same pattern as html_links) ----
     "url_canonical" -> Gate((s, dir) => {
-      import graft.functions.HtmlOps
       val m = pmod(col("doc_id"), lit(11)).cast("string")
       val k = pmod(col("doc_id"), lit(6))
       val messy =
@@ -5787,10 +5009,9 @@ object SparkEntry {
     "shard_assign" -> Gate((s, dir) =>
       TextAnalysis.shardByTokenBudget(t(s, dir, "documents"), "text", "doc_id",
         shardTokens = 5000L),
-      oracle = """WITH ranked AS (
+      oracle = s"""WITH ranked AS (
         |  SELECT doc_id,
-        |    CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens,
+        |    $tokenCountSql AS n_tokens,
         |    md5(CAST(doc_id AS VARCHAR)) AS bk
         |  FROM documents),
         | c AS (
@@ -6011,18 +5232,7 @@ object SparkEntry {
            |  FROM lrfeats f JOIN $d dd USING (doc_id) GROUP BY 1),
            |$cur AS (SELECT dims.j, round(p.w - 0.4 * coalesce(g.g, 0.0), 6) AS w
            |  FROM dims JOIN $prev p USING (j) LEFT JOIN $g g USING (j))""".stripMargin
-      s"""WITH lrfeats AS (
-         |  SELECT doc_id, bucket,
-         |    tf / sum(tf) OVER (PARTITION BY doc_id) AS x
-         |  FROM (SELECT doc_id,
-         |      ('0x' || substr(md5(tok), 1, 13))::UBIGINT % 64 AS bucket,
-         |      CAST(count(*) AS DOUBLE) AS tf
-         |    FROM (SELECT doc_id, unnest(string_split(trim(regexp_replace(
-         |        lower(text), '[^a-z0-9]+', ' ', 'g')), ' ')) AS tok
-         |      FROM documents) WHERE tok <> '' GROUP BY 1, 2)),
-         | lab AS (SELECT doc_id,
-         |    CASE WHEN source = 'src0' THEN 1.0 ELSE 0.0 END AS y
-         |  FROM documents),
+      s"""WITH $logregCtes,
          | nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents),
          | dims AS (SELECT r AS j FROM range(64) t(r)),
          | w0 AS (SELECT j, 0.0 AS w FROM dims),
@@ -6064,18 +5274,7 @@ object SparkEntry {
            |    round(p.w - 0.4 * round(coalesce(g.g, 0.0)
            |      + CASE WHEN dims.j >= 0 THEN 0.25 * p.w ELSE 0.0 END, 6), 6) AS w
            |  FROM dims JOIN $prev p USING (j) LEFT JOIN $g g USING (j))""".stripMargin
-      s"""WITH lrfeats AS (
-         |  SELECT doc_id, bucket,
-         |    tf / sum(tf) OVER (PARTITION BY doc_id) AS x
-         |  FROM (SELECT doc_id,
-         |      ('0x' || substr(md5(tok), 1, 13))::UBIGINT % 64 AS bucket,
-         |      CAST(count(*) AS DOUBLE) AS tf
-         |    FROM (SELECT doc_id, unnest(string_split(trim(regexp_replace(
-         |        lower(text), '[^a-z0-9]+', ' ', 'g')), ' ')) AS tok
-         |      FROM documents) WHERE tok <> '' GROUP BY 1, 2)),
-         | lab AS (SELECT doc_id,
-         |    CASE WHEN source = 'src0' THEN 1.0 ELSE 0.0 END AS y
-         |  FROM documents),
+      s"""WITH $logregCtes,
          | lrfeats2 AS (SELECT doc_id, CAST(bucket AS BIGINT) AS bucket, x
          |    FROM lrfeats
          |  UNION ALL SELECT doc_id, CAST(-1 AS BIGINT), 1.0 FROM lab),
@@ -6138,10 +5337,9 @@ object SparkEntry {
     "corpus_report" -> Gate((s, dir) =>
       TextAnalysis.corpusReport(t(s, dir, "documents"), "text", "source",
         minTokens = 30, medianExact = true),
-      oracle = """WITH tc AS (
+      oracle = s"""WITH tc AS (
         |  SELECT source AS stratum,
-        |    CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens
+        |    $tokenCountSql AS n_tokens
         |  FROM documents)
         |SELECT stratum, CAST(count(*) AS BIGINT) AS n_docs,
         |  CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
@@ -6158,10 +5356,9 @@ object SparkEntry {
     "pack_sequences" -> Gate((s, dir) =>
       TextAnalysis.packSequences(t(s, dir, "documents"), "text", "doc_id",
         ctxLen = 512),
-      oracle = """WITH tc AS (
+      oracle = s"""WITH tc AS (
         |  SELECT doc_id,
-        |    CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens
+        |    $tokenCountSql AS n_tokens
         |  FROM documents),
         | c AS (
         |  SELECT doc_id, n_tokens,
@@ -6182,10 +5379,9 @@ object SparkEntry {
     "pack_whole_docs" -> Gate((s, dir) =>
       TextAnalysis.packWholeDocs(t(s, dir, "documents"), "text", "doc_id",
         ctxLen = 512),
-      oracle = """WITH tc AS (
+      oracle = s"""WITH tc AS (
         |  SELECT doc_id,
-        |    CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens
+        |    $tokenCountSql AS n_tokens
         |  FROM documents),
         | k AS (
         |  SELECT doc_id, n_tokens,
@@ -6479,10 +5675,9 @@ object SparkEntry {
     }, oracle =
       // RRF: both rank lists rebuilt with QUALIFY'd windows, fused with
       // the published 1/(k + rank) rule
-      """WITH n AS (
+      s"""WITH n AS (
         |  SELECT doc_id,
-        |    CASE WHEN length(trim(text)) = 0 THEN 0
-        |      ELSE len(string_split_regex(trim(text), '\s+')) END AS nt
+        |    $tokenCountSql AS nt
         |  FROM documents),
         |ra AS (
         |  SELECT doc_id, row_number() OVER (ORDER BY
@@ -6501,35 +5696,13 @@ object SparkEntry {
     //      share a fold (md5 of the cluster representative mod k) ----
     "cv_folds" -> Gate((s, dir) => {
       val cust = t(s, dir, "customer")
-      def side(idc: String) = cust.select(col("c_custkey").as(idc),
-        col("c_nationkey").as("n"), expr("c_custkey div 4").as("blk"))
-      val a = side("id1")
-      val sameBlk = a.join(side("id2"), Seq("n", "blk"))
-      val nextBlk = a.withColumn("blk", col("blk") + 1)
-        .join(side("id2"), Seq("n", "blk"))
-      val pairs = sameBlk.unionByName(nextBlk)
-        .filter(col("id1") < col("id2") && col("id2") - col("id1") <= 3)
-        .select("id1", "id2")
+      val pairs = custPairs(cust)
       Dedup.cvFoldsByCluster(cust.select(col("c_custkey")), "c_custkey",
         pairs, k = 5)
     }, oracle =
       // k-fold CV: same recursive components as dedup_clusters, fold =
       // md5 bucket of the representative mod k
-      """WITH pairs AS (
-        |  SELECT a.c_custkey AS id1, b.c_custkey AS id2
-        |  FROM customer a JOIN customer b
-        |    ON a.c_nationkey = b.c_nationkey
-        |   AND a.c_custkey < b.c_custkey
-        |   AND b.c_custkey - a.c_custkey <= 3),
-        |edges AS (
-        |  SELECT id1 AS a, id2 AS b FROM pairs
-        |  UNION SELECT id2, id1 FROM pairs),
-        |walk AS (
-        |  WITH RECURSIVE r(id, lbl) AS (
-        |    SELECT a, a FROM edges
-        |    UNION
-        |    SELECT e.b, r.lbl FROM r JOIN edges e ON r.id = e.a)
-        |  SELECT * FROM r),
+      s"""WITH $custWalkCtes,
         |lab AS (SELECT id, min(lbl) AS cluster FROM walk GROUP BY id)
         |SELECT c.c_custkey,
         |  ('0x' || substr(md5(CAST(coalesce(l.cluster, c.c_custkey)
@@ -6544,10 +5717,9 @@ object SparkEntry {
         .select(col("doc_id"), col("n_tokens"), col("bucket"), col("batch")),
       // length buckets: bucket = len(bin(n)) - 1 (exact floor(log2)),
       // batches by the md5 rank window within each bucket
-      oracle = """WITH n AS (
+      oracle = s"""WITH n AS (
         |  SELECT doc_id,
-        |    CASE WHEN length(trim(text)) = 0 THEN 0
-        |      ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens
+        |    $tokenCountSql AS n_tokens
         |  FROM documents),
         |b AS (
         |  SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
@@ -6585,8 +5757,7 @@ object SparkEntry {
           graft.functions.SpanCorruptOps.span_corrupt(col("text"),
             col("doc_id").cast("string"), blockLen = 20, spanLen = 3)
             .as("p"))
-        .select(col("doc_id"), col("p.input").as("input"),
-          col("p.target").as("target"), col("p.n_spans").as("n_spans")),
+        .select(statCols("p.input", "p.target", "p.n_spans"): _*),
       // span corruption: the oracle re-places each block's span from the
       // same md5 rule and reassembles input/target with ordered
       // string_agg (NULLs skipped = masked tokens dropped)
@@ -6862,19 +6033,7 @@ object SparkEntry {
         .withColumn("variant", pmod(col("user_id"), lit(2)))
         .groupBy(col("variant"), col("steps_completed"))
         .agg(count(lit(1)).as("users")),
-      oracle = """WITH s1 AS (
-        |  SELECT user_id, min(epoch_us(ts)) AS t1 FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        | s2 AS (
-        |  SELECT e.user_id, min(s1.t1) AS t1, min(epoch_us(e.ts)) AS t
-        |  FROM events e JOIN s1 ON e.user_id = s1.user_id
-        |  WHERE e.event_type = 'click' AND epoch_us(e.ts) > s1.t1
-        |    AND epoch_us(e.ts) <= s1.t1 + 604800000000 GROUP BY 1),
-        | s3 AS (
-        |  SELECT e.user_id, min(epoch_us(e.ts)) AS t
-        |  FROM events e JOIN s2 ON e.user_id = s2.user_id
-        |  WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > s2.t
-        |    AND epoch_us(e.ts) <= s2.t1 + 604800000000 GROUP BY 1),
+      oracle = s"""WITH ${funnelCtes()},
         | depth AS (
         |  SELECT user_id, CAST(max(step) AS BIGINT) AS steps_completed
         |  FROM (
@@ -7146,10 +6305,9 @@ object SparkEntry {
     "sample_token_budget" -> Gate((s, dir) =>
       TextAnalysis.sampleToTokenBudget(t(s, dir, "documents"), "text",
         "doc_id", budgetTokens = 10000L),
-      oracle = """WITH ranked AS (
+      oracle = s"""WITH ranked AS (
         |  SELECT doc_id,
-        |    CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(string_split_regex(trim(text), '\s+')) END AS n_tokens,
+        |    $tokenCountSql AS n_tokens,
         |    md5(CAST(doc_id AS VARCHAR)) AS bk
         |  FROM documents),
         | c AS (
@@ -7299,7 +6457,373 @@ object SparkEntry {
   lazy val oracleSql: Map[String, String] = gates.view.mapValues(_.oracle).toMap
   lazy val lazyPinGates: Set[String] = gates.collect { case (n, g) if g.lazyPin => n }.toSet
 
+  // ---- shared gate inputs ---------------------------------------------------
+
+  /** The cluster gates' deterministic near-dup graph: same-nation
+    * customers with custkey gap ≤ 3 are "duplicates". Pair generation
+    * is BANDED on custkey div 4 (gap ≤ 3 ⇒ the partner is in the same
+    * or the next block), so both joins are equi-joins on
+    * (nation, block) — the naive same-nation join compares every
+    * custkey pair within a nation, O(n²/nations), and was measured
+    * 25× the whole-query cost at sf1. Identical pair set; the two
+    * block joins are disjoint by construction. */
+  private def custPairs(cust: DataFrame): DataFrame = {
+    def side(idc: String) = cust.select(col("c_custkey").as(idc),
+      col("c_nationkey").as("n"), expr("c_custkey div 4").as("blk"))
+    val a = side("id1")
+    val sameBlk = a.join(side("id2"), Seq("n", "blk"))
+    val nextBlk = a.withColumn("blk", col("blk") + 1)
+      .join(side("id2"), Seq("n", "blk"))
+    sameBlk.unionByName(nextBlk)
+      .filter(col("id1") < col("id2") && col("id2") - col("id1") <= 3)
+      .select("id1", "id2")
+  }
+
+  /** The graph gates' deterministic link graph over `documents`: doc i
+    * links to (3i+1, 5i+2 and, for `fanout` 3, 7i+3) mod N. Returns the
+    * doc_id node frame and the (src, dst) edges. */
+  private def linkGraph(s: SparkSession, dir: String,
+      fanout: Int): (DataFrame, DataFrame) = {
+    val docs = t(s, dir, "documents").select(col("doc_id"))
+    val n = docs.count()
+    val links = Seq(3 -> 1, 5 -> 2, 7 -> 3).take(fanout).map { case (k, c) =>
+      pmod(col("doc_id") * k + c, lit(n)) }
+    (docs, docs.select(col("doc_id").as("src"), explode(array(links: _*)).as("dst")))
+  }
+
+  /** doc_id plus each struct field `path` (`st.width`) as a column
+    * named by its last segment — the codec gates' stat projection. */
+  private def statCols(paths: String*): Seq[Column] =
+    col("doc_id") +: paths.map(p => col(p).as(p.split('.').last))
+
+  /** The still-image gates' frame: `img` (built from doc_id and text)
+    * decoded to its dims, pixel count and channel sums (`sum_a` too
+    * when `alpha`). */
+  private def imageStats(s: SparkSession, dir: String, img: Column,
+      alpha: Boolean = false): DataFrame =
+    t(s, dir, "documents")
+      .select(col("doc_id"), ImageCodec.image_pixel_stats(img).as("st"))
+      .select(statCols(Seq("st.width", "st.height", "st.n_px", "st.sum_r", "st.sum_g",
+        "st.sum_b") ++ (if (alpha) Seq("st.sum_a") else Nil): _*): _*)
+
+  /** The router gates' input: one binary payload per document — PNG,
+    * WAV, AVI, 4:2:0 JPEG or GIF by doc_id % 5 — sniffed by each
+    * decoder's meta expression (`im`, `am`, `vm`, `gm`). */
+  private def routedMeta(s: SparkSession, dir: String): DataFrame = {
+    val m = pmod(col("doc_id"), lit(5))
+    val payload = when(m === 0,
+        ImageCodec.image_synth_png(col("doc_id"), col("text")))
+      .when(m === 1, AudioCodec.audio_synth_wav(col("doc_id"), col("text")))
+      .when(m === 2, VideoCodec.video_synth_avi(col("doc_id"), col("text")))
+      .when(m === 3, ImageCodec.image_synth_jpeg420(col("doc_id"), col("text")))
+      .otherwise(GifCodec.gif_synth(col("doc_id"), col("text")))
+    t(s, dir, "documents").select(col("doc_id"), payload.as("payload"))
+      .select(col("doc_id"),
+        ImageCodec.image_meta(col("payload")).as("im"),
+        AudioCodec.audio_meta(col("payload")).as("am"),
+        VideoCodec.video_meta(col("payload")).as("vm"),
+        GifCodec.gif_meta(col("payload")).as("gm"))
+  }
+
   // ---- generated oracle-SQL fragments (md5-portable pipelines) -----------
+
+  /** Oracle twin of [[custPairs]] plus its recursive-CTE components:
+    * `walk` holds every (id, reachable label) pair. */
+  private val custWalkCtes: String =
+    """pairs AS (
+      |  SELECT a.c_custkey AS id1, b.c_custkey AS id2
+      |  FROM customer a JOIN customer b
+      |    ON a.c_nationkey = b.c_nationkey
+      |   AND a.c_custkey < b.c_custkey
+      |   AND b.c_custkey - a.c_custkey <= 3),
+      |edges AS (
+      |  SELECT id1 AS a, id2 AS b FROM pairs
+      |  UNION SELECT id2, id1 FROM pairs),
+      |walk AS (
+      |  WITH RECURSIVE r(id, lbl) AS (
+      |    SELECT a, a FROM edges
+      |    UNION
+      |    SELECT e.b, r.lbl FROM r JOIN edges e ON r.id = e.a)
+      |  SELECT * FROM r)""".stripMargin
+
+  /** The funnel oracles' conditional-min chain (view → click →
+    * purchase, each within 7 days of the view); `s3Carry` adds columns
+    * to the last step. */
+  private def funnelCtes(s3Carry: String = ""): String =
+    s"""s1 AS (
+       |  SELECT user_id, min(epoch_us(ts)) AS t1 FROM events
+       |  WHERE event_type = 'view' GROUP BY 1),
+       | s2 AS (
+       |  SELECT e.user_id, min(s1.t1) AS t1, min(epoch_us(e.ts)) AS t
+       |  FROM events e JOIN s1 ON e.user_id = s1.user_id
+       |  WHERE e.event_type = 'click' AND epoch_us(e.ts) > s1.t1
+       |    AND epoch_us(e.ts) <= s1.t1 + 604800000000 GROUP BY 1),
+       | s3 AS (
+       |  SELECT e.user_id, ${s3Carry}min(epoch_us(e.ts)) AS t
+       |  FROM events e JOIN s2 ON e.user_id = s2.user_id
+       |  WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > s2.t
+       |    AND epoch_us(e.ts) <= s2.t1 + 604800000000 GROUP BY 1)""".stripMargin
+
+  /** Hourly per-type event counts over `events` (`where` restricts the
+    * hours) and their per-type population moments. */
+  private def hourlyCtes(where: String = ""): String =
+    s"""hourly AS (
+       |  SELECT date_trunc('hour', ts) AS hour, event_type,
+       |    count(*) AS n
+       |  FROM events$where GROUP BY 1, 2),
+       | st AS (
+       |  SELECT event_type, count(*) AS h, sum(n) AS s,
+       |    sum(n*n) AS s2
+       |  FROM hourly GROUP BY 1)""".stripMargin
+
+  /** Hourly anomaly z-scores against the per-type moments (the
+    * anomaly_hours formula); `where` as in [[hourlyCtes]]. */
+  private def anomalyOracleSql(where: String = ""): String =
+    s"""WITH ${hourlyCtes(where)},
+       | zs AS (
+       |  SELECT hr.hour, hr.event_type, hr.n,
+       |    CASE WHEN st.s2::DOUBLE/st.h
+       |              - (st.s::DOUBLE/st.h)*(st.s::DOUBLE/st.h) <= 0
+       |         THEN 0.0
+       |         ELSE (hr.n - st.s::DOUBLE/st.h) /
+       |              sqrt(st.s2::DOUBLE/st.h
+       |                   - (st.s::DOUBLE/st.h)*(st.s::DOUBLE/st.h))
+       |    END AS z
+       |  FROM hourly hr JOIN st ON hr.event_type = st.event_type)
+       |SELECT hour, event_type, n, round(z, 6) AS z,
+       |  abs(z) >= 2.0 AS is_anomaly
+       |FROM zs""".stripMargin
+
+  /** NRT lifecycle replay shared by the model and REST pipeline gates:
+    * datasets = event_types ranked alphabetically; rank 1 not due
+    * (source mtime unchanged), even ranks due+changed (stale stored
+    * fingerprint → overwrite of the window count), odd ranks > 1
+    * due+unchanged (no-op, touched only). now = the truncated max event
+    * time; the 7-day window is closed on both ends at second granularity
+    * (the ERDDAP URL grammar the connector compiles to). */
+  private val nrtLifecycleOracleSql: String =
+    """WITH nw AS (SELECT date_trunc('second', max(ts)) AS now FROM events),
+      |ds AS (SELECT event_type,
+      |         row_number() OVER (ORDER BY event_type) AS r
+      |       FROM (SELECT DISTINCT event_type FROM events)),
+      |win AS (SELECT e.event_type, count(*) AS n
+      |        FROM events e, nw
+      |        WHERE date_trunc('second', e.ts) >= nw.now - INTERVAL 7 DAY
+      |          AND date_trunc('second', e.ts) <= nw.now
+      |        GROUP BY e.event_type)
+      |SELECT 'ds_' || ds.event_type AS dataset_id,
+      |       ds.r > 1 AS was_due,
+      |       (ds.r > 1 AND ds.r % 2 = 0) AS changed,
+      |       CASE WHEN ds.r > 1 AND ds.r % 2 = 0
+      |            THEN CAST(coalesce(win.n, 0) AS BIGINT)
+      |            ELSE CAST(-1 AS BIGINT) END AS rows_written,
+      |       CASE WHEN ds.r > 1 AND ds.r % 2 = 0 THEN 'b'
+      |            ELSE 'a' END AS slot_after,
+      |       CASE WHEN ds.r > 1 THEN nw.now
+      |            ELSE nw.now - INTERVAL 1 DAY END AS refreshed_at_s
+      |FROM ds LEFT JOIN win ON ds.event_type = win.event_type
+      |CROSS JOIN nw""".stripMargin
+
+  /** The link-graph oracles' node CTEs: `nn` (the node count, one row)
+    * and `nodes`. */
+  private val linkNodeCtes: String =
+    """nn AS MATERIALIZED (SELECT count(*) AS n FROM documents),
+      | nodes AS (SELECT doc_id AS id FROM documents)""".stripMargin
+
+  /** Oracle twin of [[linkGraph]]: the node CTEs plus `dir`, the
+    * directed (src, dst) links. */
+  private def linkCtes(fanout: Int): String = {
+    val links = Seq("id*3+1", "id*5+2", "id*7+3").take(fanout)
+      .map(l => s"SELECT id, ($l) % (SELECT n FROM nn) FROM nodes")
+    s"""$linkNodeCtes,
+       | dir(src, dst) AS (
+       |  ${links.mkString("\n  UNION ALL ")})""".stripMargin
+  }
+
+  /** `und`: [[linkCtes]]' `dir` mirrored to undirected, self-loops
+    * dropped. */
+  private val undCte: String =
+    """und AS (
+      |  SELECT DISTINCT src, dst FROM (
+      |    SELECT src, dst FROM dir UNION ALL SELECT dst, src FROM dir)
+      |  WHERE src <> dst)""".stripMargin
+
+  /** One synchronous label-propagation round over `und`: neighbor-label
+    * counts, winner by (count desc, label asc), keep-own-label when
+    * isolated. */
+  private def lpRound(prev: String, v: String, w: String, cur: String): String =
+    s"""$v AS (SELECT e.dst AS id, p.lbl, count(*) AS n
+       |  FROM und e JOIN $prev p ON e.src = p.id GROUP BY 1, 2),
+       |$w AS (SELECT id, lbl FROM (
+       |  SELECT id, lbl, row_number() OVER (
+       |    PARTITION BY id ORDER BY n DESC, lbl) AS rn FROM $v)
+       |  WHERE rn = 1),
+       |$cur AS (SELECT p.id, coalesce($w.lbl, p.lbl) AS lbl
+       |  FROM $prev p LEFT JOIN $w ON p.id = $w.id)""".stripMargin
+
+  /** Whitespace token count of `text` — the oracle twin of
+    * [[TextAnalysis.tokenCount]]. */
+  private val tokenCountSql: String =
+    """CASE WHEN length(trim(text)) = 0 THEN 0
+      |    ELSE len(string_split_regex(trim(text), '\s+')) END""".stripMargin
+
+  /** Count of `text`'s lowercased whitespace tokens that, stripped to
+    * letters, are in `words` (a SQL list body). */
+  private def wordHits(words: String): String =
+    raw"""len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
+         |    t -> list_contains([$words], regexp_replace(t, '[^a-z]', '', 'g'))))""".stripMargin
+
+  private val stopWords: String =
+    "'the','a','an','and','or','of','to','in','is','it'," +
+      "'that','was','for','on','with','as','at','by','be'"
+
+  /** The language-id oracles' per-language function-word hits
+    * (`s_de`, `s_en`, `s_es`, `s_fr`). */
+  private val langHits: String = Seq(
+    "de" -> "'der','die','das','und','ist','nicht','ein','mit','von','zu'",
+    "en" -> "'the','and','of','to','is','in','that','was','with','for'",
+    "es" -> "'el','la','los','y','es','en','que','una','por','con'",
+    "fr" -> "'le','la','les','et','est','une','dans','que','pour','des'"
+  ).map { case (l, w) => s"${wordHits(w)} AS s_$l" }.mkString(",\n  ")
+
+  /** Window-packing oracle: documents' whitespace tokens concatenated
+    * in doc_id order (within each `key` stratum, computed by `keyExpr`
+    * when given) and cut into `ctx`-token windows, each listing its
+    * docs' provenance spans. */
+  private def packOracleSql(ctx: Int, key: String = "", keyExpr: String = ""): String = {
+    val k = if (key.isEmpty) "" else s"$key, "
+    val keySel = if (keyExpr.isEmpty) k else s"$keyExpr AS $k"
+    val part = if (key.isEmpty) "" else s"PARTITION BY $key "
+    s"""WITH tc AS (
+       |  SELECT ${keySel}doc_id,
+       |    $tokenCountSql AS n_tokens
+       |  FROM documents),
+       | c AS (
+       |  SELECT ${k}doc_id, n_tokens,
+       |    CAST(SUM(n_tokens) OVER (${part}ORDER BY doc_id
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens
+       |      AS BIGINT) AS start_off
+       |  FROM tc WHERE n_tokens > 0),
+       | b AS (
+       |  SELECT ${k}doc_id, n_tokens, start_off,
+       |    unnest(range(start_off // $ctx,
+       |                 (start_off + n_tokens - 1) // $ctx + 1)) AS bin
+       |  FROM c),
+       | s AS (
+       |  SELECT ${k}bin, doc_id,
+       |    greatest(start_off, bin * $ctx) - bin * $ctx AS span_start,
+       |    least(start_off + n_tokens, bin * $ctx + $ctx)
+       |      - greatest(start_off, bin * $ctx) AS span_len
+       |  FROM b)
+       |SELECT ${k}bin, CAST(count(*) AS BIGINT) AS n_docs,
+       |  CAST(sum(span_len) AS BIGINT) AS n_tokens,
+       |  string_agg(CAST(doc_id AS VARCHAR) || ':' ||
+       |             CAST(span_start AS VARCHAR) || ':' ||
+       |             CAST(span_len AS VARCHAR),
+       |             ',' ORDER BY span_start, doc_id) AS doc_spans
+       |FROM s GROUP BY ${k}bin""".stripMargin
+  }
+
+  /** The logreg oracles' hashed tf features (`lrfeats`: 64 md5 buckets,
+    * tf normalized per doc) and labels (`lab`: src0 = 1). */
+  private val logregCtes: String =
+    """lrfeats AS (
+      |  SELECT doc_id, bucket,
+      |    tf / sum(tf) OVER (PARTITION BY doc_id) AS x
+      |  FROM (SELECT doc_id,
+      |      ('0x' || substr(md5(tok), 1, 13))::UBIGINT % 64 AS bucket,
+      |      CAST(count(*) AS DOUBLE) AS tf
+      |    FROM (SELECT doc_id, unnest(string_split(trim(regexp_replace(
+      |        lower(text), '[^a-z0-9]+', ' ', 'g')), ' ')) AS tok
+      |      FROM documents) WHERE tok <> '' GROUP BY 1, 2)),
+      | lab AS (SELECT doc_id,
+      |    CASE WHEN source = 'src0' THEN 1.0 ELSE 0.0 END AS y
+      |  FROM documents)""".stripMargin
+
+  /** Cosine of every `c` candidate (vec_id, v) against every `q` query
+    * (qid, qv), 0 for a zero-norm pair — the knn oracles' `scored`. */
+  private val knnScoredCte: String =
+    """scored AS (
+      |  SELECT q.qid, c.vec_id,
+      |    CASE WHEN sqrt(list_sum(list_transform(c.v, x -> x*x))) *
+      |              sqrt(list_sum(list_transform(q.qv, x -> x*x))) = 0
+      |         THEN 0.0
+      |         ELSE list_sum(list_transform(list_zip(c.v, q.qv), p -> p[1]*p[2])) /
+      |              (sqrt(list_sum(list_transform(c.v, x -> x*x))) *
+      |               sqrt(list_sum(list_transform(q.qv, x -> x*x))))
+      |    END AS cos
+      |  FROM c CROSS JOIN q)""".stripMargin
+
+  /** Codec oracles' per-doc image dims (max of the `w`/`h` columns). */
+  private val maxDims: String =
+    """CAST(max(w) AS INTEGER) AS width,
+      |  CAST(max(h) AS INTEGER) AS height""".stripMargin
+
+  /** The PNG synth's four channel-slot samples at (x, y) for doc `id`:
+    * floorMod(x*(3+2c) + y*(5+2c) + id*(c+1), 256) as v0..v3. */
+  private def pngSamples(x: String, y: String, id: String): String =
+    (0 until 4).map { c =>
+      s"(($x*${3 + 2 * c} + $y*${5 + 2 * c} + $id${if (c == 0) "" else s"*${c + 1}"})" +
+        s" % 256 + 256) % 256 AS v$c"
+    }.mkString(",\n         ")
+
+  /** Channel sums of [[pngSamples]] by color type `cti` (gray/RGB/
+    * gray+alpha/RGBA). */
+  private val pngSums: String =
+    """CAST(sum(v0) AS BIGINT) AS sum_r,
+      |  CAST(sum(CASE WHEN cti IN (0, 2) THEN v0 ELSE v1 END) AS BIGINT)
+      |    AS sum_g,
+      |  CAST(sum(CASE WHEN cti IN (0, 2) THEN v0 ELSE v2 END) AS BIGINT)
+      |    AS sum_b,
+      |  CAST(CASE WHEN max(cti) = 2 THEN sum(v1)
+      |            WHEN max(cti) = 3 THEN sum(v3) END AS BIGINT) AS sum_a""".stripMargin
+
+  /** The JPEG decoder's fixed-rounding YCbCr→RGB over `yv`/`cb`/`cr`
+    * as `r`, `g`, `b`: the e0 suffixes force DOUBLE arithmetic (a bare
+    * 1.402 is DECIMAL in DuckDB, which rounds differently). */
+  private val ycbcrRgb: String =
+    """greatest(0, least(255,
+      |      CAST(floor(yv + 1.402e0*cr + 0.5e0) AS BIGINT))) AS r,
+      |    greatest(0, least(255,
+      |      CAST(floor(yv - 0.344136e0*cb - 0.714136e0*cr + 0.5e0) AS BIGINT))) AS g,
+      |    greatest(0, least(255,
+      |      CAST(floor(yv + 1.772e0*cb + 0.5e0) AS BIGINT))) AS b""".stripMargin
+
+  /** Channel sums of [[ycbcrRgb]], gray docs summing their `gv` plane. */
+  private val grayRgbSums: String =
+    """CAST(sum(CASE WHEN gray THEN gv ELSE r END) AS BIGINT) AS sum_r,
+      |  CAST(sum(CASE WHEN gray THEN gv ELSE g END) AS BIGINT) AS sum_g,
+      |  CAST(sum(CASE WHEN gray THEN gv ELSE b END) AS BIGINT) AS sum_b""".stripMargin
+
+  /** The MJPEG synth's block-constant planes at block (bx, by) of
+    * frame t. */
+  private val mjpegBlockPlanes: String =
+    """((bx*7 + by*11 + t*19 + doc_id) % 256 + 256) % 256 AS gv,
+      |    ((bx*5 + by*7 + t*17 + doc_id) % 256 + 256) % 256 AS yv,
+      |    ((bx*3 + by*13 + t*5 + doc_id*2) % 256 + 256) % 256 - 128 AS cb,
+      |    ((bx*11 + by*3 + t*7 + doc_id*3) % 256 + 256) % 256 - 128 AS cr""".stripMargin
+
+  /** Channel sums of the AVI synth's per-frame gradient at (x, y, t). */
+  private val aviSums: String =
+    """CAST(sum(((x*13 + y*17 + t*19 + doc_id*3) % 256 + 256) % 256)
+      |    AS BIGINT) AS sum_r,
+      |  CAST(sum(((x*7 + y*11 + t*23 + doc_id*2) % 256 + 256) % 256)
+      |    AS BIGINT) AS sum_g,
+      |  CAST(sum(((x*3 + y*5 + t*29 + doc_id) % 256 + 256) % 256)
+      |    AS BIGINT) AS sum_b""".stripMargin
+
+  /** The WAV synths' sample rate, cycling by doc_id. */
+  private val pcmRate: String =
+    """CASE ((doc_id % 4) + 4) % 4 WHEN 0 THEN 8000
+      |           WHEN 1 THEN 16000 WHEN 2 THEN 22050 ELSE 44100 END AS rate""".stripMargin
+
+  /** Left/right sums and peak of a mono-or-stereo (`ch`) `v0`/`v1`
+    * sample stream. */
+  private val pcmSums: String =
+    """CAST(sum(v0) AS BIGINT) AS sum_l,
+      |  CAST(CASE WHEN max(ch) = 2 THEN sum(v1) END AS BIGINT) AS sum_r,
+      |  CAST(max(greatest(abs(v0),
+      |    CASE WHEN ch = 2 THEN abs(v1) ELSE 0 END)) AS INTEGER) AS peak""".stripMargin
 
   /** Shingle CTEs proven bit-compatible with [[Dedup.shingles]] by the
     * long-green dedup_minhash_oracle gate. */
@@ -7316,21 +6840,6 @@ object SparkEntry {
       |    ELSE [array_to_string(t, ' ')] END AS sh
       |  FROM toks)""".stripMargin
 
-  /** Shared oracle SQL for the exact shingle-set Jaccard pair gates
-    * (`dedup_ngram_jaccard`, `dedup_jaccard_prefix`). The naive
-    * `sh a JOIN sh b ON a.doc_id < b.doc_id` replay is quadratic in
-    * documents (every pair pays a list intersection) and timed out at
-    * sf1 (SELFCHECK_sf1.log, round 12) — the only two unproven-at-10×
-    * gates. This version applies the PUBLIC AllPairs prefix-filter
-    * theorem (Bayardo WWW'07) inside the oracle, engine-agnostically:
-    * order each doc's shingles by global rarity, keep the first
-    * sz − ⌈t·sz⌉ + 1 as its prefix, and only pairs sharing a PREFIX
-    * shingle (plus the t-length-ratio bound) reach the exact verify
-    * join — zero false negatives by the theorem, and the verify step
-    * recomputes exact Jaccard from the FULL shingle sets, so candidate
-    * generation never affects values. ⌈4·sz/5⌉ is computed in integer
-    * arithmetic ((4·sz+4)//5) — no fp-ceil hazard at all (the Spark
-    * side needs an epsilon guard; the oracle does not). */
   /** Deterministic per-(word, doc_id) salting of every 6th word — the
     * distinct-document twin of the clone-amplified sf1 fixture: clones
     * carry remapped doc_ids, so each copy salts DIFFERENTLY and the
@@ -7389,6 +6898,21 @@ object SparkEntry {
        |JOIN nrm o ON o.doc_id = c.corpus_id
        |WHERE levenshtein(e.nt, o.nt) <= 20""".stripMargin
 
+  /** Shared oracle SQL for the exact shingle-set Jaccard pair gates
+    * (`dedup_ngram_jaccard`, `dedup_jaccard_prefix`). The naive
+    * `sh a JOIN sh b ON a.doc_id < b.doc_id` replay is quadratic in
+    * documents (every pair pays a list intersection) and timed out at
+    * sf1 (SELFCHECK_sf1.log, round 12) — the only two unproven-at-10×
+    * gates. This version applies the PUBLIC AllPairs prefix-filter
+    * theorem (Bayardo WWW'07) inside the oracle, engine-agnostically:
+    * order each doc's shingles by global rarity, keep the first
+    * sz − ⌈t·sz⌉ + 1 as its prefix, and only pairs sharing a PREFIX
+    * shingle (plus the t-length-ratio bound) reach the exact verify
+    * join — zero false negatives by the theorem, and the verify step
+    * recomputes exact Jaccard from the FULL shingle sets, so candidate
+    * generation never affects values. ⌈4·sz/5⌉ is computed in integer
+    * arithmetic ((4·sz+4)//5) — no fp-ceil hazard at all (the Spark
+    * side needs an epsilon guard; the oracle does not). */
   private val jaccardPrefixOracleSql: String =
     s"""WITH $shingleCtes,
        |sizes AS (SELECT doc_id, len(sh) AS sz FROM sh),
@@ -7467,10 +6991,6 @@ object SparkEntry {
        |  FROM pairs p JOIN norms na ON na.vec_id = p.id1
        |               JOIN norms nb ON nb.vec_id = p.id2)""".stripMargin
 
-  /** Unrolled Lloyd-iteration CTEs mirroring
-    * [[Similarity.trainCentroids]] (ordered sample, first-k init,
-    * first-min tie-break, per-dim mean in sample order) +
-    * [[Similarity.ivfTopK]]. k=8, iters=3, nProbe=4, dim=64. */
   /** Unrolled BPE-merge rounds mirroring [[TextAnalysis.trainBpeMerges]]
     * (wrapped-marker state, greedy left-to-right `replace` merges,
     * count-desc lexicographic winner per round). k = 8, minPairCount
@@ -7517,10 +7037,6 @@ object SparkEntry {
     "WITH " + bpeCtes(k) + "\n" + finalSel
   }
 
-  /** Encode-side oracle: the same doc-state pipeline as
-    * [[TextAnalysis.bpeSubwordCount]] — wrap every char, mark word
-    * boundaries with '#', apply the k trained merges in rank order,
-    * count subwords as count("||") + nWords. */
   /** The doc-state encode chain shared by the bpe_encode and
     * bpe_token_ids oracles: wrap every char, mark word boundaries with
     * '#', apply the k trained merges in rank order.
@@ -7544,6 +7060,10 @@ object SparkEntry {
     enc0 +: encs
   }
 
+  /** Encode-side oracle: the same doc-state pipeline as
+    * [[TextAnalysis.bpeSubwordCount]] — wrap every char, mark word
+    * boundaries with '#', apply the k trained merges in rank order,
+    * count subwords as count("||") + nWords. */
   private def bpeEncodeOracleSql(k: Int): String =
     "WITH " + (bpeCtes(k) +: bpeEncCtes(k)).mkString(",\n") + "\n" +
       s"""SELECT doc_id, CAST(CASE WHEN st = '' THEN 0 ELSE
@@ -7648,25 +7168,7 @@ object SparkEntry {
     * ALL vectors assigned to the final centroids and exact cosine over
     * same-cluster pairs. The annulus pruning on the Spark side is
     * lossless, so the oracle needs no mirror of it. */
-  private val semDedupOracleCtes: String = {
-    val iters = 3
-    def dist(vec: String, cent: String): String =
-      s"list_sum(list_transform(list_zip($vec, $cent), z -> (z[1]-z[2])*(z[1]-z[2])))"
-    val iterCtes = (1 to iters).map { i =>
-      s"""sa$i AS (
-         |  SELECT vec_id, e, ci,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY dist, ci) AS rk
-         |  FROM (SELECT s.vec_id, s.e, c.ci, ${dist("s.e", "c.cv")} AS dist
-         |        FROM ssample s CROSS JOIN scent${i - 1} c)),
-         |sm$i AS (
-         |  SELECT ci, list_transform(range(0, 64), d ->
-         |      list_sum(list_transform(vecs, v -> v[d+1])) / cnt) AS cv
-         |  FROM (SELECT ci, list(e ORDER BY vec_id) AS vecs, count(*) AS cnt
-         |        FROM sa$i WHERE rk = 1 GROUP BY ci)),
-         |scent$i AS MATERIALIZED (
-         |  SELECT p.ci, COALESCE(m.cv, p.cv) AS cv
-         |  FROM scent${i - 1} p LEFT JOIN sm$i m ON m.ci = p.ci)""".stripMargin
-    }.mkString(",\n")
+  private val semDedupOracleCtes: String =
     // each scent$i is referenced twice (the next round's assignment +
     // the next centroid patch), so MATERIALIZED keeps the Lloyd chain
     // linear; sasg/spairs feed multiply-referencing consumers
@@ -7678,12 +7180,9 @@ object SparkEntry {
        |scent0 AS MATERIALIZED (
        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci, e AS cv
        |  FROM ssample ORDER BY vec_id LIMIT 64),
-       |$iterCtes,
+       |${lloydRounds("s", "", "ssample", iters = 3, dim = 64, materialized = true)},
        |sfa AS (
-       |  SELECT vec_id, e, ci,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY dist, ci) AS rk
-       |  FROM (SELECT s.vec_id, s.e, c.ci, ${dist("s.e", "c.cv")} AS dist
-       |        FROM emb s CROSS JOIN scent$iters c)),
+       |  ${nearestCentroid("emb", "scent3")}),
        |sasg AS MATERIALIZED (SELECT vec_id, e, ci FROM sfa WHERE rk = 1),
        |spairs AS MATERIALIZED (
        |  SELECT a.vec_id AS id1, b.vec_id AS id2,
@@ -7691,32 +7190,13 @@ object SparkEntry {
        |    (sqrt(list_sum(list_transform(a.e, x -> x*x))) *
        |     sqrt(list_sum(list_transform(b.e, x -> x*x)))) AS c
        |  FROM sasg a JOIN sasg b ON a.ci = b.ci AND a.vec_id < b.vec_id)""".stripMargin
-  }
 
   /** The incremental-SemDeDup replay: Lloyd trained on the CORPUS split
     * (`vec_id % 10 <> 0`, ordered sample), then batch AND corpus both
     * assigned against the final centroids, pairs = batch × corpus
     * within a shared cluster. Same tie rules as the Spark side
     * (first-min argmin = ORDER BY dist, ci). */
-  private val semDedupIncOracleCtes: String = {
-    val iters = 3
-    def dist(vec: String, cent: String): String =
-      s"list_sum(list_transform(list_zip($vec, $cent), z -> (z[1]-z[2])*(z[1]-z[2])))"
-    val iterCtes = (1 to iters).map { i =>
-      s"""ia$i AS (
-         |  SELECT vec_id, e, ci,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY dist, ci) AS rk
-         |  FROM (SELECT s.vec_id, s.e, c.ci, ${dist("s.e", "c.cv")} AS dist
-         |        FROM isample s CROSS JOIN icent${i - 1} c)),
-         |im$i AS (
-         |  SELECT ci, list_transform(range(0, 64), d ->
-         |      list_sum(list_transform(vecs, v -> v[d+1])) / cnt) AS cv
-         |  FROM (SELECT ci, list(e ORDER BY vec_id) AS vecs, count(*) AS cnt
-         |        FROM ia$i WHERE rk = 1 GROUP BY ci)),
-         |icent$i AS MATERIALIZED (
-         |  SELECT p.ci, COALESCE(m.cv, p.cv) AS cv
-         |  FROM icent${i - 1} p LEFT JOIN im$i m ON m.ci = p.ci)""".stripMargin
-    }.mkString(",\n")
+  private val semDedupIncOracleCtes: String =
     // icent$i is referenced twice per level and the final icent by both
     // assignment passes; icasg/ibasg each feed two consumers in
     // ivf_maintenance — MATERIALIZED keeps the replay linear
@@ -7727,61 +7207,31 @@ object SparkEntry {
        |isample AS (SELECT vec_id, e FROM icorp ORDER BY vec_id LIMIT 2000),
        |icent0 AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci, e AS cv
        |           FROM isample ORDER BY vec_id LIMIT 64),
-       |$iterCtes,
-       |icasg AS MATERIALIZED (
-       |  SELECT vec_id, e, ci FROM (
-       |    SELECT s.vec_id, s.e, c.ci,
-       |      row_number() OVER (PARTITION BY s.vec_id
-       |        ORDER BY ${dist("s.e", "c.cv")}, c.ci) AS rk
-       |    FROM icorp s CROSS JOIN icent$iters c) WHERE rk = 1),
-       |ibasg AS MATERIALIZED (
-       |  SELECT vec_id, e, ci FROM (
-       |    SELECT s.vec_id, s.e, c.ci,
-       |      row_number() OVER (PARTITION BY s.vec_id
-       |        ORDER BY ${dist("s.e", "c.cv")}, c.ci) AS rk
-       |    FROM ibat s CROSS JOIN icent$iters c) WHERE rk = 1),
+       |${lloydRounds("i", "", "isample", iters = 3, dim = 64, materialized = true)},
+       |icasg AS MATERIALIZED (SELECT vec_id, e, ci FROM (
+       |  ${nearestCentroid("icorp", "icent3")}) WHERE rk = 1),
+       |ibasg AS MATERIALIZED (SELECT vec_id, e, ci FROM (
+       |  ${nearestCentroid("ibat", "icent3")}) WHERE rk = 1),
        |ipairs AS (
        |  SELECT b.vec_id AS new_id, a.vec_id AS corpus_id,
        |    list_sum(list_transform(list_zip(b.e, a.e), p -> p[1]*p[2])) /
        |    (sqrt(list_sum(list_transform(b.e, x -> x*x))) *
        |     sqrt(list_sum(list_transform(a.e, x -> x*x)))) AS c
        |  FROM ibasg b JOIN icasg a ON b.ci = a.ci)""".stripMargin
-  }
 
-  private val ivfOracleSql: String = {
-    val iters = 3
-    def dist(vec: String, cent: String): String =
-      s"list_sum(list_transform(list_zip($vec, $cent), z -> (z[1]-z[2])*(z[1]-z[2])))"
-    val iterCtes = (1 to iters).map { i =>
-      s"""a$i AS (
-         |  SELECT vec_id, e, ci,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY dist, ci) AS rk
-         |  FROM (SELECT s.vec_id, s.e, c.ci, ${dist("s.e", "c.cv")} AS dist
-         |        FROM sample s CROSS JOIN cent${i - 1} c)),
-         |m$i AS (
-         |  SELECT ci, list_transform(range(0, 64), d ->
-         |      list_sum(list_transform(vecs, v -> v[d+1])) / cnt) AS cv
-         |  FROM (SELECT ci, list(e ORDER BY vec_id) AS vecs, count(*) AS cnt
-         |        FROM a$i WHERE rk = 1 GROUP BY ci)),
-         |cent$i AS (
-         |  SELECT p.ci, COALESCE(m.cv, p.cv) AS cv
-         |  FROM cent${i - 1} p LEFT JOIN m$i m ON m.ci = p.ci)""".stripMargin
-    }.mkString(",\n")
+  private val ivfOracleSql: String =
     s"""WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
        |q AS (SELECT e AS qv FROM emb WHERE vec_id = 0),
        |sample AS (SELECT vec_id, e FROM emb WHERE vec_id <> 0
        |           ORDER BY vec_id LIMIT 2000),
        |cent0 AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci, e AS cv
        |          FROM sample ORDER BY vec_id LIMIT 8),
-       |$iterCtes,
+       |${lloydRounds("", "", "sample", iters = 3, dim = 64)},
        |probes AS (
-       |  SELECT c.ci FROM cent$iters c, q
-       |  ORDER BY ${dist("c.cv", "q.qv")}, c.ci LIMIT 4),
+       |  SELECT c.ci FROM cent3 c, q
+       |  ORDER BY ${l2Sql("c.cv", "q.qv")}, c.ci LIMIT 4),
        |fa AS (
-       |  SELECT vec_id, e, ci,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY dist, ci) AS rk
-       |  FROM (SELECT s.vec_id, s.e, c.ci, ${dist("s.e", "c.cv")} AS dist
-       |        FROM emb s CROSS JOIN cent$iters c WHERE s.vec_id <> 0)),
+       |  ${nearestCentroid("emb", "cent3", where = " WHERE s.vec_id <> 0")}),
        |kept AS (SELECT vec_id, e FROM fa
        |         WHERE rk = 1 AND ci IN (SELECT ci FROM probes)),
        |scored AS (
@@ -7792,7 +7242,6 @@ object SparkEntry {
        |  FROM kept k, q)
        |SELECT vec_id, round(cosine, 6) AS cos FROM scored
        |ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin
-  }
 
   /** Unrolled per-subspace Lloyd + ADC CTEs mirroring
     * [[Similarity.trainPq]] / [[Similarity.pqTopK]]: m=4 subspaces of
@@ -7801,36 +7250,16 @@ object SparkEntry {
     * (exactly the Spark side's ordering). */
   private val pqOracleSql: String = {
     val m = 4; val iters = 2; val dsub = 16; val k = 8
-    def dist(a: String, b: String): String =
-      s"list_sum(list_transform(list_zip($a, $b), z -> (z[1]-z[2])*(z[1]-z[2])))"
     val subCtes = (0 until m).map { sub =>
       val lo = sub * dsub + 1; val hi = (sub + 1) * dsub
-      val iterCtes = (1 to iters).map { i =>
-        s"""a${i}_$sub AS (
-           |  SELECT vec_id, e, ci,
-           |    row_number() OVER (PARTITION BY vec_id ORDER BY dist, ci) AS rk
-           |  FROM (SELECT s.vec_id, s.e, c.ci, ${dist("s.e", "c.cv")} AS dist
-           |        FROM sample_$sub s CROSS JOIN cent${i - 1}_$sub c)),
-           |m${i}_$sub AS (
-           |  SELECT ci, list_transform(range(0, $dsub), d ->
-           |      list_sum(list_transform(vecs, v -> v[d+1])) / cnt) AS cv
-           |  FROM (SELECT ci, list(e ORDER BY vec_id) AS vecs, count(*) AS cnt
-           |        FROM a${i}_$sub WHERE rk = 1 GROUP BY ci)),
-           |cent${i}_$sub AS (
-           |  SELECT p.ci, COALESCE(mm.cv, p.cv) AS cv
-           |  FROM cent${i - 1}_$sub p LEFT JOIN m${i}_$sub mm ON mm.ci = p.ci)""".stripMargin
-      }.mkString(",\n")
       s"""sample_$sub AS (SELECT vec_id, e[$lo:$hi] AS e FROM sample),
          |cent0_$sub AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci, e AS cv
          |               FROM sample_$sub ORDER BY vec_id LIMIT $k),
-         |$iterCtes,
+         |${lloydRounds("", s"_$sub", s"sample_$sub", iters, dsub)},
          |fa_$sub AS (
-         |  SELECT vec_id, ci,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY dist, ci) AS rk
-         |  FROM (SELECT s.vec_id, c.ci, ${dist(s"s.e[$lo:$hi]", "c.cv")} AS dist
-         |        FROM emb s CROSS JOIN cent${iters}_$sub c WHERE s.vec_id <> 0)),
+         |  ${nearestCentroid("emb", s"cent${iters}_$sub", s"s.e[$lo:$hi]", " WHERE s.vec_id <> 0")}),
          |code_$sub AS (SELECT vec_id, ci FROM fa_$sub WHERE rk = 1),
-         |tbl_$sub AS (SELECT c.ci, ${dist(s"q.qv[$lo:$hi]", "c.cv")} AS d
+         |tbl_$sub AS (SELECT c.ci, ${l2Sql(s"q.qv[$lo:$hi]", "c.cv")} AS d
          |             FROM cent${iters}_$sub c, q)""".stripMargin
     }.mkString(",\n")
     val joins = (0 until m).map(sub =>
@@ -7849,17 +7278,49 @@ object SparkEntry {
        |ORDER BY adist, e.vec_id LIMIT 10""".stripMargin
   }
 
-  /** Portable universal-hash minhash CTEs mirroring
-    * [[Dedup.minhashLshPairsPortable]] (constants shared via
-    * [[Dedup.uhA]]/[[Dedup.uhB]]). */
-  /** dHash CTEs mirroring [[graft.functions.ImageCodec.dhashInternal]]
-    * over [[graft.functions.ImageSynthPng]] images with text length
-    * `doc_id % 4 + 15`: re-derive dims, enumerate the affine pixels,
-    * average-pool into the 8×9 grid (integer `//`), compare adjacent
-    * cells by cross-multiplication, rebuild the signed 64-bit hash
-    * (bit 63 folded in via BIGINT wrap-around, no HUGEINT shifts). */
-  private def dhashCtes(sidExpr: String, where: String = ""): String =
-    s"""d AS (SELECT doc_id, $sidExpr AS sid, doc_id % 4 + 15 AS n
+  /** Squared L2 distance between two DOUBLE[] expressions. */
+  private def l2Sql(a: String, b: String): String =
+    s"list_sum(list_transform(list_zip($a, $b), z -> (z[1]-z[2])*(z[1]-z[2])))"
+
+  /** Every `vecs` row (vec_id, e) against every `cents` centroid (ci,
+    * cv) by squared L2 distance of `vec` (default: the whole vector):
+    * (vec_id, e, ci, rk), rk = 1 at the nearest centroid, ties to the
+    * smallest ci (the Spark side's first-min argmin). */
+  private def nearestCentroid(vecs: String, cents: String, vec: String = "s.e",
+      where: String = ""): String =
+    s"""SELECT vec_id, e, ci,
+       |    row_number() OVER (PARTITION BY vec_id ORDER BY dist, ci) AS rk
+       |  FROM (SELECT s.vec_id, s.e, c.ci, ${l2Sql(vec, "c.cv")} AS dist
+       |        FROM $vecs s CROSS JOIN $cents c$where)""".stripMargin
+
+  /** Unrolled Lloyd rounds mirroring [[Similarity.trainCentroids]]
+    * (ordered sample, first-k init, first-min tie-break, per-dim mean
+    * in sample order): round i assigns every `sample` vector to its
+    * nearest round-(i-1) centroid, averages each cluster's `dim`-d
+    * vectors in vec_id order, and keeps an empty cluster's centroid.
+    * Round i's CTEs are `p` + `a`/`m`/`cent` + i + `x` (`sa1`,
+    * `cent2_3`); the round-0 centroids are the caller's. */
+  private def lloydRounds(p: String, x: String, sample: String, iters: Int, dim: Int,
+      materialized: Boolean = false): String =
+    (1 to iters).map { i =>
+      s"""${p}a$i$x AS (
+         |  ${nearestCentroid(sample, s"${p}cent${i - 1}$x")}),
+         |${p}m$i$x AS (
+         |  SELECT ci, list_transform(range(0, $dim), d ->
+         |      list_sum(list_transform(vecs, v -> v[d+1])) / cnt) AS cv
+         |  FROM (SELECT ci, list(e ORDER BY vec_id) AS vecs, count(*) AS cnt
+         |        FROM ${p}a$i$x WHERE rk = 1 GROUP BY ci)),
+         |${p}cent$i$x AS ${if (materialized) "MATERIALIZED " else ""}(
+         |  SELECT p.ci, COALESCE(m.cv, p.cv) AS cv
+         |  FROM ${p}cent${i - 1}$x p LEFT JOIN ${p}m$i$x m ON m.ci = p.ci)""".stripMargin
+    }.mkString(",\n")
+
+  /** The dHash/pHash oracles' input: [[graft.functions.ImageSynthPng]]
+    * images with text length `doc_id % 4 + lenBase` and synth id
+    * `sidExpr`, re-derived as dims and the affine grayscale pixels
+    * `px` (doc_id, w, h, y, x, g). */
+  private def synthGrayPxCtes(sidExpr: String, lenBase: Int, where: String): String =
+    s"""d AS (SELECT doc_id, $sidExpr AS sid, doc_id % 4 + $lenBase AS n
        |  FROM documents$where),
        |dims AS (SELECT doc_id, sid, n % 29 + 4 AS w, n % 19 + 3 AS h FROM d),
        |px AS (SELECT doc_id, w, h, y.r AS y, x.r AS x,
@@ -7869,7 +7330,16 @@ object SparkEntry {
        |           + ((x.r*5 + y.r*7 + sid*2) % 256)
        |           + ((x.r*7 + y.r*9 + sid*3) % 256) END AS g
        |  FROM dims, range(32) x(r), range(24) y(r)
-       |  WHERE x.r < w AND y.r < h),
+       |  WHERE x.r < w AND y.r < h)""".stripMargin
+
+  /** dHash CTEs mirroring [[ImageCodec.dhashInternal]]
+    * over [[graft.functions.ImageSynthPng]] images with text length
+    * `doc_id % 4 + 15`: re-derive dims, enumerate the affine pixels,
+    * average-pool into the 8×9 grid (integer `//`), compare adjacent
+    * cells by cross-multiplication, rebuild the signed 64-bit hash
+    * (bit 63 folded in via BIGINT wrap-around, no HUGEINT shifts). */
+  private def dhashCtes(sidExpr: String, where: String = ""): String =
+    s"""${synthGrayPxCtes(sidExpr, 15, where)},
        |cells AS (SELECT doc_id, (y*8)//h AS cy, (x*9)//w AS cx,
        |    sum(g) AS s, count(*) AS cnt
        |  FROM px GROUP BY 1, 2, 3),
@@ -7886,7 +7356,7 @@ object SparkEntry {
        |      max(CASE WHEN cy*8 + cx = 63 THEN bit ELSE 0 END) AS top
        |    FROM bits GROUP BY 1))""".stripMargin
 
-  /** pHash CTEs mirroring [[graft.functions.ImageCodec.phashInternal]]
+  /** pHash CTEs mirroring [[ImageCodec.phashInternal]]
     * over [[graft.functions.ImageSynthPng]] images with text length
     * `doc_id % 4 + 24` (w ≥ 28, h ≥ 8 — always clears the 16×8 grid):
     * re-derive dims, enumerate the affine pixels, average-pool into
@@ -7896,22 +7366,11 @@ object SparkEntry {
     * a libm cos() difference can never flip a bit), threshold each AC
     * coefficient against the rank-32 AC value, signed 64-bit fold. */
   private def phashCtes(sidExpr: String, where: String = ""): String = {
-    import graft.functions.ImageCodec
     val cosx = (for (x <- 0 until ImageCodec.PHASH_W; u <- 0 until 8)
       yield s"($x,$u,${ImageCodec.phashCosX(x)(u)})").mkString(",")
     val cosy = (for (y <- 0 until ImageCodec.PHASH_H; v <- 0 until 8)
       yield s"($y,$v,${ImageCodec.phashCosY(y)(v)})").mkString(",")
-    s"""d AS (SELECT doc_id, $sidExpr AS sid, doc_id % 4 + 24 AS n
-       |  FROM documents$where),
-       |dims AS (SELECT doc_id, sid, n % 29 + 4 AS w, n % 19 + 3 AS h FROM d),
-       |px AS (SELECT doc_id, w, h, y.r AS y, x.r AS x,
-       |    CASE WHEN sid % 4 IN (0, 2)
-       |      THEN 3 * ((x.r*3 + y.r*5 + sid) % 256)
-       |      ELSE ((x.r*3 + y.r*5 + sid) % 256)
-       |           + ((x.r*5 + y.r*7 + sid*2) % 256)
-       |           + ((x.r*7 + y.r*9 + sid*3) % 256) END AS g
-       |  FROM dims, range(32) x(r), range(24) y(r)
-       |  WHERE x.r < w AND y.r < h),
+    s"""${synthGrayPxCtes(sidExpr, 24, where)},
        |cells AS (SELECT doc_id, (y*8)//h AS cy, (x*16)//w AS cx,
        |    (sum(g) * 64) // count(*) AS gv
        |  FROM px GROUP BY 1, 2, 3),
@@ -7941,8 +7400,8 @@ object SparkEntry {
   }
 
   /** The CCITT G.711 expansion as SQL over a code expression `c`,
-    * branching on a boolean `ulaw` column — lifted verbatim from the
-    * long-green `mm_audio_g711` oracle. */
+    * branching on a boolean `ulaw` column — shared by the
+    * `mm_audio_g711` oracle and [[audioFpCtes]]. */
   private def g711ExpandSql(c: String): String =
     s"""CASE WHEN ulaw THEN
        |  CASE WHEN ((255 - $c) & 128) <> 0
@@ -7998,6 +7457,9 @@ object SparkEntry {
        |      max(CASE WHEN p = 63 THEN bit ELSE 0 END) AS top
        |    FROM fbits GROUP BY 1))""".stripMargin
 
+  /** Portable universal-hash minhash CTEs mirroring
+    * [[Dedup.minhashLshPairsPortable]] (constants shared via
+    * [[Dedup.uhA]]/[[Dedup.uhB]]). */
   private def minhashCtes(numHashes: Int, bands: Int,
       where: String = ""): String = {
     val rowsPer = numHashes / bands

@@ -5,11 +5,12 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Relational
 
-/** Catalog layer (SURVEY.md §2.1 S1-S4): ERDDAP's `allDatasets.json`
-  * shape — `{"table": {"columnNames": [...], "rows": [[...], ...]}}` —
-  * parsed into a DataFrame, with the reference's case-insensitive
-  * column resolution (`erddap_wrangler.py:275-281`) and row filters
-  * (self-row, missing-protocol; `erddap_wrangler.py:306-313`).
+/** Catalog layer (SURVEY.md §2.1): ERDDAP's `allDatasets.json` shape —
+  * `{"table": {"columnNames": [...], "rows": [[...], ...]}}` — parsed
+  * into a DataFrame, with the reference's case-insensitive column
+  * resolution (`erddap_wrangler.py:275-281`). The S2-S4 scan, search and
+  * recency filters are [[Relational.catalogScan]],
+  * [[Relational.textSearch]] and [[Relational.recentWindow]].
   *
   * Scale note: catalogs are small (10³-10⁴ rows per server); they load
   * once, live broadcast, and join against control tables broadcast-side.
@@ -33,30 +34,6 @@ object Catalog {
   /** Case-insensitive column lookup: returns the actual column name. */
   def resolve(df: DataFrame, name: String): Option[String] =
     df.columns.find(_.equalsIgnoreCase(name))
-
-  /** S2 catalog scan: drop the `allDatasets` self-row and rows whose
-    * protocol access URL is empty. Column names resolved
-    * case-insensitively. */
-  def scan(df: DataFrame, protocol: String): DataFrame = {
-    val idCol = resolve(df, "datasetID").getOrElse("datasetID")
-    val protoCol = resolve(df, protocol).getOrElse(protocol)
-    Relational.catalogScan(df, idCol, protoCol)
-  }
-
-  /** S3 full-text search on the title column. */
-  def search(df: DataFrame, term: String): DataFrame =
-    Relational.textSearch(df, resolve(df, "title").getOrElse("title"), term)
-
-  /** S4 NRT recency filter: datasets whose maxTime is within the
-    * trailing `days` window of the newest dataset in the catalog.
-    * Catalog min/maxTime may be EMPTY strings (FIXTURES.md §1) — ANSI
-    * cast would throw, so try_to_timestamp maps them to null and the
-    * window filter drops them. */
-  def recent(df: DataFrame, days: Int = 7): DataFrame = {
-    val maxTimeCol = resolve(df, "maxTime").getOrElse("maxTime")
-    val parsed = df.withColumn("_maxTs", try_to_timestamp(col(maxTimeCol)))
-    Relational.recentWindow(parsed, "_maxTs", days).drop("_maxTs")
-  }
 
   /** J1 date-cache restore: re-attach authoritative (minTime, maxTime)
     * per datasetID after a search narrowed the id list. */

@@ -1617,8 +1617,8 @@ object TextAnalysis {
     * maintenance, not 32k sequential Spark jobs of scheduler latency.
     * `maxWords` fail-fasts (clear error, no OOM) if the distinct-word
     * table exceeds the driver budget; raise it, or pre-aggregate the
-    * vocabulary. Bit-identical to [[trainBpeMergesSparkLoop]] (the
-    * all-cluster twin kept for parity auditing). Returns
+    * vocabulary. A parity spec pins it bit-identical to a one-Spark-job-
+    * per-round twin kept in test sources (`BpeSparkLoop`). Returns
     * (rank, lhs, rhs, merged, pair_count), rank 1..numMerges (stops
     * early when no pair repeats `minPairCount` times). */
   def trainBpeMerges(df: DataFrame, textCol: String,
@@ -1643,8 +1643,8 @@ object TextAnalysis {
     * Greedy left-to-right non-overlapping merge (`aaa` → `[aa, a]`;
     * `abab` merges BOTH `ab`s), most-frequent pair first, ties to the
     * lexicographically smallest (l, r) — exactly the semantics of the
-    * marker-string `replace` in [[trainBpeMergesSparkLoop]], pinned by
-    * a parity spec. Pair counts are maintained INCREMENTALLY: each
+    * marker-string `replace` of the test-source Spark-loop twin, pinned
+    * by a parity spec. Pair counts are maintained INCREMENTALLY: each
     * round re-derives only the words that contain the winning pair
     * (via a pair→words index), so cost per round is the total length
     * of affected words, not the vocabulary. */
@@ -1715,58 +1715,6 @@ object TextAnalysis {
       }
     }
     merges.toSeq
-  }
-
-  /** The all-Spark twin of [[trainBpeMerges]]: one driver-synchronized
-    * Spark job PER MERGE ROUND (two vocab-sized aggregates + a
-    * codegen'd replace projection). Kept as the parity oracle for the
-    * driver-side loop and for clusters where even the distinct-word
-    * table must not be collected. */
-  private[graft] def trainBpeMergesSparkLoop(df: DataFrame, textCol: String,
-      numMerges: Int = 10, minPairCount: Long = 2): DataFrame = {
-    require(numMerges > 0, "numMerges must be positive")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val words = df.select(explode(normalizedTokens(col(textCol))).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-    // initial state: every character wrapped in its own |markers|
-    var states = words.select(
-      concat(lit("|"), array_join(split(col("w"), ""), "||"), lit("|")).as("state"),
-      col("cnt"))
-      .localCheckpoint() // each round builds on the last — cut lineage
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
-    var rank = 1
-    var done = false
-    while (rank <= numMerges && !done) {
-      val syms = expr("split(trim(BOTH '|' FROM state), '\\\\|\\\\|')")
-      val nPairs = greatest(size(syms) - 1, lit(0))
-      val pairs = states.select(col("cnt"),
-          explode(zip_with(slice(syms, lit(1), nPairs),
-            slice(syms, lit(2), nPairs),
-            (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("cnt")).as("pc"))
-        .orderBy(col("pc").desc, col("l"), col("r"))
-        .limit(1).collect()
-      if (pairs.isEmpty || pairs.head.getAs[Long]("pc") < minPairCount) done = true
-      else {
-        val (l, r, pc) = (pairs.head.getAs[String]("l"),
-          pairs.head.getAs[String]("r"), pairs.head.getAs[Long]("pc"))
-        merges += ((rank.toLong, l, r, l + r, pc))
-        // tokens are alnum-only (normalizedTokens), so the interpolated
-        // literals cannot contain quotes or markers
-        val prev = states
-        states = states.select(
-          expr(s"replace(state, '|$l||$r|', '|$l$r|')").as("state"),
-          col("cnt"))
-          .localCheckpoint() // eager: materialized before prev is dropped
-        Snapshots.release(prev)
-        rank += 1
-      }
-    }
-    Snapshots.release(states)
-    merges.toSeq.toDF("rank", "lhs", "rhs", "merged", "pair_count")
   }
 
   /** BPE ENCODE state for a whole document: the normalized text with

@@ -145,26 +145,9 @@ class Portal(root: String) {
     restored
   }
 
-  /** Overwrite refusal tiers (`OverwriteFS.py:2093-2106`): a service
-    * whose manager reports a change-tracking-enabled dependent view, or
-    * with a dependent WFS service among its Service2Service relations,
-    * must NOT be overwritten — the reference fails verify with these
-    * exact outcomes rather than risking dependent-service corruption. */
-  def verifyOverwrite(item: Item): Unit = {
-    val live = items(item.id)
-    if (live.serviceProps.get("hasChangeTrackingEnabledViews").contains("true"))
-      throw new IllegalStateException(
-        "Overwrite on Service is NOT allowed, a dependent View or Service " +
-          "has Change Tracking Enabled!")
-    val wfsDependent = related.getOrElse(item.id, Nil)
-      .flatMap(items.get).find(_.itemType == "WFS")
-    if (wfsDependent.isDefined)
-      throw new IllegalStateException(
-        "Overwrite on Service is NOT allowed, a dependent WFS Service exists!")
-  }
-
   /** K8 — overwrite with property transactionality: verify refusal
-    * tiers → backup → replace data → restore. Unchanged-data
+    * tiers (the seam's [[PortalTransport.verifyOverwrite]], over this
+    * model) → backup → replace data → restore. Unchanged-data
     * short-circuit belongs to the caller (Nrt.tableFingerprint).
     *
     * GeoPackage tier (`OverwriteFS.py:2481-2493`): when the service's
@@ -175,7 +158,7 @@ class Portal(root: String) {
     * `publish(overwrite=True, file_type)`), under the SAME
     * backup/restore envelope. */
   def overwrite(item: Item, fresh: DataFrame): Item = {
-    verifyOverwrite(item)
+    PortalTransport.verifyOverwrite(new LocalPortalTransport(this, root), item.id)
     val backup = backupProperties(items(item.id))
     relatedItems(item).find(_.itemType == "GeoPackage") match {
       case Some(dataItem) =>

@@ -491,7 +491,7 @@ class TextPipelineSpec extends AnyFunSuite {
     for (nm <- Seq(1, 4, 12, 40); mpc <- Seq(1L, 2L, 3L)) {
       val local = TextAnalysis.trainBpeMerges(docs, "text", numMerges = nm,
         minPairCount = mpc).orderBy("rank").collect().map(_.toSeq).toSeq
-      val sparkLoop = TextAnalysis.trainBpeMergesSparkLoop(docs, "text",
+      val sparkLoop = BpeSparkLoop.trainBpeMerges(docs, "text",
         numMerges = nm, minPairCount = mpc)
         .orderBy("rank").collect().map(_.toSeq).toSeq
       assert(local == sparkLoop, s"numMerges=$nm minPairCount=$mpc")
