@@ -39,6 +39,9 @@ class FakeAgolServer(val portal: Portal, val user: String, val pass: String,
     * data-plane work already happened. */
   @volatile var failNextPropsUpdate = false
 
+  /** `generateToken` requests received, valid credentials or not. */
+  val tokenRequests = new java.util.concurrent.atomic.AtomicInteger()
+
   // com.sun.net.httpserver leaves Nagle ON by default; with the
   // client's small POST bodies that interacts with Linux delayed ACKs
   // into a ~40 ms stall PER REQUEST (measured: the REST lifecycle gate
@@ -85,6 +88,7 @@ class FakeAgolServer(val portal: Portal, val user: String, val pass: String,
     else ok
 
   srv.createContext("/sharing/rest/generateToken", (ex: HttpExchange) => {
+    tokenRequests.incrementAndGet()
     val p = params(ex)
     if (p.get("username").contains(user) && p.get("password").contains(pass))
       reply(ex, s"""{"token":${jstr(currentToken)},"expires":9999999999}""")

@@ -67,6 +67,11 @@ class PortalDataSource extends TableProvider with DataSourceRegister {
 }
 
 object PortalDataSource {
+  /** Delete `p` and everything under it, if it exists. */
+  private[graft] def deleteRecursively(p: Path): Unit =
+    if (Files.exists(p))
+      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+
   /** The stored `fingerprint` property from three commutative moments
     * of a row-hash multiset — XOR, wrapping SUM and COUNT — each
     * murmur3-fmix64 avalanche-mixed before combining. Shared by this
@@ -446,6 +451,7 @@ case class PortalCommitMessage(path: String, rows: Long, xor: Long,
 class PortalBatchWrite(root: String, title: String, tags: Seq[String],
     ifChanged: Boolean, schema: StructType, portalUrl: Option[String] = None,
     username: String = "", password: String = "") extends BatchWrite {
+  import PortalDataSource.deleteRecursively
 
   private val stagingDir = s"$root/.staging-${UUID.randomUUID()}"
 
@@ -512,10 +518,6 @@ class PortalBatchWrite(root: String, title: String, tags: Seq[String],
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     deleteRecursively(Path.of(stagingDir))
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
 }
 
 class PortalWriterFactory(stagingDir: String, schema: StructType)

@@ -36,7 +36,8 @@ class PortalRestClient(root: String, username: String, password: String,
   private val client = HttpClient.newBuilder()
     .connectTimeout(Duration.ofSeconds(connectTimeoutSec)).build()
 
-  private var token: Option[String] = None
+  @volatile private var token: Option[String] = None
+  private val mintLock = new Object
 
   private def enc(s: String): String =
     java.net.URLEncoder.encode(s, StandardCharsets.UTF_8)
@@ -66,13 +67,23 @@ class PortalRestClient(root: String, username: String, password: String,
     t
   }
 
+  /** A token to use after `failed` (None: there was none yet), minted
+    * single-flight: callers that saw the same token fail wait on one
+    * login, and a caller that finds a newer token takes it unminted. */
+  private def mint(failed: Option[String]): String = mintLock.synchronized {
+    token match {
+      case Some(t) if !failed.contains(t) => t
+      case _ => generateToken()
+    }
+  }
+
   private def withToken[A](call: String => JsonNode): JsonNode = {
-    val t = token.getOrElse(generateToken())
+    val t = token.getOrElse(mint(None))
     val node = call(t)
     if (node.has("error") &&
         Set(498, 499).contains(node.get("error").path("code").asInt())) {
       // expired/invalid token → re-login once, like the SDK session
-      call(generateToken())
+      call(mint(Some(t)))
     } else node
   }
 

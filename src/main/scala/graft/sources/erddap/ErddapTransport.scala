@@ -73,18 +73,15 @@ class HttpErddapTransport(
 
   private val root = base.stripSuffix("/")
 
-  // HttpClient is not serializable; rebuilt lazily per executor.
-  @transient private lazy val client: HttpClient = HttpClient.newBuilder()
-    .connectTimeout(Duration.ofSeconds(connectTimeoutSec))
-    .followRedirects(HttpClient.Redirect.NORMAL)
-    .build()
-
   private def rebase(compiledUrl: String, kind: String): URI = {
     val tail = compiledUrl.substring(compiledUrl.lastIndexOf('/') + 1)
     URI.create(s"$root/$kind/$tail")
   }
 
-  private def getBytes(uri: URI): Array[Byte] = {
+  private def getBytes(uri: URI): Array[Byte] =
+    HttpErddapTransport.withClient(root, connectTimeoutSec)(getBytes(_, uri))
+
+  private def getBytes(client: HttpClient, uri: URI): Array[Byte] = {
     var attempt = 0
     var last: Exception = null
     while (attempt < retries) {
@@ -183,4 +180,42 @@ class HttpErddapTransport(
 
   override def sizeInBytes(datasetId: String, rowCount: Long): Long =
     rowCount * 64 // ~64 B/row: order-of-magnitude for planning
+}
+
+object HttpErddapTransport {
+  private val MaxEndpoints = 16
+
+  /** (endpoint root, connect timeout) → its idle client, least recently
+    * used first; the oldest is dropped past [[MaxEndpoints]]. */
+  private val idle =
+    new java.util.LinkedHashMap[(String, Long), HttpClient](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, Long), HttpClient]): Boolean =
+        size() > MaxEndpoints
+    }
+
+  /** `f` over a client of the endpoint: its idle client, else a new one,
+    * which afterwards becomes the endpoint's idle client unless another
+    * already is. Requests one after another — the DAS and size probes,
+    * the scan, each partition reader, the griddap probes and slices —
+    * so share one client and its keep-alive connection, where a client
+    * per transport opened a connection per request. Requests that
+    * overlap get a client each and keep at most one: a client lent to
+    * one request at a time holds one connection, and a server may keep
+    * a buffer per open connection (the JDK's HTTP server keeps one as
+    * large as the connection's largest response), so pooling every
+    * overlapping scan's connections would hold that memory for as long
+    * as the client lives. A dropped client's connection closes when it
+    * is collected. */
+  private[erddap] def withClient[A](root: String, connectTimeoutSec: Long)(
+      f: HttpClient => A): A = {
+    val key = (root, connectTimeoutSec)
+    val client = Option(idle.synchronized(idle.remove(key))).getOrElse(
+      HttpClient.newBuilder()
+        .connectTimeout(Duration.ofSeconds(connectTimeoutSec))
+        .followRedirects(HttpClient.Redirect.NORMAL)
+        .build())
+    try f(client)
+    finally idle.synchronized(idle.putIfAbsent(key, client))
+  }
 }

@@ -127,4 +127,24 @@ class PortalRestSpec extends AnyFunSuite with BeforeAndAfterAll {
       java.net.http.HttpResponse.BodyHandlers.ofString()).body()
     assert(raw.contains("\"code\":499"))
   }
+
+  test("4 concurrent callers on an expired token send exactly one generateToken") {
+    val c = client()
+    val id = portal.addOrRetry("Concurrent", "CSV", Seq("tconc"), Map()).id
+    c.generateToken()
+    server.currentToken = tokenValue + "-rotated" // the client's token expired
+    val before = server.tokenRequests.get
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val calls = (1 to 4).map(_ => pool.submit(
+        new java.util.concurrent.Callable[Map[String, String]] {
+          def call(): Map[String, String] = { start.await(); c.itemProps(id) }
+        }))
+      start.countDown()
+      // itemProps throws on an error body, so each call was answered
+      calls.foreach(_.get(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally { pool.shutdown(); server.currentToken = tokenValue }
+    assert(server.tokenRequests.get - before == 1)
+  }
 }

@@ -361,4 +361,65 @@ class HttpTransportSpec extends AnyFunSuite {
         "&time%3E%3D2024-06-01T00:00:00Z&time%3C%3D2024-06-01T02:00:00Z")
     assert(lines.length == 4) // header + 3 rows
   }
+
+  test("ten sequential reads through new transports share one connection") {
+    val peers = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    server.createContext("/pooled/tabledap/", (ex: HttpExchange) => {
+      peers.add(ex.getRemoteAddress.toString)
+      val body = "time,sst\n2024-06-01T00:00:00Z,20.0".getBytes("UTF-8")
+      ex.sendResponseHeaders(200, body.length)
+      ex.getResponseBody.write(body); ex.close()
+    })
+    // a transport per read, as the source builds one per probe and reader
+    (1 to 10).foreach { _ =>
+      val lines = ErddapTransport(s"$base/pooled").fetch("https://ignored/tabledap/x.csv?a")
+      assert(lines.length == 2)
+    }
+    assert(peers.size == 1, peers)
+  }
+
+  test("a server that closes idle keep-alive connections is answered on the first try") {
+    // raw HTTP/1.1 server: keep-alive responses, and a connection idle
+    // for 100 ms is closed by the server
+    val ss = new java.net.ServerSocket(0, 50, java.net.InetAddress.getLoopbackAddress)
+    val accepted = new java.util.concurrent.atomic.AtomicInteger()
+    val requests = new java.util.concurrent.atomic.AtomicInteger()
+    val body = "time,sst\n2024-06-01T00:00:00Z,20.0".getBytes("UTF-8")
+    def serve(sock: java.net.Socket): Unit =
+      try {
+        sock.setSoTimeout(100)
+        val in = new java.io.BufferedReader(new java.io.InputStreamReader(
+          sock.getInputStream, java.nio.charset.StandardCharsets.ISO_8859_1))
+        var line = in.readLine()
+        while (line != null) {
+          while (line != null && line.nonEmpty) line = in.readLine() // headers
+          requests.incrementAndGet()
+          val out = sock.getOutputStream
+          out.write(s"HTTP/1.1 200 OK\r\nContent-Length: ${body.length}\r\n\r\n"
+            .getBytes("ISO-8859-1"))
+          out.write(body); out.flush()
+          line = in.readLine()
+        }
+      } catch { case _: java.io.IOException => () } // idle timeout or closed
+      finally sock.close()
+    val acceptor = new Thread(() =>
+      try while (true) {
+        val sock = ss.accept()
+        accepted.incrementAndGet()
+        val t = new Thread(() => serve(sock)); t.setDaemon(true); t.start()
+      } catch { case _: java.io.IOException => () })
+    acceptor.setDaemon(true); acceptor.start()
+    try {
+      val t = new HttpErddapTransport(s"http://127.0.0.1:${ss.getLocalPort}")
+      assert(t.fetch("https://ignored/tabledap/x.csv?a").length == 2)
+      (1 to 3).foreach { _ =>
+        Thread.sleep(400) // the server has closed the idle connection
+        val t0 = System.nanoTime()
+        assert(t.fetch("https://ignored/tabledap/x.csv?a").length == 2)
+        val ms = (System.nanoTime() - t0) / 1000000
+        assert(ms < 1500, s"a read after an idle close took $ms ms (retry sleep is 2000)")
+      }
+      assert(requests.get == 4 && accepted.get == 4)
+    } finally ss.close()
+  }
 }
